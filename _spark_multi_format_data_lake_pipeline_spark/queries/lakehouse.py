@@ -2405,7 +2405,10 @@ def q276_versioned_change_feed(
         "snapshot streams as inserts, and the drained sink hash proves "
         "stream == batch feed exactly.  Planned like every other "
         "micro-batch: partitions are the commit's _change_data files, "
-        "metadata-only planning, rate caps compose. "
+        "metadata-only planning, rate caps compose.  The drain pins "
+        "engine='stream': the default (auto) change-feed drain runs "
+        "the batch slice engine, whose equality to the feed is pinned "
+        "in tests/test_streaming.py. "
         "sources/versioned_stream.py:_iter_new_files kind='cdf'; "
         "batch twin q276; contradictory-options refusal pinned in "
         "tests/test_versioned.py.",
@@ -2438,7 +2441,8 @@ def q277_versioned_stream_change_feed(
     versioned_upsert(chg, t, ["o_orderkey"])  # v3
     versioned_delete(spark, t, "o_orderkey % 7 = 0", strategy="dv")  # v4
     drain_versioned_changes(
-        spark, t, out, ckpt, extra_options={"readChangeFeed": "true"}
+        spark, t, out, ckpt, extra_options={"readChangeFeed": "true"},
+        engine="stream",
     )
     return spark.read.schema(
         "o_orderkey bigint, o_totalprice double, _change_type string, "
@@ -3456,7 +3460,7 @@ def q287_versioned_database_replication(
             .select(
                 F.lit(name).alias("tbl"),
                 F.col(kcol).alias("k"),
-                F.col(vcol).alias("val"),
+                F.col(vcol).cast("double").alias("val"),
             )
         )
     diffs = _sym_diff("ord", "o_orderkey", "o_totalprice").unionByName(
@@ -3467,7 +3471,8 @@ def q287_versioned_database_replication(
             r["tbl"] for r in diffs.select("tbl").distinct().collect()
         )
         _require(
-            False, f"mirror.{bad} must equal its source head exactly"
+            False,
+            f"mirror.{', '.join(bad)} must equal its source head exactly",
         )
     ord_rep = vc.table(spark, "mirror.ord").select(
         F.lit("ord").alias("tbl"),

@@ -104,6 +104,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 import uuid
 from pathlib import Path
 
@@ -115,6 +116,7 @@ class ConcurrentCommitError(RuntimeError):
 
 
 _SIDE_JOB_POOL = None
+_SIDE_JOB_POOL_LOCK = threading.Lock()
 
 
 def _side_job_pool():
@@ -126,14 +128,16 @@ def _side_job_pool():
     shared pool keeps the py4j-pinned JVM thread count bounded instead
     of leaking one per commit.  Two workers suffice: no commit ever has
     more than one side job in flight, and commit paths never nest pool
-    submissions (no deadlock)."""
+    submissions (no deadlock).  The lock makes the lazy creation
+    race-free: two threads committing at once share one pool."""
     global _SIDE_JOB_POOL
-    if _SIDE_JOB_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
+    with _SIDE_JOB_POOL_LOCK:
+        if _SIDE_JOB_POOL is None:
+            from concurrent.futures import ThreadPoolExecutor
 
-        _SIDE_JOB_POOL = ThreadPoolExecutor(
-            max_workers=2, thread_name_prefix="versioned-side-job"
-        )
+            _SIDE_JOB_POOL = ThreadPoolExecutor(
+                max_workers=2, thread_name_prefix="versioned-side-job"
+            )
     return _SIDE_JOB_POOL
 
 

@@ -1303,23 +1303,31 @@ def _drain_batch(
     max_bytes: int | None,
     skip_change: bool,
     max_runs: int,
+    change_feed: bool,
 ) -> int:
-    """The BATCH engine of ``drain_versioned_changes``: capped append
-    slices written to ``sink_path`` as SLICE-KEYED files through the
-    shared cursor — each slice lands under deterministic names
+    """The BATCH engine of ``drain_versioned_changes``: capped slices
+    written to ``sink_path`` as SLICE-KEYED files through the shared
+    cursor — each slice lands under deterministic names
     (``slice-v<from>-v<to>-<i>``) after deleting any same-slice
     leftovers, so a crash between write and cursor advance re-runs the
     slice into the same names and converges (idempotent), matching the
     stream engine's end-to-end exactly-once without its per-run JVM
-    startup.  ``build`` must be a stateless per-row/projection
-    transform (the same restriction foreachBatch imposes)."""
-    from pyspark.sql import functions as F
+    startup.  A slice is the commits' new APPEND files, or with
+    ``change_feed`` the ``read_change_feed`` rows of a slice planned by
+    ``_plan_feed_slice`` (replicate's planner).  ``build`` must be a
+    stateless per-row/projection transform (the same restriction
+    foreachBatch imposes).  Returns the number of slices that landed
+    rows."""
+    from functools import reduce
 
-    from ..sinks.versioned import _read_files, read_version
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from ..sinks.versioned import _read_files, read_change_feed, read_version
 
     cur_dir = Path(checkpoint) / "_vc_cursor"
 
-    def _write_slice(df, lo: int, hi: int) -> None:
+    def _write_slice(df, lo: int, hi: int) -> int:
         if build is not None:
             df = build(df)
         # leftovers clear by START version only: a crash before the
@@ -1328,7 +1336,7 @@ def _drain_batch(
         # crashed attempt's files as duplicates — any file starting at
         # lo+1 is an attempt at THIS slice (ranges partition the
         # version axis as the cursor advances)
-        _land_slice(
+        return _land_slice(
             df,
             sink_path,
             sink_format,
@@ -1336,11 +1344,12 @@ def _drain_batch(
             clear_glob=f"slice-v{lo + 1:06d}-v*",
         )
 
-    def _align(df, fields, cmap: dict, head_cmap: dict):
+    def _align(df, fields, m: dict, head_cmap: dict):
         # resolve through PHYSICAL column identity (stable across
         # renames), exactly like the streaming reader: a pre-rename
         # file's column lands under the head's logical name instead of
         # silently reading NULL
+        cmap = dict(m.get("column_mapping") or {})
         phys_to_local = {cmap.get(c, c): c for c in df.columns}
         sel = []
         for f in fields:
@@ -1359,9 +1368,7 @@ def _drain_batch(
             return runs
         tgt = vs[-1]
         cur = _cursor_read(cur_dir / "cursor.json")
-        if cur is not None and (
-            cur.get("file_index") is not None or cur.get("snapshot_start")
-        ):
+        if _is_partial(cur):
             # a capped STREAM drain left a PARTIAL offset: the sink
             # already holds part of that commit as flat stream files,
             # so a commit-granular re-delivery would duplicate rows —
@@ -1377,8 +1384,6 @@ def _drain_batch(
             return runs
         # emit every slice under the HEAD commit's visible schema (the
         # field-list vintage a fresh stream would declare)
-        from pyspark.sql.types import StructType
-
         hm = _read_manifest(path, vs[-1])
         head_cmap = dict(hm.get("column_mapping") or {})
         fields = StructType.fromJson(
@@ -1386,22 +1391,22 @@ def _drain_batch(
                 **hm["schema"],
                 "fields": _visible_fields(
                     hm["schema"], bool(hm.get("bucket_by"))
-                ),
+                )
+                + (_CDF_FIELDS if change_feed else []),
             }
         ).fields
         if lo == 0 and vs[0] > 1:
             # fresh drain of an ever-vacuumed table: the earliest
-            # surviving snapshot is the initial load
-            em = _read_manifest(path, vs[0])
-            snap = _align(
-                read_version(spark, path, vs[0]),
-                fields,
-                dict(em.get("column_mapping") or {}),
-                head_cmap,
-            )
-            _write_slice(snap, 0, vs[0])
+            # surviving snapshot is the initial load (in change-feed
+            # mode as inserts at vs[0], the stream reader's bootstrap)
+            snap = read_version(spark, path, vs[0])
+            if change_feed:
+                snap = snap.withColumn(
+                    "_change_type", F.lit("insert")
+                ).withColumn("_commit_version", F.lit(vs[0]).cast("long"))
+            snap = _align(snap, fields, _read_manifest(path, vs[0]), head_cmap)
+            runs += bool(_write_slice(snap, 0, vs[0]))
             _cursor_advance(cur_dir, vs[0])
-            runs += 1
             continue
         if 0 < lo and lo not in vs:
             # a cursor whose own manifest was vacuumed — below the
@@ -1415,27 +1420,34 @@ def _drain_batch(
                 f"{path} — the delivered prefix is unreconstructable; "
                 "restart from a fresh checkpoint"
             )
-        hi, cms = _plan_append_slice(
-            path, lo, tgt, vs, max_files, max_bytes, skip_change
-        )
-        if not cms:
-            _cursor_advance(cur_dir, hi)
-            continue
-        frames = [
-            _align(
-                _read_files(spark, path, new, m),
-                fields,
-                dict(m.get("column_mapping") or {}),
-                head_cmap,
+        if change_feed:
+            hi, n_files = _plan_feed_slice(
+                path, lo, tgt, vs, max_files, max_bytes,
+                helper="drain_versioned_changes",
             )
-            for _v, m, new in cms
-            if new
-        ]
-        from functools import reduce
-
-        _write_slice(reduce(lambda a, b: a.unionByName(b), frames), lo, hi)
+            frames = []
+            if n_files:  # 0: metadata/compact-only commits, no rows
+                frames.append(
+                    _align(
+                        read_change_feed(spark, path, lo, hi),
+                        fields,
+                        _read_manifest(path, hi),
+                        head_cmap,
+                    )
+                )
+        else:
+            hi, cms = _plan_append_slice(
+                path, lo, tgt, vs, max_files, max_bytes, skip_change
+            )
+            frames = [
+                _align(_read_files(spark, path, new, m), fields, m, head_cmap)
+                for _v, m, new in cms
+                if new
+            ]
+        if frames:
+            slice_df = reduce(lambda a, b: a.unionByName(b), frames)
+            runs += bool(_write_slice(slice_df, lo, hi))
         _cursor_advance(cur_dir, hi)
-        runs += 1
     raise RuntimeError(
         f"drain_versioned_changes: backlog at {path} not drained in "
         f"{max_runs} slices (cap too small for the commit rate?)"
@@ -1456,52 +1468,77 @@ def drain_versioned_changes(
     skip_change_commits: bool = False,
     max_runs: int = 10000,
     extra_options: dict | None = None,
-    engine: str = "stream",
+    engine: str = "auto",
 ) -> int:
-    """Drain a versioned table's FULL backlog under a rate cap in one
-    call — the semantics Delta gives ``trigger(availableNow=True)``
-    under admission control.  The Python DataSource API exposes no
-    availableNow hook (one availableNow run of a capped
-    ``versioned_changes`` stream delivers exactly ONE capped
-    micro-batch — module docstring), so the stream engine runs ONE
-    continuously-triggered micro-batch query against the checkpoint
-    and blocks until the stream has caught up to the table head
-    (``processAllAvailable``): every batch stays bounded by the cap
-    AND the call returns only when the backlog as of the run's start
-    is fully delivered — exactly-once end to end through the engine
-    checkpoint, with the same batch ids (and therefore the same
-    batch-keyed sink slice names) the pre-r16 availableNow-per-batch
-    loop produced, for one JVM query startup instead of one per batch.
+    """Drain a versioned table's FULL backlog in one call into
+    ``sink_path`` — the semantics Delta gives
+    ``trigger(availableNow=True)`` under admission control.  Every
+    slice lands under deterministic slice-keyed file names through a
+    cursor file beside ``checkpoint``, so a crash re-runs the slice
+    into the same names and converges: exactly-once end to end.  With
+    ``extra_options={"readChangeFeed": "true"}`` the sink receives the
+    change feed (``read_change_feed`` rows: table columns plus
+    ``_change_type`` and ``_commit_version``) instead of appended rows.
+    Returns the number of slices / micro-batches that landed rows.
 
-    ``build`` (optional) maps the streaming DataFrame before the sink —
-    projections/filters, same restrictions as any streaming query.
-    Returns the number of micro-batches that delivered data.  Progress
-    is detected from the run's committed end offset; a run that
-    neither delivers rows nor advances the offset while the head is
-    unreached raises instead of spinning (that state is unreachable
-    short of a concurrent vacuum breaking replay — which
-    ``partitions`` reports with its own honest error on the next run).
+    ``engine`` picks how:
 
-    ``engine="batch"`` (r16) drains the same backlog as capped APPEND
-    SLICES through the same cursor file, writing each slice to
-    ``sink_path`` under deterministic slice-keyed file names (crash →
-    same-name rewrite → converges) — no JVM streaming-query startup
-    per capped batch, for bulk backfills.  Caps close at COMMIT
-    granularity there (the streaming engine remains the sub-commit
-    splitter), ``output_mode`` must be ``append``, ``extra_options``
-    are not supported, and ``build`` must be a stateless
-    projection/filter (the foreachBatch restriction, now load-bearing).
-    The default stays ``"stream"`` — the engine-faithful
-    admission-control demonstrator; both engines share the cursor, so
-    a batch backfill can hand over to a streaming tail (the batch run
-    clears the Spark checkpoint's engine state and the stream reader
-    starts AT the cursor)."""
-    if engine not in ("stream", "batch"):
+    - ``"batch"`` — slices planned from the manifests alone
+      (``_plan_append_slice``, or ``_plan_feed_slice`` for the change
+      feed) and written by one batch job each: no streaming query and
+      no Python-worker read.  Caps close at COMMIT granularity (a
+      commit larger than the cap forms one slice), ``output_mode``
+      must be ``append``, ``readChangeFeed`` is the only reader option
+      it takes, and ``build`` must be a stateless projection/filter.
+      A fresh drain of an ever-vacuumed table first lands the earliest
+      surviving snapshot (as ``insert`` rows at that version in
+      change-feed mode), like the stream reader's bootstrap.
+    - ``"stream"`` — ONE continuously-triggered micro-batch query over
+      the ``versioned_changes`` source against the checkpoint, blocking
+      until it has caught up to the head (``processAllAvailable``).
+      Caps split a commit (sub-commit offsets), every reader option in
+      ``extra_options`` applies, and ``build`` may be any streaming
+      transform.  The Python DataSource API exposes no availableNow
+      hook (one availableNow run of a capped stream delivers ONE capped
+      micro-batch — module docstring), hence the running trigger.  A
+      run that neither delivers rows nor advances the offset while the
+      head is unreached raises instead of spinning.
+    - ``"auto"`` (default) — ``batch``, unless the call needs something
+      only the stream engine provides: a reader option other than
+      ``readChangeFeed``, an ``output_mode`` other than ``append``, a
+      per-trigger cap (only the stream engine splits a commit), a
+      ``build`` callable (the batch engine cannot prove it stateless),
+      or a partial ``file_index``/``snapshot_start`` offset left in the
+      cursor by a capped stream run.  Any of these picks ``stream``.
+
+    Both engines share the cursor, so they interleave: a batch run
+    clears the Spark checkpoint's engine state, and the next stream
+    run starts AT the cursor."""
+    if engine not in ("auto", "stream", "batch"):
         raise ValueError(
-            "drain_versioned_changes: engine must be 'stream' or "
-            f"'batch', got {engine!r}"
+            "drain_versioned_changes: engine must be one of "
+            f"auto/batch/stream, got {engine!r}"
         )
     _refuse_metadata_sink(sink_path)
+    change_feed = False
+    reader_opts = {}
+    for k, v in (extra_options or {}).items():
+        if str(k).lower() == "readchangefeed":
+            change_feed = str(v).lower() == "true"
+        else:
+            reader_opts[k] = v
+    if engine == "auto":
+        needs_stream = (
+            reader_opts
+            or output_mode != "append"
+            or max_files_per_trigger is not None
+            or max_bytes_per_trigger is not None
+            or build is not None
+            or _is_partial(
+                _cursor_read(Path(checkpoint) / "_vc_cursor" / "cursor.json")
+            )
+        )
+        engine = "stream" if needs_stream else "batch"
     if engine == "batch":
         if output_mode != "append":
             raise ValueError(
@@ -1509,10 +1546,17 @@ def drain_versioned_changes(
                 "append-mode only (stateful output modes need the "
                 "streaming engine)"
             )
-        if extra_options:
+        if reader_opts:
             raise ValueError(
-                "drain_versioned_changes: extra_options are streaming-"
-                "reader options — use engine='stream' with them"
+                "drain_versioned_changes: extra_options other than "
+                "readChangeFeed are streaming-reader options — use "
+                "engine='stream' with them"
+            )
+        if change_feed and skip_change_commits:
+            raise ValueError(
+                "drain_versioned_changes: readChangeFeed and "
+                "skip_change_commits are contradictory — one demands "
+                "row changes, the other ignores them"
             )
         runs = _drain_batch(
             spark,
@@ -1525,6 +1569,7 @@ def drain_versioned_changes(
             max_bytes=max_bytes_per_trigger,
             skip_change=skip_change_commits,
             max_runs=max_runs,
+            change_feed=change_feed,
         )
         _wipe_engine_checkpoint(checkpoint)
         return runs
@@ -1568,13 +1613,8 @@ def drain_versioned_changes(
     landed_ids: set[int] = set()
 
     def _land(batch_df, batch_id):
-        # No isEmpty() pre-flight: that was a SECOND job per batch
-        # through the Python DS read (guide §1.2 — the write itself
-        # proves emptiness: an all-empty-task parquet write lands zero
-        # part files).  Batch offsets are deterministic, so a batch
-        # that lands nothing now landed nothing in every earlier
-        # attempt too — the slice-keyed clear inside _land_slice is a
-        # no-op for it.  Counting by BATCH ID instead of a bare
+        # _land_slice returns 0 for a batch with no rows, so an empty
+        # batch is not counted.  Counting by BATCH ID instead of a bare
         # counter keeps the returned count exact when a stop() races a
         # mid-flight batch and the outer loop's next query replays it
         # (the slice rewrite is idempotent; the count must be too).
@@ -1733,6 +1773,14 @@ def _cursor_read(cur_file: Path) -> dict | None:
     return c if isinstance(c, dict) and "version" in c else None
 
 
+def _is_partial(cur: dict | None) -> bool:
+    """A cursor a capped stream run left INSIDE a commit (or inside the
+    bootstrap snapshot) — only the stream engine can resume it."""
+    return cur is not None and (
+        cur.get("file_index") is not None or bool(cur.get("snapshot_start"))
+    )
+
+
 def _cursor_advance(cur_dir: Path, off: int | dict) -> None:
     """Atomically raise the cursor to ``off`` (a plain version or a
     full offset dict) — monotone, like the floor it shares a file
@@ -1767,10 +1815,10 @@ def _land_slice(
     sink-side exactly-once without a ``_spark_metadata`` transaction
     log (whose presence makes batch reads IGNORE files the log doesn't
     list — the reason both drain engines share this layout instead of
-    the streaming file sink).  Returns the number of files landed — 0
-    means the slice was empty (an all-empty-task write emits no part
-    files), which the stream sink uses instead of a separate
-    ``isEmpty()`` job."""
+    the streaming file sink).  Returns the number of files landed.
+    Part files that hold no rows are dropped — Spark writes one
+    zero-row part file for an empty frame — so an empty slice lands
+    nothing and returns 0, without a separate ``isEmpty()`` job."""
     import os as _os
     import shutil
     import uuid as _uuid
@@ -1783,12 +1831,30 @@ def _land_slice(
     outs = sorted(
         p
         for p in tmp.iterdir()
-        if p.is_file() and not p.name.startswith(("_", "."))
+        if p.is_file()
+        and not p.name.startswith(("_", "."))
+        and _has_rows(p, sink_format)
     )
     for i, f in enumerate(outs):
         _os.replace(f, dst / f"{prefix}{i:04d}{f.suffix}")
     shutil.rmtree(tmp, ignore_errors=True)
     return len(outs)
+
+
+def _has_rows(part: Path, sink_format: str) -> bool:
+    """Whether a written part file holds any row: the footer's row
+    count for parquet/orc (no data read), else a non-empty file — the
+    text formats write zero bytes for zero rows."""
+    fmt = sink_format.lower()
+    if fmt == "parquet":
+        import pyarrow.parquet as pq
+
+        return pq.ParquetFile(part).metadata.num_rows > 0
+    if fmt == "orc":
+        import pyarrow.orc as po
+
+        return po.ORCFile(part).nrows > 0
+    return part.stat().st_size > 0
 
 
 def _refuse_metadata_sink(sink_path: str) -> None:
@@ -1843,6 +1909,7 @@ def _plan_feed_slice(
     vs: list[int],
     max_files: int | None,
     max_bytes: int | None,
+    helper: str = "replicate_versioned_changes",
 ) -> tuple[int, int]:
     """One capped change-feed slice ``(lo, hi]``: walk the manifests —
     METADATA ONLY, O(versions in range) — accumulating each commit's
@@ -1853,15 +1920,15 @@ def _plan_feed_slice(
     cap still forms a slice (the soft-cap rule — progress beats the
     bound, same as the streaming source's at-least-one-file rule,
     minus its sub-commit splitting).  Returns ``(hi, files)``; raises
-    on a mid-range vacuum hole (the feed contract — a silent gap
-    would replicate wrong)."""
+    on a mid-range vacuum hole, naming the calling verb ``helper``
+    (the feed contract — a silent gap would deliver wrong rows)."""
     missing = [g for g in range(lo + 1, tgt + 1) if g not in vs]
     if missing:
         raise ValueError(
-            f"replicate_versioned_changes: version(s) {missing} inside "
-            f"({lo}, {tgt}] were vacuumed at {src} — their changes are "
-            "unreconstructable; replicate a gap-free range or rebuild "
-            "the replica from a snapshot"
+            f"{helper}: version(s) {missing} inside ({lo}, {tgt}] were "
+            f"vacuumed at {src} — their changes are unreconstructable; "
+            "follow a gap-free range or rebuild the target from a "
+            "snapshot"
         )
     prev = _read_manifest(src, lo) if lo in vs else {"files": []}
     files = 0

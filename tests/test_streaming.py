@@ -2576,6 +2576,193 @@ def test_drain_engines_full_interleave_and_crash_recovery(
     )
 
 
+def test_drain_empty_slice_lands_nothing(spark, tmp_path):
+    """An empty slice is not a delivered batch: Spark writes one
+    zero-row part file for an empty frame, so ``_land_slice`` decides
+    emptiness from the written rows, lands no file and returns 0 — and
+    a drain whose ``build`` filters every row away returns 0 and leaves
+    no ``slice-*`` file, on both engines."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import versioned_write
+    from _spark_multi_format_data_lake_pipeline_spark.sources import versioned_stream as VS
+
+    empty = spark.createDataFrame([], "id int, v string")
+    sink = tmp_path / "direct"
+    sink.mkdir()
+    assert VS._land_slice(empty, str(sink), "parquet", "slice-x-") == 0
+    assert not list(sink.glob("slice-*"))
+
+    t = str(tmp_path / "t")
+    versioned_write(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+        .coalesce(1),
+        t,
+    )
+    for engine in ("batch", "stream"):
+        out = tmp_path / f"out_{engine}"
+        runs = VS.drain_versioned_changes(
+            spark, t, str(out), str(tmp_path / f"ck_{engine}"),
+            engine=engine, build=lambda df: df.filter("id < 0"),
+        )
+        assert runs == 0, f"{engine}: an all-filtered drain delivered {runs}"
+        assert not list(out.glob("slice-*")), engine
+
+
+def test_drain_change_feed_default_batch_engine(spark, tmp_path, monkeypatch):
+    """The default (``auto``) change-feed drain runs the BATCH slice
+    engine: across an upsert, a DV delete and an append the sink equals
+    ``read_change_feed(0)`` with no streaming query started and no
+    engine offsets written; every input only the stream engine serves
+    routes to it; and a stream → auto → stream interleave through one
+    checkpoint keeps every window."""
+    import json as jsonlib
+
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        enable_change_data_feed,
+        read_change_feed,
+        versioned_delete,
+        versioned_upsert,
+        versioned_write,
+    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources import versioned_stream as VS
+
+    t, out, ckpt = (
+        str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    cdf = {"readChangeFeed": "true"}
+    versioned_write(mk([(i, f"v{i}") for i in range(6)]).coalesce(2), t)  # v1
+    enable_change_data_feed(t)  # v2
+    versioned_upsert(mk([(1, "u1"), (9, "i9")]), t, ["id"])  # v3
+    versioned_delete(spark, t, "id = 4", strategy="dv")  # v4
+    versioned_write(mk([(7, "a7")]).coalesce(1), t)  # v5
+    feed = lambda: sorted(
+        tuple(r) for r in read_change_feed(spark, t, 0).collect()
+    )
+    sink = lambda: sorted(
+        tuple(r)
+        for r in spark.read.schema(
+            "id int, v string, _change_type string, _commit_version long"
+        ).parquet(out).collect()
+    )
+    assert VS.drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cdf
+    ) == 1
+    assert sink() == feed()
+    assert not (tmp_path / "ckpt" / "offsets").exists()
+    assert spark.streams.active == []
+    assert all(
+        p.name.startswith("slice-v") for p in (tmp_path / "out").glob("slice-*")
+    )
+    assert jsonlib.loads(
+        (tmp_path / "ckpt" / "_vc_cursor" / "cursor.json").read_text()
+    ) == {"version": 5}
+    assert VS.drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cdf
+    ) == 0, "a caught-up drain delivers nothing"
+
+    # stream -> auto -> stream: every window survives
+    versioned_upsert(mk([(2, "u2")]), t, ["id"])  # v6
+    VS.drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cdf, engine="stream"
+    )
+    versioned_delete(spark, t, "id = 5", strategy="dv")  # v7
+    assert VS.drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cdf
+    ) == 1
+    versioned_write(mk([(8, "a8")]).coalesce(1), t)  # v8
+    VS.drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cdf, engine="stream"
+    )
+    assert sink() == feed(), "every window must survive the interleave"
+
+    # routing: each input only the stream engine serves picks it
+    monkeypatch.setattr(VS, "_drain_batch", lambda *a, **k: "batch")
+    monkeypatch.setattr(VS, "_capped_drain_loop", lambda *a, **k: "stream")
+    ck2 = tmp_path / "ck2"
+    route = lambda **kw: VS.drain_versioned_changes(
+        spark, t, str(tmp_path / "out2"), str(ck2), **kw
+    )
+    assert route(extra_options=cdf) == "batch"
+    assert route() == "batch"
+    for kw in (
+        {"extra_options": {**cdf, "startingVersion": "3"}},
+        {"extra_options": cdf, "output_mode": "update"},
+        {"extra_options": cdf, "max_files_per_trigger": 1},
+        {"extra_options": cdf, "max_bytes_per_trigger": 1 << 20},
+        {"extra_options": cdf, "build": lambda df: df},
+    ):
+        assert route(**kw) == "stream", kw
+    (ck2 / "_vc_cursor").mkdir(parents=True, exist_ok=True)
+    for partial in (
+        {"version": 3, "file_index": 1},
+        {"version": 0, "snapshot_start": True},
+    ):
+        (ck2 / "_vc_cursor" / "cursor.json").write_text(
+            jsonlib.dumps(partial)
+        )
+        assert route(extra_options=cdf) == "stream", partial
+
+
+def test_drain_change_feed_batch_bootstrap_and_gap(spark, tmp_path):
+    """The batch change-feed drain of an ever-vacuumed table first
+    emits the earliest surviving snapshot (DV state applied) as inserts
+    at ``_commit_version = vs[0]`` — the stream reader's bootstrap —
+    and a tag+vacuum hole inside the range refuses under the drain's
+    own name."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        create_tag,
+        enable_change_data_feed,
+        read_change_feed,
+        vacuum,
+        versioned_delete,
+        versioned_upsert,
+        versioned_write,
+        versions,
+    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    cdf = {"readChangeFeed": "true"}
+    schema = "id int, v string, _change_type string, _commit_version long"
+    t = str(tmp_path / "t")
+    versioned_write(mk([(i, f"v{i}") for i in range(5)]).coalesce(1), t)
+    enable_change_data_feed(t)  # v2
+    versioned_delete(spark, t, "id = 3", strategy="dv")  # v3
+    versioned_upsert(mk([(1, "u1")]), t, ["id"])  # v4
+    vacuum(t, keep_last=2)
+    assert versions(t) == [3, 4]
+    out = str(tmp_path / "out")
+    runs = drain_versioned_changes(
+        spark, t, out, str(tmp_path / "ck"), extra_options=cdf
+    )
+    assert runs == 2, "bootstrap snapshot + the v4 feed slice"
+    got = sorted(
+        tuple(r) for r in spark.read.schema(schema).parquet(out).collect()
+    )
+    boot = [(i, f"v{i}", "insert", 3) for i in (0, 1, 2, 4)]
+    assert [g for g in got if g[3] == 3] == boot, "DV'd id=3 must not resurrect"
+    assert [g for g in got if g[3] > 3] == sorted(
+        tuple(r) for r in read_change_feed(spark, t, 3).collect()
+    )
+
+    t2 = str(tmp_path / "t2")
+    versioned_write(mk([(1, "a")]).coalesce(1), t2)  # v1
+    create_tag(t2, "anchor", 1)
+    enable_change_data_feed(t2)  # v2
+    versioned_delete(spark, t2, "id = 1", strategy="dv")  # v3
+    vacuum(t2, keep_last=1)
+    assert versions(t2) == [1, 3]
+    with pytest.raises(
+        ValueError, match=r"drain_versioned_changes: version\(s\) \[2\]"
+    ):
+        drain_versioned_changes(
+            spark, t2, str(tmp_path / "out2"), str(tmp_path / "ck2"),
+            extra_options=cdf,
+        )
+
+
 def test_write_tables_mid_sweep_failure_keeps_bindings(
     spark, tmp_path, monkeypatch
 ):

@@ -6414,7 +6414,8 @@ def test_branch_change_feed_fork_semantics(spark, tmp_path):
     # streaming readChangeFeed against the branch root
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     drain_versioned_changes(
-        spark, b, out, ckpt, extra_options={"readChangeFeed": "true"}
+        spark, b, out, ckpt, extra_options={"readChangeFeed": "true"},
+        engine="stream",
     )
     streamed = sorted(
         (r["id"], r["_change_type"], r["_commit_version"])
@@ -6696,3 +6697,43 @@ def test_stream_offset_in_vacuum_interior_gap_refuses(spark, tmp_path):
             rows.extend(item.to_pylist() if hasattr(item, "to_pylist") else [item])
     got = sorted(d["id"] for d in rows)
     assert got == [2, 3, 4, 5], "diff vs the surviving base delivers v3..v6 files once"
+
+
+def test_side_job_pool_lazy_init_is_race_free(monkeypatch):
+    """Two threads committing at once must share ONE side-job pool:
+    an unguarded check-then-create would build two executors and leak
+    one pool's worker threads.  The executor's construction is slowed
+    so both threads reach the check before either finishes it."""
+    import concurrent.futures as cf
+    import threading
+    import time
+
+    from _spark_multi_format_data_lake_pipeline_spark.sinks import versioned as V
+
+    monkeypatch.setattr(V, "_SIDE_JOB_POOL", None)
+    real = cf.ThreadPoolExecutor
+    made = []
+
+    def slow_pool(*a, **k):
+        time.sleep(0.1)
+        made.append(real(*a, **k))
+        return made[-1]
+
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", slow_pool)
+    gate = threading.Barrier(2)
+    got = [None, None]
+
+    def grab(i):
+        gate.wait(timeout=10)
+        got[i] = V._side_job_pool()
+
+    threads = [threading.Thread(target=grab, args=(i,)) for i in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=10)
+    for p in made:
+        p.shutdown(wait=False)
+    assert not any(th.is_alive() for th in threads)
+    assert got[0] is not None and got[0] is got[1]
+    assert len(made) == 1, f"{len(made)} pools built"
