@@ -189,12 +189,17 @@ def pagerank(
     join from the node set; mass from dangling nodes (no out-edges) is
     NOT redistributed — both this and the q156 oracle leak it
     identically, and the nation-trade graph has none.
+
+    An edge with a NULL endpoint is dropped before anything else: it
+    names no node, so it neither adds a node nor counts toward its
+    other endpoint's out-weight (a node reachable only through such an
+    edge is not in the result, and no NULL node ever is).
     """
     e = edges.select(
         F.col(src).alias("_src"),
         F.col(dst).alias("_dst"),
         (F.col(weight).cast("double") if weight else F.lit(1.0)).alias("_w"),
-    )
+    ).where(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
     outw = e.groupBy("_src").agg(F.sum("_w").alias("_ow"))
     enorm = (
         e.join(outw, "_src")
@@ -206,7 +211,8 @@ def pagerank(
         .localCheckpoint(eager=False)
     )
     # node set derived FROM the checkpointed edge list (enorm holds
-    # exactly e's rows: the out-weight join matches every edge), so the
+    # exactly e's rows: the out-weight join matches every non-NULL
+    # edge), so the
     # edge subtree appears in the whole computation exactly once
     nodes = (
         enorm.select(F.col("_src").alias("node"))

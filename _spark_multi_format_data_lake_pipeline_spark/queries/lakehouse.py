@@ -2246,17 +2246,18 @@ def q274_versioned_not_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="End-to-end CAPPED BACKLOG DRAIN (drain_versioned_changes — "
         "the semantics Delta gives trigger(availableNow=True) under "
-        "admission control): one running micro-batch query against "
-        "the checkpoint drains the backlog and stops at the head "
-        "(processAllAvailable — r16: one JVM query startup instead of "
-        "one availableNow run per capped batch).  A 2-commit / 7-file "
-        "orders backlog under maxFilesPerTrigger=2 drains as 4 bounded "
-        "micro-batches (asserted) and the driver hash proves the sink "
-        "equals the table exactly once — the cap is what prevents the "
+        "admission control): capped slices planned from the manifests "
+        "drain the backlog as batch jobs through a durable cursor and "
+        "stop at the head — no streaming query.  The cap splits "
+        "commits (sub-commit cursor offsets, the stream reader's "
+        "{version, file_index} form), so a 2-commit / 7-file orders "
+        "backlog under max_files_per_trigger=2 drains as 4 bounded "
+        "slices (asserted) and the driver hash proves the sink equals "
+        "the table exactly once — the cap is what prevents the "
         "cluster-killing table-sized batch at 100 TB. "
-        "sources/versioned_stream.py:drain_versioned_changes; "
-        "incremental re-drain through the same checkpoint pinned in "
-        "tests/test_streaming.py.",
+        "sources/versioned_stream.py:drain_versioned_changes/"
+        "_plan_append_slice; incremental re-drain and sub-commit "
+        "crash-retry pinned in tests/test_streaming.py.",
 )
 def q275_versioned_stream_drain(
     spark: SparkSession, sf_dir: str
@@ -2405,10 +2406,10 @@ def q276_versioned_change_feed(
         "snapshot streams as inserts, and the drained sink hash proves "
         "stream == batch feed exactly.  Planned like every other "
         "micro-batch: partitions are the commit's _change_data files, "
-        "metadata-only planning, rate caps compose.  The drain pins "
-        "engine='stream': the default (auto) change-feed drain runs "
-        "the batch slice engine, whose equality to the feed is pinned "
-        "in tests/test_streaming.py. "
+        "metadata-only planning, rate caps compose.  The query drives "
+        "the source directly (an availableNow parquet sink); "
+        "drain_versioned_changes' batch change-feed slices are pinned "
+        "equal to the feed in tests/test_streaming.py. "
         "sources/versioned_stream.py:_iter_new_files kind='cdf'; "
         "batch twin q276; contradictory-options refusal pinned in "
         "tests/test_versioned.py.",
@@ -2422,7 +2423,7 @@ def q277_versioned_stream_change_feed(
         versioned_upsert,
         versioned_write,
     )
-    from ..sources.versioned_stream import drain_versioned_changes
+    from ..sources import versioned_stream
 
     base = tempfile.mkdtemp(prefix="q277_vtbl_")
     t, out, ckpt = base + "/t", base + "/out", base + "/ckpt"
@@ -2440,9 +2441,18 @@ def q277_versioned_stream_change_feed(
     )
     versioned_upsert(chg, t, ["o_orderkey"])  # v3
     versioned_delete(spark, t, "o_orderkey % 7 = 0", strategy="dv")  # v4
-    drain_versioned_changes(
-        spark, t, out, ckpt, extra_options={"readChangeFeed": "true"},
-        engine="stream",
+    versioned_stream.register(spark)
+    (
+        spark.readStream.format("versioned_changes")
+        .option("path", t)
+        .option("readChangeFeed", "true")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
     return spark.read.schema(
         "o_orderkey bigint, o_totalprice double, _change_type string, "
@@ -3127,11 +3137,9 @@ def q284_versioned_named_merge(
         "versioned_apply_changes (preimages dropped, I/U/D by "
         "_change_type, seq_col=_commit_version collapsing multi-commit "
         "batches, source_version guarding concurrent target writers). "
-        "Since r16 the default engine is BATCH: capped "
-        "read_change_feed slices through the same durable cursor file "
-        "the streaming engine's offset floor uses — identical state "
-        "and restart contract (each slice is the restart case: cursor "
-        "read, apply, advance), without one JVM streaming-query "
+        "It runs as capped read_change_feed slices through a durable "
+        "cursor file (each slice is the restart case: cursor read, "
+        "apply, advance) — batch jobs only, no JVM streaming-query "
         "startup (~3-6s fixed) per capped micro-batch.  The schedule "
         "includes what production schedules include: a capped BOUNDED "
         "backfill through v3 (>=2 capped slices), a VACUUM of the "
@@ -3140,8 +3148,8 @@ def q284_versioned_named_merge(
         "replica equals the source head snapshot row-for-row; the "
         "driver hash proves both equal the algebraically predicted "
         "state. sources/versioned_stream.py:replicate_versioned_"
-        "changes/_replicate_batch; engine matrix + interleave pinned "
-        "in tests/test_streaming.py.",
+        "changes; restart and vacuum matrix pinned in "
+        "tests/test_streaming.py.",
 )
 def q285_versioned_cdc_replication(
     spark: SparkSession, sf_dir: str
@@ -3178,14 +3186,14 @@ def q285_versioned_cdc_replication(
         od.filter((k % 2 == 1) & (k % 9 == 0) & (k % 5 != 0)).repartition(2),
         src,
     )  # v5: append of keys provably absent — the source stays key-unique
-    # bounded capped backfill through v3: every availableNow run is a
-    # fresh reader (the restart case), >= 2 runs under the 2-file cap
+    # bounded capped backfill through v3: every slice is the restart
+    # case (cursor read, apply, advance), >= 2 slices under the 2-file cap
     runs1 = replicate_versioned_changes(
         spark, src, dst, ckpt, ["o_orderkey"],
         max_files_per_trigger=2, ending_version=3,
     )
     _require(runs1 >= 2, (
-        f"the capped backfill must take several restart-shaped runs, "
+        f"the capped backfill must take several restart-shaped slices, "
         f"got {runs1}"
     ))
     # the delivered prefix is vacuumed away mid-replication
@@ -3193,7 +3201,7 @@ def q285_versioned_cdc_replication(
     _require(versions(src) == [3, 4, 5], "vacuum must trim through v3")
     # unbounded, uncapped catch-up through the SAME checkpoint (the
     # restart-under-cap proof lives in phase 1; leaving the cap off
-    # here keeps the catch-up to the fewest availableNow runs)
+    # here keeps the catch-up to the fewest slices)
     replicate_versioned_changes(spark, src, dst, ckpt, ["o_orderkey"])
     s, d = read_version(spark, src), read_version(spark, dst)
     # both difference directions in ONE action (union of the two
@@ -3360,8 +3368,8 @@ def q286_versioned_branch_feed(
         "tables into another by name) composed on the versioned plane: "
         "replicate_database enumerates lake.* in the VersionedCatalog "
         "and per-table CDC-replicates into mirror.* through per-table "
-        "durable cursors (batch engine: capped read_change_feed "
-        "slices, no streaming-query startup), with per-table error "
+        "durable cursors (capped read_change_feed slices, no "
+        "streaming-query startup), with per-table error "
         "isolation and ending_versions bounds.  The schedule is "
         "production-shaped: a BOUNDED first sweep (ord pinned to its "
         "pre-delete version), then the unbounded re-invocation — the "
@@ -3556,24 +3564,24 @@ def q288_versioned_named_stream_landing(
     -- odd %3 keys, and the incremental v3 remainder = the whole table
     SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
     """,
-    doc="BATCH BACKLOG DRAIN (r16) — the engine='batch' twin of q275's "
-        "streaming drain: capped APPEND SLICES planned from manifest "
+    doc="BATCH BACKLOG DRAIN (r16) — q275's drain on an incremental "
+        "schedule: capped APPEND SLICES planned from manifest "
         "metadata (O(admitted files), ~0.4 ms over a 10k-file backlog) "
         "land in the sink under deterministic slice-keyed file names "
-        "through the same durable cursor the streaming engine's offset "
-        "floor uses — a crash between write and cursor advance rewrites "
-        "the SAME names and converges, so the sink holds every row "
-        "exactly once with NO JVM streaming-query startup per capped "
-        "batch (the cost that makes a 10k-commit capped stream "
-        "backfill hours of pure engine overhead).  Caps close at "
-        "commit granularity (the soft-cap rule; the streaming engine "
-        "remains the sub-commit splitter).  The schedule: a 6-file "
-        "2-commit backlog under a 2-file cap (2 slices, asserted), "
+        "through a durable cursor (the stream reader's offset format) "
+        "— a crash between write and cursor advance rewrites the SAME "
+        "names and converges, so the sink holds every row exactly "
+        "once with NO JVM streaming-query startup per capped batch "
+        "(the cost that makes a 10k-commit capped stream backfill "
+        "hours of pure engine overhead).  Caps split commits "
+        "(sub-commit cursor offsets).  The schedule: a 6-file "
+        "2-commit backlog under a 2-file cap (3 slices, asserted), "
         "then an incremental append drained through the same cursor "
         "(1 slice), then a caught-up no-op (0).  The driver hash "
         "proves sink == table exactly once. "
-        "sources/versioned_stream.py:_drain_batch/_plan_append_slice; "
-        "engine matrix + handover pinned in tests/test_streaming.py.",
+        "sources/versioned_stream.py:drain_versioned_changes/"
+        "_plan_append_slice; crash-retry pinned in "
+        "tests/test_streaming.py.",
 )
 def q289_versioned_batch_drain(
     spark: SparkSession, sf_dir: str
@@ -3592,11 +3600,11 @@ def q289_versioned_batch_drain(
         od.filter((k % 2 == 1) & (k % 3 == 0)).repartition(2), t
     )  # v2: 2 files
     runs = drain_versioned_changes(
-        spark, t, out, ckpt, max_files_per_trigger=2, engine="batch"
+        spark, t, out, ckpt, max_files_per_trigger=2
     )
-    _require(runs == 2, (
+    _require(runs == 3, (
         f"a 4-file + 2-file backlog under a 2-file cap must drain in "
-        f"2 commit-granular slices, got {runs}"
+        f"3 capped slices, got {runs}"
     ))
     # incremental: the remainder appends and drains through the SAME
     # cursor in one more slice; a further drain is a clean 0-run no-op
@@ -3604,12 +3612,12 @@ def q289_versioned_batch_drain(
         od.filter((k % 2 == 1) & (k % 3 != 0)).repartition(2), t
     )  # v3
     runs2 = drain_versioned_changes(
-        spark, t, out, ckpt, max_files_per_trigger=2, engine="batch"
+        spark, t, out, ckpt, max_files_per_trigger=2
     )
     _require(runs2 == 1, f"the incremental drain is one slice, got {runs2}")
     _require(
         drain_versioned_changes(
-            spark, t, out, ckpt, max_files_per_trigger=2, engine="batch"
+            spark, t, out, ckpt, max_files_per_trigger=2
         )
         == 0,
         "a caught-up re-drain must deliver nothing",

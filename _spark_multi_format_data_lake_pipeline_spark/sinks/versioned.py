@@ -1082,447 +1082,456 @@ def _write_snapshot(
                 _write_cdf, cdf_feed, path, dict(cdf_cmap or {})
             )
         )
-    vs = versions(path)
-    prev = (
-        _read_manifest(path, vs[-1])
-        if vs
-        else {"files": [], "row_count": 0}
-    )
-    # Column DEFAULTS (add_column ... DEFAULT): a write whose frame
-    # OMITS a defaulted column materializes the default into the new
-    # files (Delta's INSERT-without-the-column rule), so only
-    # pre-evolution files ever need the read-time fill; a frame that
-    # carries the column keeps its values — an explicit NULL stays NULL.
-    cdefaults = dict(prev.get("column_defaults") or {})
-    df = _materialize_defaults(df, prev)
-    prev_bb = tuple(prev["bucket_by"]) if prev.get("bucket_by") else None
-    if bucket_by is None:
-        bb = prev_bb
-    else:
-        bb = (str(bucket_by[0]), int(bucket_by[1])) if bucket_by else None
-        if mode == "append" and vs and bb != prev_bb:
-            raise ValueError(
-                f"append bucket spec {bb} != table spec {prev_bb}; "
-                "changing the spec requires an overwrite"
-            )
-    prev_bloom_spec = prev.get("bloom_by")
-    if bloom_by is None:
-        bspec = prev_bloom_spec
-    else:
-        bspec = (
-            {"cols": list(bloom_by), "m": _BLOOM_M, "k": _BLOOM_K}
-            if bloom_by
-            else None
+    try:
+        vs = versions(path)
+        prev = (
+            _read_manifest(path, vs[-1])
+            if vs
+            else {"files": [], "row_count": 0}
         )
-        if mode == "append" and vs and bspec != prev_bloom_spec:
-            raise ValueError(
-                f"append bloom spec {bspec} != table spec "
-                f"{prev_bloom_spec}; changing the spec requires an "
-                "overwrite"
-            )
-    prev_ndv_spec = prev.get("ndv_by")
-    if ndv_by is None:
-        nspec = prev_ndv_spec
-    else:
-        nspec = {"cols": list(ndv_by), "p": _NDV_P} if ndv_by else None
-        if mode == "append" and vs and nspec != prev_ndv_spec:
-            raise ValueError(
-                f"append ndv spec {nspec} != table spec "
-                f"{prev_ndv_spec}; changing the spec requires an "
-                "overwrite"
-            )
-    if partition_by is None:
-        pb = prev.get("partition_by") or []
-        pb = [c for c in pb if c != _BUCKET_COL]
-    else:
-        pb = list(partition_by)
-        prev_pb = [
-            c for c in (prev.get("partition_by") or []) if c != _BUCKET_COL
-        ]
-        if (
-            mode == "append"
-            and vs
-            and pb != prev_pb
-            and not evolve_partitioning
-        ):
-            raise ValueError(
-                f"append partition spec {pb} != table spec "
-                f"{prev_pb}; changing the spec requires an overwrite "
-                "or an explicit evolve_partitioning=True append "
-                "(Iceberg partition-spec evolution: existing files "
-                "keep their layout, new files use the new spec)"
-            )
-    # LIQUID-CLUSTERING-STYLE AUTO-LAYOUT (Delta liquid clustering's
-    # write-path half): ``cluster_by=[cols]`` is a table property that
-    # rides the manifest like the bucket/bloom specs — EVERY write
-    # z-orders its NEW files along the Morton curve of the clustering
-    # columns (operators/layout.py, one tiny agg + one range shuffle of
-    # the new data only), so multi-dim zone-map pruning
-    # (read_version_pruned_multi) works without ever running an
-    # explicit OPTIMIZE ZORDER; ``compact`` re-clusters by the spec by
-    # default, healing the cross-file overlap incremental appends
-    # accumulate.  Like Delta, clustering REPLACES partitioning: it
-    # cannot combine with partition_by or bucket_by (they would shred
-    # the curve into per-directory fragments).  Changing the spec on a
-    # later write is allowed and applies to that write's files onward —
-    # old files keep their old layout, their committed zone maps stay
-    # exact (Iceberg spec-evolution semantics).
-    prev_cb = prev.get("cluster_by") or None
-    if cluster_by is None:
-        cb_spec = prev_cb
-    else:
-        cb_spec = [str(c) for c in cluster_by] if cluster_by else None
-    if cb_spec and (pb or bb):
-        raise ValueError(
-            "cluster_by cannot combine with partition_by or bucket_by "
-            "(clustering replaces partitioning — Delta's rule)"
-        )
-    # GENERATED COLUMNS (Delta generated columns): the spec rides the
-    # manifest like constraints and generation is AUTHORITATIVE — the
-    # engine always (re)computes each generated column from its SQL
-    # expression over the same row, so the invariant holds by
-    # construction on every write path (append, upsert survivors+changes,
-    # UPDATE of a source column, CDC apply), a caller-supplied value is
-    # simply overwritten, and no write-time validation scan is needed.
-    # Computed BEFORE bucket attach / partitionBy so generated columns
-    # can drive the layout (Delta's generated-column partitioning, the
-    # date_trunc pattern).
-    gen = (
-        dict(generated_columns)
-        if generated_columns is not None
-        else prev.get("generated_columns", {})
-    )
-    if gen:
-        from pyspark.sql import functions as F
-
-        for n, e in gen.items():
-            df = df.withColumn(n, F.expr(e))
-    # IDENTITY columns (Delta GENERATED BY DEFAULT AS IDENTITY): rows
-    # arriving with NULL in an identity column get fresh ids from the
-    # manifest's high-water mark; non-NULL values pass through — which
-    # is exactly what carried-row rewrites, upsert survivors and UPDATE
-    # pre-images produce, so every write path composes for free and
-    # only genuinely NEW rows consume ids.  Assignment is DETERMINISTIC
-    # (ids = start + step × running count, ranked by the spec's
-    # ``order_by`` key within the commit) and fully parallel — the
-    # range-partition prefix-sum numbering of
-    # ``operators/ids.py::assign_contiguous_ids``, never a global
-    # ROW_NUMBER funnel.  Like Delta, BY DEFAULT does not police
-    # uniqueness of user-supplied values.
-    ident = (
-        {k: dict(v) for k, v in identity_columns.items()}
-        if identity_columns is not None
-        else {k: dict(v) for k, v in prev.get("identity_columns", {}).items()}
-    )
-    if ident:
-        from pyspark.sql import functions as F
-
-        if bad := sorted(set(ident) & set(gen)):
-            raise ValueError(
-                f"identity column(s) {bad} are also generated columns; "
-                "generation would overwrite every assigned id"
-            )
-        for name, sp in ident.items():
-            ob = sp.get("order_by")
-            if not ob:
+        # Column DEFAULTS (add_column ... DEFAULT): a write whose frame
+        # OMITS a defaulted column materializes the default into the new
+        # files (Delta's INSERT-without-the-column rule), so only
+        # pre-evolution files ever need the read-time fill; a frame that
+        # carries the column keeps its values — an explicit NULL stays NULL.
+        cdefaults = dict(prev.get("column_defaults") or {})
+        df = _materialize_defaults(df, prev)
+        prev_bb = tuple(prev["bucket_by"]) if prev.get("bucket_by") else None
+        if bucket_by is None:
+            bb = prev_bb
+        else:
+            bb = (str(bucket_by[0]), int(bucket_by[1])) if bucket_by else None
+            if mode == "append" and vs and bb != prev_bb:
                 raise ValueError(
-                    f"identity column {name!r}: spec needs 'order_by' "
-                    "(a unique key among inserted rows) — deterministic "
-                    "assignment is the contract"
+                    f"append bucket spec {bb} != table spec {prev_bb}; "
+                    "changing the spec requires an overwrite"
                 )
-            start = int(sp.get("start", 1))
-            step = int(sp.get("step", 1))
-            if step == 0:
-                raise ValueError(f"identity column {name!r}: step must be nonzero")
-            assigned = int(sp.get("assigned", 0))
-            if name not in df.columns:
-                df = df.withColumn(name, F.lit(None).cast("long"))
-            else:
-                df = df.withColumn(name, F.col(name).cast("long"))
-            need = df.filter(F.col(name).isNull())
-            from ..operators.ids import assign_contiguous_ids
-
-            # the numbering's own per-partition count collect reports
-            # n_null (with_count) — one job less per identity commit
-            # than the old separate need.count() pre-flight
-            ranked, n_null = assign_contiguous_ids(
-                need.drop(name),
-                list(ob),
-                id_col="__ident_rank",
-                with_count=True,
+        prev_bloom_spec = prev.get("bloom_by")
+        if bloom_by is None:
+            bspec = prev_bloom_spec
+        else:
+            bspec = (
+                {"cols": list(bloom_by), "m": _BLOOM_M, "k": _BLOOM_K}
+                if bloom_by
+                else None
             )
-            if n_null:
-                numbered = ranked.withColumn(
-                    name,
-                    (
-                        F.lit(start)
-                        + F.lit(step)
-                        * (F.lit(assigned) + F.col("__ident_rank"))
-                    ).cast("long"),
-                ).drop("__ident_rank")
-                df = df.filter(F.col(name).isNotNull()).unionByName(
-                    numbered.select(*df.columns)
+            if mode == "append" and vs and bspec != prev_bloom_spec:
+                raise ValueError(
+                    f"append bloom spec {bspec} != table spec "
+                    f"{prev_bloom_spec}; changing the spec requires an "
+                    "overwrite"
                 )
-                sp["assigned"] = assigned + n_null
-            ident[name] = {
-                "start": start,
-                "step": step,
-                "order_by": list(ob),
-                "assigned": sp.get("assigned", assigned),
-            }
-    # Narrow arrival on a hash-indexed column (int data appended to a
-    # committed-long column, the legal type-widening dual): bloom masks
-    # and bucket ids hash the PHYSICAL type, and Spark's murmur3 hashes
-    # int and long of the same value differently — left as-is, a reader
-    # probing with the committed wide type would silently MISS the new
-    # files (false negatives).  Zone maps compare values and stay
-    # exact; the hashed layouts need writer and reader to hash the same
-    # type, so incoming hashed columns are UPCAST to the committed type
-    # before bucket attach / write.  Only the narrow→wide direction is
-    # cast here: a WIDER arrival is left alone so the widening guard
-    # below still refuses it (a downcast would silently truncate).
-    _will_carry = (
-        carry_files
-        if carry_files is not None
-        else (prev["files"] if mode == "append" else [])
-    )
-    if _will_carry and prev.get("schema"):
-        from pyspark.sql import functions as F
-
-        _committed = {
-            f["name"]: f["type"]
-            for f in prev["schema"]["fields"]
-            if isinstance(f["type"], str)
-        }
-        _hashed = set(bspec["cols"] if bspec else []) | (
-            {bb[0]} if bb else set()
-        )
-        for _fld in df.schema.fields:
-            _t = _committed.get(_fld.name)
-            _in = _fld.dataType.jsonValue()
+        prev_ndv_spec = prev.get("ndv_by")
+        if ndv_by is None:
+            nspec = prev_ndv_spec
+        else:
+            nspec = {"cols": list(ndv_by), "p": _NDV_P} if ndv_by else None
+            if mode == "append" and vs and nspec != prev_ndv_spec:
+                raise ValueError(
+                    f"append ndv spec {nspec} != table spec "
+                    f"{prev_ndv_spec}; changing the spec requires an "
+                    "overwrite"
+                )
+        if partition_by is None:
+            pb = prev.get("partition_by") or []
+            pb = [c for c in pb if c != _BUCKET_COL]
+        else:
+            pb = list(partition_by)
+            prev_pb = [
+                c for c in (prev.get("partition_by") or []) if c != _BUCKET_COL
+            ]
             if (
-                _fld.name in _hashed
-                and _t is not None
-                and _in != _t
-                and _widened(_t, _in) == _t
+                mode == "append"
+                and vs
+                and pb != prev_pb
+                and not evolve_partitioning
             ):
-                df = df.withColumn(_fld.name, F.col(_fld.name).cast(_t))
-    if bb:
-        df = _attach_bucket(df, bb)
-        pb = pb + [_BUCKET_COL]
-    if bspec:
-        bad = [c for c in bspec["cols"] if c in pb]
-        if bad:
+                raise ValueError(
+                    f"append partition spec {pb} != table spec "
+                    f"{prev_pb}; changing the spec requires an overwrite "
+                    "or an explicit evolve_partitioning=True append "
+                    "(Iceberg partition-spec evolution: existing files "
+                    "keep their layout, new files use the new spec)"
+                )
+        # LIQUID-CLUSTERING-STYLE AUTO-LAYOUT (Delta liquid clustering's
+        # write-path half): ``cluster_by=[cols]`` is a table property that
+        # rides the manifest like the bucket/bloom specs — EVERY write
+        # z-orders its NEW files along the Morton curve of the clustering
+        # columns (operators/layout.py, one tiny agg + one range shuffle of
+        # the new data only), so multi-dim zone-map pruning
+        # (read_version_pruned_multi) works without ever running an
+        # explicit OPTIMIZE ZORDER; ``compact`` re-clusters by the spec by
+        # default, healing the cross-file overlap incremental appends
+        # accumulate.  Like Delta, clustering REPLACES partitioning: it
+        # cannot combine with partition_by or bucket_by (they would shred
+        # the curve into per-directory fragments).  Changing the spec on a
+        # later write is allowed and applies to that write's files onward —
+        # old files keep their old layout, their committed zone maps stay
+        # exact (Iceberg spec-evolution semantics).
+        prev_cb = prev.get("cluster_by") or None
+        if cluster_by is None:
+            cb_spec = prev_cb
+        else:
+            cb_spec = [str(c) for c in cluster_by] if cluster_by else None
+        if cb_spec and (pb or bb):
             raise ValueError(
-                f"bloom_by columns {bad} are partition/bucket columns — "
-                "their [v, v] zone-map ranges already prune exactly"
+                "cluster_by cannot combine with partition_by or bucket_by "
+                "(clustering replaces partitioning — Delta's rule)"
             )
-    if carry_files is None:
-        carry_files = prev["files"] if mode == "append" else []
-    constraints = prev.get("constraints", {})
-    if constraints:
-        # persisted CHECK constraints gate every commit's NEW rows
-        # (carried files were validated when they were new)
-        _validate_constraints(df, constraints, f"{mode} write")
-    if cb_spec and mode != "compact":
-        # compact manages its own layout (it z-orders the selected
-        # rows by the spec already, with the bin count it chose) —
-        # re-clustering here would just repeat the range shuffle
-        from ..operators.layout import zorder_by
+        # GENERATED COLUMNS (Delta generated columns): the spec rides the
+        # manifest like constraints and generation is AUTHORITATIVE — the
+        # engine always (re)computes each generated column from its SQL
+        # expression over the same row, so the invariant holds by
+        # construction on every write path (append, upsert survivors+changes,
+        # UPDATE of a source column, CDC apply), a caller-supplied value is
+        # simply overwritten, and no write-time validation scan is needed.
+        # Computed BEFORE bucket attach / partitionBy so generated columns
+        # can drive the layout (Delta's generated-column partitioning, the
+        # date_trunc pattern).
+        gen = (
+            dict(generated_columns)
+            if generated_columns is not None
+            else prev.get("generated_columns", {})
+        )
+        if gen:
+            from pyspark.sql import functions as F
 
-        df = zorder_by(df, cb_spec)
-    # Column mapping (Delta name-mode): data files, path components and
-    # the stats/bloom planes speak PHYSICAL names; everything above
-    # this point spoke logical.  The mapping is a table property that
-    # rides every commit like constraints.  A column re-added after a
-    # ``drop_column`` gets a FRESH physical name — old files still hold
-    # dead data under the tombstoned one, which must read as NULL, not
-    # as resurrected values.
-    cmap = dict(prev.get("column_mapping") or {})
-    dropped = list(prev.get("dropped_physical") or [])
-    if cmap or dropped:
-        prev_names = {
-            f["name"] for f in (prev.get("schema") or {}).get("fields", [])
-        }
-        taken = set(cmap.values())
-        for fld in df.schema.fields:
-            if fld.name in cmap or fld.name in prev_names:
-                continue
-            # a NEW logical column whose identity physical name is a
-            # tombstone (re-add after drop) or another column's
-            # physical (its logical name was renamed away) — either way
-            # old files hold UNRELATED data under that name
-            if fld.name in dropped or fld.name in taken:
-                cmap[fld.name] = f"{fld.name}_r{uuid.uuid4().hex[:8]}"
-    if cmap:
-        from pyspark.sql import functions as F
+            for n, e in gen.items():
+                df = df.withColumn(n, F.expr(e))
+        # IDENTITY columns (Delta GENERATED BY DEFAULT AS IDENTITY): rows
+        # arriving with NULL in an identity column get fresh ids from the
+        # manifest's high-water mark; non-NULL values pass through — which
+        # is exactly what carried-row rewrites, upsert survivors and UPDATE
+        # pre-images produce, so every write path composes for free and
+        # only genuinely NEW rows consume ids.  Assignment is DETERMINISTIC
+        # (ids = start + step × running count, ranked by the spec's
+        # ``order_by`` key within the commit) and fully parallel — the
+        # range-partition prefix-sum numbering of
+        # ``operators/ids.py::assign_contiguous_ids``, never a global
+        # ROW_NUMBER funnel.  Like Delta, BY DEFAULT does not police
+        # uniqueness of user-supplied values.
+        ident = (
+            {k: dict(v) for k, v in identity_columns.items()}
+            if identity_columns is not None
+            else {k: dict(v) for k, v in prev.get("identity_columns", {}).items()}
+        )
+        if ident:
+            from pyspark.sql import functions as F
 
-        df_w = df.select(
-            [F.col(c).alias(cmap.get(c, c)) for c in df.columns]
+            if bad := sorted(set(ident) & set(gen)):
+                raise ValueError(
+                    f"identity column(s) {bad} are also generated columns; "
+                    "generation would overwrite every assigned id"
+                )
+            for name, sp in ident.items():
+                ob = sp.get("order_by")
+                if not ob:
+                    raise ValueError(
+                        f"identity column {name!r}: spec needs 'order_by' "
+                        "(a unique key among inserted rows) — deterministic "
+                        "assignment is the contract"
+                    )
+                start = int(sp.get("start", 1))
+                step = int(sp.get("step", 1))
+                if step == 0:
+                    raise ValueError(f"identity column {name!r}: step must be nonzero")
+                assigned = int(sp.get("assigned", 0))
+                if name not in df.columns:
+                    df = df.withColumn(name, F.lit(None).cast("long"))
+                else:
+                    df = df.withColumn(name, F.col(name).cast("long"))
+                need = df.filter(F.col(name).isNull())
+                from ..operators.ids import assign_contiguous_ids
+
+                # the numbering's own per-partition count collect reports
+                # n_null (with_count) — one job less per identity commit
+                # than the old separate need.count() pre-flight
+                ranked, n_null = assign_contiguous_ids(
+                    need.drop(name),
+                    list(ob),
+                    id_col="__ident_rank",
+                    with_count=True,
+                )
+                if n_null:
+                    numbered = ranked.withColumn(
+                        name,
+                        (
+                            F.lit(start)
+                            + F.lit(step)
+                            * (F.lit(assigned) + F.col("__ident_rank"))
+                        ).cast("long"),
+                    ).drop("__ident_rank")
+                    df = df.filter(F.col(name).isNotNull()).unionByName(
+                        numbered.select(*df.columns)
+                    )
+                    sp["assigned"] = assigned + n_null
+                ident[name] = {
+                    "start": start,
+                    "step": step,
+                    "order_by": list(ob),
+                    "assigned": sp.get("assigned", assigned),
+                }
+        # Narrow arrival on a hash-indexed column (int data appended to a
+        # committed-long column, the legal type-widening dual): bloom masks
+        # and bucket ids hash the PHYSICAL type, and Spark's murmur3 hashes
+        # int and long of the same value differently — left as-is, a reader
+        # probing with the committed wide type would silently MISS the new
+        # files (false negatives).  Zone maps compare values and stay
+        # exact; the hashed layouts need writer and reader to hash the same
+        # type, so incoming hashed columns are UPCAST to the committed type
+        # before bucket attach / write.  Only the narrow→wide direction is
+        # cast here: a WIDER arrival is left alone so the widening guard
+        # below still refuses it (a downcast would silently truncate).
+        _will_carry = (
+            carry_files
+            if carry_files is not None
+            else (prev["files"] if mode == "append" else [])
         )
-        pb_w = [cmap.get(c, c) for c in pb]
-    else:
-        df_w, pb_w = df, pb
-    data_dir = Path(path) / "data" / uuid.uuid4().hex
-    writer = df_w.write.mode("error")
-    if max_records_per_file:
-        # write-time file sizing (the other half of the small-files
-        # problem compaction fixes after the fact): cap rows per file
-        # so one wide task can't emit a multi-GB file
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    if pb_w:
-        writer = writer.partitionBy(*pb_w)
-    writer.parquet(str(data_dir))
-    new_files = sorted(
-        str(p.relative_to(path))
-        for p in data_dir.rglob("*.parquet")
-        if p.is_file()
-    )
-    files = list(carry_files) + new_files
-    schema = df.schema.jsonValue()
-    # the hidden materialized-row-id column never joins the committed
-    # schema (it IS in the parquet of rewrite-written files; readers
-    # add it explicitly via keep_row_ids)
-    materialized_ids = _ROWID_COL in df.columns
-    if (
-        materialized_ids or _ROWCV_COL in df.columns
-    ) and not _row_tracking_on(prev):
-        raise ValueError(
-            f"{_ROWID_COL!r}/{_ROWCV_COL!r} are reserved column names "
-            "(row tracking); rename the column"
-        )
-    if materialized_ids:
-        schema = {
-            **schema,
-            "fields": [
-                f
-                for f in schema["fields"]
-                if f["name"] not in (_ROWID_COL, _ROWCV_COL)
-            ],
-        }
-    if carry_files and prev.get("schema"):
-        schema = _merge_schemas(
-            prev["schema"], schema, allow_type_widening=allow_type_widening
-        )
-        # a widened column's committed bloom masks / bucket assignments
-        # hash the NARROW physical values — Spark hashes int and long of
-        # the same value differently, so a widened probe would silently
-        # MISS files (false negatives).  Zone maps compare values, not
-        # hashes, and stay exact; the hash-indexed layouts must refuse.
-        changed = {
-            f["name"]
-            for f, p in zip(schema["fields"], prev["schema"]["fields"])
-            if f["name"] == p["name"] and f["type"] != p["type"]
-        }
-        if changed:
-            hashed = set(bspec["cols"] if bspec else []) | (
+        if _will_carry and prev.get("schema"):
+            from pyspark.sql import functions as F
+
+            _committed = {
+                f["name"]: f["type"]
+                for f in prev["schema"]["fields"]
+                if isinstance(f["type"], str)
+            }
+            _hashed = set(bspec["cols"] if bspec else []) | (
                 {bb[0]} if bb else set()
             )
-            bad = sorted(changed & hashed)
+            for _fld in df.schema.fields:
+                _t = _committed.get(_fld.name)
+                _in = _fld.dataType.jsonValue()
+                if (
+                    _fld.name in _hashed
+                    and _t is not None
+                    and _in != _t
+                    and _widened(_t, _in) == _t
+                ):
+                    df = df.withColumn(_fld.name, F.col(_fld.name).cast(_t))
+        if bb:
+            df = _attach_bucket(df, bb)
+            pb = pb + [_BUCKET_COL]
+        if bspec:
+            bad = [c for c in bspec["cols"] if c in pb]
             if bad:
                 raise ValueError(
-                    f"type widening refused for {bad}: the column(s) "
-                    "back a hash-indexed layout (bloom index / hash "
-                    "buckets) whose committed masks hash the narrow "
-                    "type; rebuild via overwrite or compact first"
+                    f"bloom_by columns {bad} are partition/bucket columns — "
+                    "their [v, v] zone-map ranges already prune exactly"
                 )
-    new_stats, new_meta = _harvest(path, new_files)
-    # The commit's new-row count comes from the parquet FOOTERS the
-    # stats harvest just read (md.num_rows is authoritative) — not a
-    # second Spark scan of everything the write produced; only an
-    # unreadable footer (no "rows" entry) falls back to the re-read.
-    if new_files and all("rows" in new_meta.get(f, {}) for f in new_files):
-        n_new = sum(int(new_meta[f]["rows"]) for f in new_files)
-    else:
-        n_new = (
-            df.sparkSession.read.parquet(str(data_dir)).count()
-            if new_files
-            else 0
+        if carry_files is None:
+            carry_files = prev["files"] if mode == "append" else []
+        constraints = prev.get("constraints", {})
+        if constraints:
+            # persisted CHECK constraints gate every commit's NEW rows
+            # (carried files were validated when they were new)
+            _validate_constraints(df, constraints, f"{mode} write")
+        if cb_spec and mode != "compact":
+            # compact manages its own layout (it z-orders the selected
+            # rows by the spec already, with the bin count it chose) —
+            # re-clustering here would just repeat the range shuffle
+            from ..operators.layout import zorder_by
+
+            df = zorder_by(df, cb_spec)
+        # Column mapping (Delta name-mode): data files, path components and
+        # the stats/bloom planes speak PHYSICAL names; everything above
+        # this point spoke logical.  The mapping is a table property that
+        # rides every commit like constraints.  A column re-added after a
+        # ``drop_column`` gets a FRESH physical name — old files still hold
+        # dead data under the tombstoned one, which must read as NULL, not
+        # as resurrected values.
+        cmap = dict(prev.get("column_mapping") or {})
+        dropped = list(prev.get("dropped_physical") or [])
+        if cmap or dropped:
+            prev_names = {
+                f["name"] for f in (prev.get("schema") or {}).get("fields", [])
+            }
+            taken = set(cmap.values())
+            for fld in df.schema.fields:
+                if fld.name in cmap or fld.name in prev_names:
+                    continue
+                # a NEW logical column whose identity physical name is a
+                # tombstone (re-add after drop) or another column's
+                # physical (its logical name was renamed away) — either way
+                # old files hold UNRELATED data under that name
+                if fld.name in dropped or fld.name in taken:
+                    cmap[fld.name] = f"{fld.name}_r{uuid.uuid4().hex[:8]}"
+        if cmap:
+            from pyspark.sql import functions as F
+
+            df_w = df.select(
+                [F.col(c).alias(cmap.get(c, c)) for c in df.columns]
+            )
+            pb_w = [cmap.get(c, c) for c in pb]
+        else:
+            df_w, pb_w = df, pb
+        data_dir = Path(path) / "data" / uuid.uuid4().hex
+        writer = df_w.write.mode("error")
+        if max_records_per_file:
+            # write-time file sizing (the other half of the small-files
+            # problem compaction fixes after the fact): cap rows per file
+            # so one wide task can't emit a multi-GB file
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        if pb_w:
+            writer = writer.partitionBy(*pb_w)
+        writer.parquet(str(data_dir))
+        new_files = sorted(
+            str(p.relative_to(path))
+            for p in data_dir.rglob("*.parquet")
+            if p.is_file()
         )
-    # Stamp each new file's COMMIT VERSION into its meta entry: the
-    # initial-default read path decides "file predates column C" by
-    # comparing this against the default's since-version (files with no
-    # stamp are legacy = pre-default by construction).  Kept exact
-    # across commit races — the rebase bumps it to the version that
-    # actually commits.
-    for f in new_files:
-        new_meta.setdefault(f, {})["v"] = (vs[-1] + 1) if vs else 1
-    # Row tracking: append-written files get a base_row_id (implicit
-    # ids, zero storage); rewrite-written files carry materialized ids
-    # and the verb reports how many FRESH ids it drew (upsert inserts).
-    track = _row_tracking_on(prev)
-    rid_consumed = int(row_ids_consumed or 0)
-    hw0 = int(prev.get("row_id_high_water") or 0) if track else 0
-    if track and not materialized_ids:
-        nb = hw0
+        files = list(carry_files) + new_files
+        schema = df.schema.jsonValue()
+        # the hidden materialized-row-id column never joins the committed
+        # schema (it IS in the parquet of rewrite-written files; readers
+        # add it explicitly via keep_row_ids)
+        materialized_ids = _ROWID_COL in df.columns
+        if (
+            materialized_ids or _ROWCV_COL in df.columns
+        ) and not _row_tracking_on(prev):
+            raise ValueError(
+                f"{_ROWID_COL!r}/{_ROWCV_COL!r} are reserved column names "
+                "(row tracking); rename the column"
+            )
+        if materialized_ids:
+            schema = {
+                **schema,
+                "fields": [
+                    f
+                    for f in schema["fields"]
+                    if f["name"] not in (_ROWID_COL, _ROWCV_COL)
+                ],
+            }
+        if carry_files and prev.get("schema"):
+            schema = _merge_schemas(
+                prev["schema"], schema, allow_type_widening=allow_type_widening
+            )
+            # a widened column's committed bloom masks / bucket assignments
+            # hash the NARROW physical values — Spark hashes int and long of
+            # the same value differently, so a widened probe would silently
+            # MISS files (false negatives).  Zone maps compare values, not
+            # hashes, and stay exact; the hash-indexed layouts must refuse.
+            changed = {
+                f["name"]
+                for f, p in zip(schema["fields"], prev["schema"]["fields"])
+                if f["name"] == p["name"] and f["type"] != p["type"]
+            }
+            if changed:
+                hashed = set(bspec["cols"] if bspec else []) | (
+                    {bb[0]} if bb else set()
+                )
+                bad = sorted(changed & hashed)
+                if bad:
+                    raise ValueError(
+                        f"type widening refused for {bad}: the column(s) "
+                        "back a hash-indexed layout (bloom index / hash "
+                        "buckets) whose committed masks hash the narrow "
+                        "type; rebuild via overwrite or compact first"
+                    )
+        new_stats, new_meta = _harvest(path, new_files)
+        # The commit's new-row count comes from the parquet FOOTERS the
+        # stats harvest just read (md.num_rows is authoritative) — not a
+        # second Spark scan of everything the write produced; only an
+        # unreadable footer (no "rows" entry) falls back to the re-read.
+        if new_files and all("rows" in new_meta.get(f, {}) for f in new_files):
+            n_new = sum(int(new_meta[f]["rows"]) for f in new_files)
+        else:
+            n_new = (
+                df.sparkSession.read.parquet(str(data_dir)).count()
+                if new_files
+                else 0
+            )
+        # Stamp each new file's COMMIT VERSION into its meta entry: the
+        # initial-default read path decides "file predates column C" by
+        # comparing this against the default's since-version (files with no
+        # stamp are legacy = pre-default by construction).  Kept exact
+        # across commit races — the rebase bumps it to the version that
+        # actually commits.
         for f in new_files:
-            new_meta[f]["brid"] = nb
-            nb += int(new_meta[f].get("rows") or 0)
-        rid_consumed = nb - hw0
-    if pb:
-        for rel in new_files:
-            for name, v in _partition_values(rel, schema, cmap).items():
-                if v is not None:
-                    new_stats.setdefault(rel, {})[
-                        cmap.get(name, name)
-                    ] = [v, v]
-    prev_stats = prev.get("file_stats", {})
-    prev_meta = prev.get("file_meta", {})
-    file_stats = {
-        **{f: prev_stats[f] for f in carry_files if f in prev_stats},
-        **new_stats,
-    }
-    file_meta = {
-        **{f: prev_meta[f] for f in carry_files if f in prev_meta},
-        **new_meta,
-    }
-    # Bloom indexes ride per-file like stats: carried files keep their
-    # committed masks verbatim, new files get one extra scan per bloom
-    # column (NEW data only — the unchanged portion costs zero I/O here
-    # too).  A false positive only costs an extra file open, and DV'd
-    # rows staying in a mask is harmless for the same reason.
-    prev_blooms = prev.get("bloom") or {}
-    blooms = {f: prev_blooms[f] for f in carry_files if f in prev_blooms}
-    if bspec and new_files:
-        blooms.update(
-            _build_blooms(df.sparkSession, path, new_files, bspec, cmap)
+            new_meta.setdefault(f, {})["v"] = (vs[-1] + 1) if vs else 1
+        # Row tracking: append-written files get a base_row_id (implicit
+        # ids, zero storage); rewrite-written files carry materialized ids
+        # and the verb reports how many FRESH ids it drew (upsert inserts).
+        track = _row_tracking_on(prev)
+        rid_consumed = int(row_ids_consumed or 0)
+        hw0 = int(prev.get("row_id_high_water") or 0) if track else 0
+        if track and not materialized_ids:
+            nb = hw0
+            for f in new_files:
+                new_meta[f]["brid"] = nb
+                nb += int(new_meta[f].get("rows") or 0)
+            rid_consumed = nb - hw0
+        if pb:
+            for rel in new_files:
+                for name, v in _partition_values(rel, schema, cmap).items():
+                    if v is not None:
+                        new_stats.setdefault(rel, {})[
+                            cmap.get(name, name)
+                        ] = [v, v]
+        prev_stats = prev.get("file_stats", {})
+        prev_meta = prev.get("file_meta", {})
+        file_stats = {
+            **{f: prev_stats[f] for f in carry_files if f in prev_stats},
+            **new_stats,
+        }
+        file_meta = {
+            **{f: prev_meta[f] for f in carry_files if f in prev_meta},
+            **new_meta,
+        }
+        # Bloom indexes ride per-file like stats: carried files keep their
+        # committed masks verbatim, new files get one extra scan per bloom
+        # column (NEW data only — the unchanged portion costs zero I/O here
+        # too).  A false positive only costs an extra file open, and DV'd
+        # rows staying in a mask is harmless for the same reason.
+        prev_blooms = prev.get("bloom") or {}
+        blooms = {f: prev_blooms[f] for f in carry_files if f in prev_blooms}
+        if bspec and new_files:
+            blooms.update(
+                _build_blooms(df.sparkSession, path, new_files, bspec, cmap)
+            )
+        # NDV registers ride per-file exactly like bloom masks: carried
+        # files keep their committed sidecar refs, new files get one extra
+        # register scan (NEW data only)
+        prev_ndv = prev.get("ndv") or {}
+        ndv_plane = {f: prev_ndv[f] for f in carry_files if f in prev_ndv}
+        if nspec and new_files:
+            ndv_plane.update(
+                _build_ndv(df.sparkSession, path, new_files, nspec, cmap)
+            )
+        # Shallow-clone lineage: carried files keep their source-table base
+        # (zero-copy); every rewrite lands locally, so mutation gradually
+        # materializes the clone and compact()/overwrite completes it.
+        prev_fb = prev.get("file_base") or {}
+        file_base = {f: prev_fb[f] for f in carry_files if f in prev_fb}
+        # Delete vectors ride with the files they address: a carried file
+        # keeps its DV'd positions (the DV parquet keys rows by immutable
+        # (file, pos), so entries for rewritten/dropped files go dead
+        # harmlessly); a commit that carries no DV'd file drops the DV set —
+        # overwrite and compact therefore materialize outstanding deletes.
+        prev_dv_counts = prev.get("dv_counts") or {}
+        dv_counts = {
+            f: prev_dv_counts[f] for f in carry_files if f in prev_dv_counts
+        }
+        dv_files_c, dv_covers_c = _carry_dv_files(prev, dv_counts)
+        if dv_counts:  # carried DV parquet files keep their base too
+            for f in dv_files_c:
+                if f in prev_fb:
+                    file_base[f] = prev_fb[f]
+        carried_rows = (
+            prev["row_count"]
+            if mode == "append"
+            else sum(
+                _file_rows(path, f, prev_meta, prev_fb) for f in carry_files
+            )
+            - sum(dv_counts.values())
         )
-    # NDV registers ride per-file exactly like bloom masks: carried
-    # files keep their committed sidecar refs, new files get one extra
-    # register scan (NEW data only)
-    prev_ndv = prev.get("ndv") or {}
-    ndv_plane = {f: prev_ndv[f] for f in carry_files if f in prev_ndv}
-    if nspec and new_files:
-        ndv_plane.update(
-            _build_ndv(df.sparkSession, path, new_files, nspec, cmap)
-        )
-    # Shallow-clone lineage: carried files keep their source-table base
-    # (zero-copy); every rewrite lands locally, so mutation gradually
-    # materializes the clone and compact()/overwrite completes it.
-    prev_fb = prev.get("file_base") or {}
-    file_base = {f: prev_fb[f] for f in carry_files if f in prev_fb}
-    # Delete vectors ride with the files they address: a carried file
-    # keeps its DV'd positions (the DV parquet keys rows by immutable
-    # (file, pos), so entries for rewritten/dropped files go dead
-    # harmlessly); a commit that carries no DV'd file drops the DV set —
-    # overwrite and compact therefore materialize outstanding deletes.
-    prev_dv_counts = prev.get("dv_counts") or {}
-    dv_counts = {
-        f: prev_dv_counts[f] for f in carry_files if f in prev_dv_counts
-    }
-    dv_files_c, dv_covers_c = _carry_dv_files(prev, dv_counts)
-    if dv_counts:  # carried DV parquet files keep their base too
-        for f in dv_files_c:
-            if f in prev_fb:
-                file_base[f] = prev_fb[f]
-    carried_rows = (
-        prev["row_count"]
-        if mode == "append"
-        else sum(
-            _file_rows(path, f, prev_meta, prev_fb) for f in carry_files
-        )
-        - sum(dv_counts.values())
-    )
+    except BaseException:
+        # a failure between submitting the feed side job and joining
+        # it must not leave the job running against inputs the
+        # caller unpersists, nor its output orphaned in _change_data/
+        if cdf_future is not None:
+            _abandon_cdf(cdf_future, path)
+        raise
+
     import time
 
     if cdf_future is not None:
@@ -5931,12 +5940,35 @@ def _write_cdf(feed: DataFrame, path: str, cmap: dict) -> list[str]:
             ]
         )
     rel_dir = f"_change_data/{uuid.uuid4().hex}"
-    feed.write.mode("error").parquet(str(Path(path) / rel_dir))
+    try:
+        feed.write.mode("error").parquet(str(Path(path) / rel_dir))
+    except BaseException:
+        import shutil
+
+        shutil.rmtree(Path(path) / rel_dir, ignore_errors=True)
+        raise
     return sorted(
         str(p.relative_to(path))
         for p in (Path(path) / rel_dir).rglob("*.parquet")
         if p.is_file()
     )
+
+
+def _abandon_cdf(fut, path: str) -> None:
+    """Settle the CDF side job of a commit that failed before joining
+    it: cancel it if it has not started, else wait for it and remove
+    the ``_change_data/`` directory it wrote.  Its own error is dropped
+    — the commit's error is the one the caller re-raises."""
+    import shutil
+
+    if fut.cancel():
+        return
+    try:
+        files = fut.result()
+    except BaseException:  # noqa: BLE001 — _write_cdf cleans up itself
+        return
+    for d in {Path(f).parts[:2] for f in files}:
+        shutil.rmtree(Path(path).joinpath(*d), ignore_errors=True)
 
 
 def set_not_null(spark: SparkSession, path: str, column: str) -> int:

@@ -64,8 +64,7 @@ across restarts.  ON BY DEFAULT: the Python DS API hides the query's
 checkpointLocation, so the floor defaults to a per-query-shape dir
 under ``<table>/_stream_offsets/`` (see ``__init__`` for why sharing
 one is loss/duplicate-free); ``offsetTrackingLocation`` overrides the
-location (one dir per query, like ``checkpointLocation`` —
-``drain_versioned_changes`` sets one beside its checkpoint) and
+location (one dir per query, like ``checkpointLocation``) and
 ``offsetTrackingLocation=none`` opts out entirely.  A query whose
 CHECKPOINT is behind an inherited floor (a second query with the same
 option shape, or a deliberately reset checkpoint) gets the gap as ONE
@@ -76,7 +75,7 @@ offset, the double-restart duplicate window the floor closes), so
 ``error`` / ``silent``.  ``initialOffsetFromFloor=true`` makes a
 FRESH query start AT the floor instead of replaying below it — for
 explicit per-query tracking dirs that ARE the query's own delivery
-record (the replication helpers set it).  With
+record.  With
 ``Trigger.AvailableNow`` the engine snapshots ONE end offset per run,
 so a capped stream drains exactly one capped batch per availableNow
 run (re-run to continue — each run picks up where the checkpoint
@@ -369,9 +368,8 @@ class VersionedChangesStreamReader(DataSourceStreamReader):
         # planning past the head would make the engine checkpoint
         # versions that don't exist yet (skipping their future rows).
         # ``offsetTrackingLocation=none`` opts out (in-memory floor
-        # only — the pre-r15 documented divergence);
-        # ``drain_versioned_changes`` still sets an explicit
-        # per-checkpoint location, which is strictly sharper.
+        # only — the pre-r15 documented divergence); an explicit
+        # per-query location is strictly sharper.
         self._floor: dict | None = None
         self._track_offsets: Path | None = None
         ol = options.get("offsetTrackingLocation")
@@ -460,9 +458,8 @@ class VersionedChangesStreamReader(DataSourceStreamReader):
         # a FRESH query (no engine checkpoint) START at the floor
         # instead of replaying from the beginning — correct exactly
         # when the tracking dir is this query's own delivery record
-        # (an explicit per-query location, e.g. the replication
-        # helpers' cursor beside their checkpoint, where the floor may
-        # have been advanced by the batch-mode fast path).
+        # (an explicit per-query location, e.g. a drain/replicate
+        # cursor beside its checkpoint, which those verbs advance).
         self._floor_seed = dict(self._floor) if self._floor else None
         pol = str(options.get("floorJumpPolicy", "warn")).strip().lower()
         if pol not in ("warn", "error", "silent"):
@@ -1220,40 +1217,41 @@ def register(spark) -> None:
     spark.dataSource.register(VersionedChangesDataSource)
 
 
-def _parse_offset(s):
-    """The engine surfaces the Python DS offset as either JSON or a
-    Python-dict repr, depending on the progress serialization path."""
-    import ast as _ast
-    import json as _json
-
-    try:
-        out = _json.loads(s)
-    except ValueError:
-        return _ast.literal_eval(s)
-    return _parse_offset(out) if isinstance(out, str) else out
-
-
 def _plan_append_slice(
     path: str,
-    lo: int,
+    start: dict,
     tgt: int,
     vs: list[int],
     max_files: int | None,
     max_bytes: int | None,
     skip_change: bool,
-) -> tuple[int, list[tuple[int, dict, list[str]]]]:
-    """One capped APPEND slice ``(lo, hi]`` for the batch drain: walk
+) -> tuple[dict, list[tuple[dict, list[str]]]]:
+    """One capped APPEND slice from the cursor offset ``start``: walk
     surviving manifests (append diffs accumulate across survivors, so
     tag+vacuum gaps are fine — the same walk the streaming source
-    does), collecting each append commit's new data files until a cap
-    is reached.  Metadata-only commits pass; non-append commits raise
+    does), collecting each append commit's new data files in the
+    manifest's order until a cap is reached.  The cap may close the
+    slice INSIDE a commit: the end offset is then the stream reader's
+    sub-commit form ``{"version": V, "file_index": K}`` (K of V's new
+    files delivered), and a ``start`` of that form resumes after the
+    K-th file.  The byte cap is soft — every slice takes at least one
+    file.  Only a commit diffed against its direct predecessor ``V-1``
+    is split, so every partial offset names a diff base a resume can
+    re-read.  Metadata-only commits pass; non-append commits raise
     unless ``skip_change`` (the streaming source's contract).  Returns
-    ``(hi, [(v, manifest, new_files), ...])``."""
+    ``(end, [(manifest, files), ...])``."""
+    sv = int(start["version"])
+    skip = int(start.get("file_index") or 0)
+    lo = sv - 1 if skip else sv
+    prev_v = lo
     prev = _read_manifest(path, lo) if lo in vs else {"files": []}
     files = 0
     nbytes = 0
-    hi = lo
-    out: list[tuple[int, dict, list[str]]] = []
+    end = {"version": lo}
+    out: list[tuple[dict, list[str]]] = []
+    capped = lambda: (max_files is not None and files >= max_files) or (
+        max_bytes is not None and nbytes >= max_bytes
+    )
     for v in [x for x in vs if lo < x <= tgt]:
         m = _read_manifest(path, v)
         pf = set(prev.get("files") or [])
@@ -1263,9 +1261,9 @@ def _plan_append_slice(
             prev.get("dv_files") or []
         ) and (m.get("dv_counts") or {}) == (prev.get("dv_counts") or {})
         is_first = v == vs[0]
-        prev = m
+        splittable = prev_v == v - 1
+        prev, prev_v, end = m, v, {"version": v}
         if not is_first and not new and not removed and dv_same:
-            hi = v
             continue  # metadata-only commit
         if not (m.get("mode") in _APPEND_MODES or is_first):
             if not skip_change:
@@ -1275,49 +1273,89 @@ def _plan_append_slice(
                     "cannot represent row changes; set "
                     "skip_change_commits=True to ignore them"
                 )
-            hi = v
             continue
         fm = m.get("file_meta") or {}
-        out.append((v, m, new))
-        files += len(new)
-        nbytes += sum(
-            (fm.get(x, {}) or {}).get("bytes", 0) or 0 for x in new
-        )
-        hi = v
-        if (max_files is not None and files >= max_files) or (
-            max_bytes is not None and nbytes >= max_bytes
-        ):
+        take: list[str] = []
+        out.append((m, take))
+        for i in range(skip if v == sv else 0, len(new)):
+            take.append(new[i])
+            files += 1
+            nbytes += (fm.get(new[i], {}) or {}).get("bytes", 0) or 0
+            if splittable and i + 1 < len(new) and capped():
+                return {"version": v, "file_index": i + 1}, out
+        if capped():
             break
-    return hi, out
+    return end, out
 
 
-def _drain_batch(
+def _slice_tag(off: dict, start: bool) -> str:
+    """The slice-name key of a cursor offset: a whole-version start
+    names the first version it covers, a sub-commit offset its version
+    and file index."""
+    v = int(off["version"])
+    k = off.get("file_index")
+    if k is not None:
+        return f"v{v:06d}f{int(k):06d}"
+    return f"v{v + 1 if start else v:06d}"
+
+
+def drain_versioned_changes(
     spark,
     path: str,
     sink_path: str,
     checkpoint: str,
     *,
-    build,
-    sink_format: str,
-    max_files: int | None,
-    max_bytes: int | None,
-    skip_change: bool,
-    max_runs: int,
-    change_feed: bool,
+    build=None,
+    sink_format: str = "parquet",
+    max_files_per_trigger: int | None = None,
+    max_bytes_per_trigger: int | None = None,
+    skip_change_commits: bool = False,
+    max_runs: int = 10000,
+    extra_options: dict | None = None,
 ) -> int:
-    """The BATCH engine of ``drain_versioned_changes``: capped slices
-    written to ``sink_path`` as SLICE-KEYED files through the shared
-    cursor — each slice lands under deterministic names
-    (``slice-v<from>-v<to>-<i>``) after deleting any same-slice
-    leftovers, so a crash between write and cursor advance re-runs the
-    slice into the same names and converges (idempotent), matching the
-    stream engine's end-to-end exactly-once without its per-run JVM
-    startup.  A slice is the commits' new APPEND files, or with
-    ``change_feed`` the ``read_change_feed`` rows of a slice planned by
-    ``_plan_feed_slice`` (replicate's planner).  ``build`` must be a
-    stateless per-row/projection transform (the same restriction
-    foreachBatch imposes).  Returns the number of slices that landed
-    rows."""
+    """Drain a versioned table's FULL backlog in one call into
+    ``sink_path`` — the semantics Delta gives
+    ``trigger(availableNow=True)`` under admission control, run as
+    batch jobs: no streaming query, no Python-worker read.  Slices are
+    planned from the manifests alone (``_plan_append_slice``) and each
+    is written by one batch job under deterministic file names
+    (``slice-<start>-<end>-<i>``, keyed by the full start offset), then
+    a cursor file beside ``checkpoint`` advances — a crash re-runs the
+    slice into the same names and converges: exactly-once end to end.
+    Returns the number of slices that landed rows.
+
+    ``max_files_per_trigger`` / ``max_bytes_per_trigger`` cap a slice
+    and may split a commit (the cursor then holds the stream reader's
+    ``{"version": V, "file_index": K}`` sub-commit offset, which a
+    later call resumes — also one a capped streaming drain left).  The
+    byte cap is soft: every slice takes at least one file.  A fresh
+    drain of an ever-vacuumed table first lands the earliest surviving
+    snapshot, like the stream reader's bootstrap.  ``build`` runs per
+    slice and must be a stateless projection/filter.
+
+    ``extra_options={"readChangeFeed": "true"}`` lands the change feed
+    (``read_change_feed`` rows: table columns plus ``_change_type`` and
+    ``_commit_version``) instead of appended rows; change-feed slices
+    are commit-granular (a commit larger than the cap forms one slice).
+    ``readChangeFeed`` is the only option taken — the other reader
+    options belong to ``spark.readStream.format("versioned_changes")``
+    itself."""
+    _refuse_metadata_sink(sink_path)
+    change_feed = False
+    for k, v in (extra_options or {}).items():
+        if str(k).lower() != "readchangefeed":
+            raise ValueError(
+                f"drain_versioned_changes: option {k!r} is a streaming-"
+                "reader option; read with spark.readStream.format("
+                '"versioned_changes") to use it'
+            )
+        change_feed = str(v).lower() == "true"
+    if change_feed and skip_change_commits:
+        raise ValueError(
+            "drain_versioned_changes: readChangeFeed and "
+            "skip_change_commits are contradictory — one demands "
+            "row changes, the other ignores them"
+        )
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -1327,21 +1365,22 @@ def _drain_batch(
 
     cur_dir = Path(checkpoint) / "_vc_cursor"
 
-    def _write_slice(df, lo: int, hi: int) -> int:
+    def _write_slice(df, start: dict, end: dict) -> int:
         if build is not None:
             df = build(df)
-        # leftovers clear by START version only: a crash before the
+        # leftovers clear by START offset only: a crash before the
         # cursor advance followed by new commits replans the same start
-        # with a LARGER hi, and an exact-prefix clear would orphan the
-        # crashed attempt's files as duplicates — any file starting at
-        # lo+1 is an attempt at THIS slice (ranges partition the
-        # version axis as the cursor advances)
+        # with a LARGER end, and an exact-range clear would orphan the
+        # crashed attempt's files as duplicates — any file keyed by
+        # this start is an attempt at THIS slice (slices partition the
+        # offset axis as the cursor advances)
+        tag = _slice_tag(start, True)
         return _land_slice(
             df,
             sink_path,
             sink_format,
-            f"slice-v{lo + 1:06d}-v{hi:06d}-",
-            clear_glob=f"slice-v{lo + 1:06d}-v*",
+            f"slice-{tag}-{_slice_tag(end, False)}-",
+            clear_glob=f"slice-{tag}-v*",
         )
 
     def _align(df, fields, m: dict, head_cmap: dict):
@@ -1367,20 +1406,20 @@ def _drain_batch(
         if not vs:
             return runs
         tgt = vs[-1]
-        cur = _cursor_read(cur_dir / "cursor.json")
-        if _is_partial(cur):
-            # a capped STREAM drain left a PARTIAL offset: the sink
-            # already holds part of that commit as flat stream files,
-            # so a commit-granular re-delivery would duplicate rows —
-            # refuse instead of guessing
+        cur = _cursor_read(cur_dir / "cursor.json") or {"version": 0}
+        partial = cur.get("file_index") is not None
+        if cur.get("snapshot_start") or (change_feed and partial):
+            # a capped streaming run left an offset inside the bootstrap
+            # snapshot or inside a change-feed commit: neither planner
+            # slices those, and a whole re-delivery would duplicate the
+            # prefix the sink already holds
             raise ValueError(
-                "drain_versioned_changes: the checkpoint holds a "
-                f"partial streaming offset {cur}; finish the capped "
-                "drain with engine='stream' before switching to the "
-                "batch engine"
+                "drain_versioned_changes: the checkpoint holds offset "
+                f"{cur}, which the slice planner cannot resume; drain "
+                "into a fresh sink and checkpoint"
             )
-        lo = 0 if cur is None else int(cur["version"])
-        if lo >= tgt:
+        lo = int(cur["version"])
+        if lo >= tgt and not partial:
             return runs
         # emit every slice under the HEAD commit's visible schema (the
         # field-list vintage a fresh stream would declare)
@@ -1405,26 +1444,31 @@ def _drain_batch(
                     "_change_type", F.lit("insert")
                 ).withColumn("_commit_version", F.lit(vs[0]).cast("long"))
             snap = _align(snap, fields, _read_manifest(path, vs[0]), head_cmap)
-            runs += bool(_write_slice(snap, 0, vs[0]))
-            _cursor_advance(cur_dir, vs[0])
+            end = {"version": vs[0]}
+            runs += bool(_write_slice(snap, cur, end))
+            _cursor_advance(cur_dir, end)
             continue
-        if 0 < lo and lo not in vs:
-            # a cursor whose own manifest was vacuumed — below the
-            # earliest survivor OR inside a tag+vacuum interior gap.
-            # Either way the delivered prefix is unreconstructable:
-            # diffing the next survivor against an older one would
-            # re-deliver files committed before the cursor.
+        base = lo - 1 if partial else lo
+        if (0 < base and base not in vs) or (partial and lo not in vs):
+            # a cursor whose own manifest (or, mid-commit, its diff
+            # base) was vacuumed — below the earliest survivor OR inside
+            # a tag+vacuum interior gap.  Either way the delivered
+            # prefix is unreconstructable: diffing against an older
+            # survivor would re-deliver files committed before the
+            # cursor.
             raise ValueError(
-                f"drain_versioned_changes: the drain cursor v{lo} "
+                f"drain_versioned_changes: the drain cursor {cur} "
                 f"references a vacuumed manifest (have {vs}) at "
                 f"{path} — the delivered prefix is unreconstructable; "
                 "restart from a fresh checkpoint"
             )
         if change_feed:
             hi, n_files = _plan_feed_slice(
-                path, lo, tgt, vs, max_files, max_bytes,
+                path, lo, tgt, vs,
+                max_files_per_trigger, max_bytes_per_trigger,
                 helper="drain_versioned_changes",
             )
+            end = {"version": hi}
             frames = []
             if n_files:  # 0: metadata/compact-only commits, no rows
                 frames.append(
@@ -1436,324 +1480,22 @@ def _drain_batch(
                     )
                 )
         else:
-            hi, cms = _plan_append_slice(
-                path, lo, tgt, vs, max_files, max_bytes, skip_change
+            end, cms = _plan_append_slice(
+                path, cur, tgt, vs, max_files_per_trigger,
+                max_bytes_per_trigger, skip_change_commits,
             )
             frames = [
                 _align(_read_files(spark, path, new, m), fields, m, head_cmap)
-                for _v, m, new in cms
+                for m, new in cms
                 if new
             ]
         if frames:
             slice_df = reduce(lambda a, b: a.unionByName(b), frames)
-            runs += bool(_write_slice(slice_df, lo, hi))
-        _cursor_advance(cur_dir, hi)
+            runs += bool(_write_slice(slice_df, cur, end))
+        _cursor_advance(cur_dir, end)
     raise RuntimeError(
         f"drain_versioned_changes: backlog at {path} not drained in "
         f"{max_runs} slices (cap too small for the commit rate?)"
-    )
-
-
-def drain_versioned_changes(
-    spark,
-    path: str,
-    sink_path: str,
-    checkpoint: str,
-    *,
-    build=None,
-    sink_format: str = "parquet",
-    output_mode: str = "append",
-    max_files_per_trigger: int | None = None,
-    max_bytes_per_trigger: int | None = None,
-    skip_change_commits: bool = False,
-    max_runs: int = 10000,
-    extra_options: dict | None = None,
-    engine: str = "auto",
-) -> int:
-    """Drain a versioned table's FULL backlog in one call into
-    ``sink_path`` — the semantics Delta gives
-    ``trigger(availableNow=True)`` under admission control.  Every
-    slice lands under deterministic slice-keyed file names through a
-    cursor file beside ``checkpoint``, so a crash re-runs the slice
-    into the same names and converges: exactly-once end to end.  With
-    ``extra_options={"readChangeFeed": "true"}`` the sink receives the
-    change feed (``read_change_feed`` rows: table columns plus
-    ``_change_type`` and ``_commit_version``) instead of appended rows.
-    Returns the number of slices / micro-batches that landed rows.
-
-    ``engine`` picks how:
-
-    - ``"batch"`` — slices planned from the manifests alone
-      (``_plan_append_slice``, or ``_plan_feed_slice`` for the change
-      feed) and written by one batch job each: no streaming query and
-      no Python-worker read.  Caps close at COMMIT granularity (a
-      commit larger than the cap forms one slice), ``output_mode``
-      must be ``append``, ``readChangeFeed`` is the only reader option
-      it takes, and ``build`` must be a stateless projection/filter.
-      A fresh drain of an ever-vacuumed table first lands the earliest
-      surviving snapshot (as ``insert`` rows at that version in
-      change-feed mode), like the stream reader's bootstrap.
-    - ``"stream"`` — ONE continuously-triggered micro-batch query over
-      the ``versioned_changes`` source against the checkpoint, blocking
-      until it has caught up to the head (``processAllAvailable``).
-      Caps split a commit (sub-commit offsets), every reader option in
-      ``extra_options`` applies, and ``build`` may be any streaming
-      transform.  The Python DataSource API exposes no availableNow
-      hook (one availableNow run of a capped stream delivers ONE capped
-      micro-batch — module docstring), hence the running trigger.  A
-      run that neither delivers rows nor advances the offset while the
-      head is unreached raises instead of spinning.
-    - ``"auto"`` (default) — ``batch``, unless the call needs something
-      only the stream engine provides: a reader option other than
-      ``readChangeFeed``, an ``output_mode`` other than ``append``, a
-      per-trigger cap (only the stream engine splits a commit), a
-      ``build`` callable (the batch engine cannot prove it stateless),
-      or a partial ``file_index``/``snapshot_start`` offset left in the
-      cursor by a capped stream run.  Any of these picks ``stream``.
-
-    Both engines share the cursor, so they interleave: a batch run
-    clears the Spark checkpoint's engine state, and the next stream
-    run starts AT the cursor."""
-    if engine not in ("auto", "stream", "batch"):
-        raise ValueError(
-            "drain_versioned_changes: engine must be one of "
-            f"auto/batch/stream, got {engine!r}"
-        )
-    _refuse_metadata_sink(sink_path)
-    change_feed = False
-    reader_opts = {}
-    for k, v in (extra_options or {}).items():
-        if str(k).lower() == "readchangefeed":
-            change_feed = str(v).lower() == "true"
-        else:
-            reader_opts[k] = v
-    if engine == "auto":
-        needs_stream = (
-            reader_opts
-            or output_mode != "append"
-            or max_files_per_trigger is not None
-            or max_bytes_per_trigger is not None
-            or build is not None
-            or _is_partial(
-                _cursor_read(Path(checkpoint) / "_vc_cursor" / "cursor.json")
-            )
-        )
-        engine = "stream" if needs_stream else "batch"
-    if engine == "batch":
-        if output_mode != "append":
-            raise ValueError(
-                "drain_versioned_changes: engine='batch' drains "
-                "append-mode only (stateful output modes need the "
-                "streaming engine)"
-            )
-        if reader_opts:
-            raise ValueError(
-                "drain_versioned_changes: extra_options other than "
-                "readChangeFeed are streaming-reader options — use "
-                "engine='stream' with them"
-            )
-        if change_feed and skip_change_commits:
-            raise ValueError(
-                "drain_versioned_changes: readChangeFeed and "
-                "skip_change_commits are contradictory — one demands "
-                "row changes, the other ignores them"
-            )
-        runs = _drain_batch(
-            spark,
-            path,
-            sink_path,
-            checkpoint,
-            build=build,
-            sink_format=sink_format,
-            max_files=max_files_per_trigger,
-            max_bytes=max_bytes_per_trigger,
-            skip_change=skip_change_commits,
-            max_runs=max_runs,
-            change_feed=change_feed,
-        )
-        _wipe_engine_checkpoint(checkpoint)
-        return runs
-    register(spark)
-    reader = (
-        spark.readStream.format("versioned_changes").option("path", path)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if max_bytes_per_trigger is not None:
-        reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
-    if skip_change_commits:
-        reader = reader.option("skipChangeCommits", "true")
-    # each drain CALL constructs a fresh reader against the same engine
-    # checkpoint — the restart case every call; tracking the committed
-    # offset beside the checkpoint makes each call seed at the boundary
-    # (no regression dance, no empty batches, restart-safe).  The
-    # per-checkpoint cursor IS this query's delivery record, so a
-    # fresh/reset engine checkpoint (including after a batch-engine
-    # backfill) starts AT the cursor instead of re-delivering rows the
-    # sink already holds.
-    reader = reader.option(
-        "offsetTrackingLocation", str(Path(checkpoint) / "_vc_cursor")
-    ).option("initialOffsetFromFloor", "true")
-    for k, v in (extra_options or {}).items():
-        reader = reader.option(k, str(v))
-
-    # foreachBatch with batch-keyed slice names instead of the file
-    # sink: a batch replay rewrites the SAME names (exactly-once), and
-    # there is no _spark_metadata log to hide the batch engine's slice
-    # files from batch readers — the two engines share one sink layout,
-    # so a batch backfill can hand over to this streaming tail.  The
-    # scope carries the checkpoint's WIPE INCARNATION: after a
-    # batch-engine run resets the engine state, batch ids restart at 0,
-    # and an unchanged scope would make the new batch 0's pre-delete
-    # erase the previous incarnation's batch-0 slice from the sink.
-    from ..streaming.sinks import _txn_scope
-
-    inc = _sink_incarnation(checkpoint)
-    scope = _txn_scope(checkpoint) + (f"i{inc}" if inc else "")
-    landed_ids: set[int] = set()
-
-    def _land(batch_df, batch_id):
-        # _land_slice returns 0 for a batch with no rows, so an empty
-        # batch is not counted.  Counting by BATCH ID instead of a bare
-        # counter keeps the returned count exact when a stop() races a
-        # mid-flight batch and the outer loop's next query replays it
-        # (the slice rewrite is idempotent; the count must be too).
-        if _land_slice(
-            batch_df,
-            sink_path,
-            sink_format,
-            f"slice-b{scope}-{batch_id:06d}-",
-        ):
-            landed_ids.add(batch_id)
-
-    def start_sink(df):
-        if build is not None:
-            df = build(df)
-        return (
-            df.writeStream.foreachBatch(_land)
-            .option("checkpointLocation", checkpoint)
-            .outputMode(output_mode)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-
-    return _capped_drain_loop(
-        path,
-        reader,
-        start_sink,
-        None,
-        max_runs,
-        "drain_versioned_changes",
-        cursor_dir=Path(checkpoint) / "_vc_cursor",
-        delivered=lambda: len(landed_ids),
-    )
-
-
-def _capped_drain_loop(
-    src_path: str,
-    reader,
-    start_sink,
-    ending_version: int | None,
-    max_runs: int,
-    helper: str,
-    cursor_dir: Path | None = None,
-    delivered=None,
-) -> int:
-    """The shared drain loop of ``drain_versioned_changes`` /
-    ``replicate_versioned_changes`` (stream engine): ONE running
-    micro-batch query (``start_sink(reader.load())`` →
-    ``processAllAvailable`` → ``stop``) drains the whole backlog as a
-    sequence of capped micro-batches, until the committed end offset
-    reaches the TARGET — ``ending_version`` capped at the head as of
-    the run (a bound past the head is 'drain everything available',
-    not an error), or the head itself when unbounded.  Raises on
-    genuine no-progress and on the iteration cap; returns the number
-    of micro-batches that delivered data.
-
-    Until r16 this looped one ``availableNow`` run per capped batch —
-    the Python DS API's availableNow fallback snapshots ONE end offset
-    per run, so an N-batch backlog paid N JVM streaming-query startups
-    (~2-3.5 s each, SF-independent — measured in OPTIMIZATION_r16.md).
-    A running ``processingTime`` trigger delivers the same capped
-    batches (the caps bound each ``latestOffset`` step, exactly as in
-    the running-stream query q266) through the same checkpoint with
-    the same batch ids — so the sink's batch-keyed slice names, the
-    exactly-once replay story and the returned count are unchanged —
-    for ONE startup.  The outer loop survives a commit racing the
-    drain's tail: a rare second query picks up the remainder.
-
-    ``cursor_dir``: the shared cursor file is advanced DRIVER-SIDE to
-    the run's committed end offset — the engine never invokes the
-    reader's ``commit()`` for the final batch before ``stop()``, so
-    without this the cursor file would lag the engine checkpoint and a
-    batch-engine handover would re-deliver from the beginning.
-
-    ``delivered``: zero-arg callable returning the cumulative count of
-    non-empty batches the sink landed (maintained by the caller's
-    foreachBatch).  ``recentProgress`` keeps only the last ~100
-    entries, so a long single-query drain needs the sink's own count
-    to report an exact total."""
-    data_runs = 0
-    last_end: dict | None = None
-    for _ in range(max_runs):
-        before = delivered() if delivered is not None else 0
-        q = start_sink(reader.load())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        q.awaitTermination()
-        progressed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if delivered is not None:
-            data_runs += delivered() - before
-            progressed = progressed or (delivered() > before)
-        else:
-            data_runs += len(progressed)
-        ends = [
-            p["sources"][0]["endOffset"]
-            for p in q.recentProgress
-            if p.get("sources")
-        ]
-        end = _parse_offset(ends[-1]) if ends else None
-        if end is not None and cursor_dir is not None:
-            _cursor_advance(cursor_dir, end)
-        vs = versions(src_path)
-        head = vs[-1] if vs else 0
-        tgt = head if ending_version is None else min(ending_version, head)
-        if end is not None and end.get("version") == tgt and (
-            "file_index" not in end
-        ):
-            return data_runs  # drained through the target as of this run
-        if not progressed:
-            if end is None or end == last_end:
-                if not vs:
-                    return data_runs  # nothing committed yet
-                raise RuntimeError(
-                    f"{helper}: no progress at offset {end} with "
-                    f"target v{tgt} at {src_path}"
-                )
-        last_end = end
-    raise RuntimeError(
-        f"{helper}: backlog at {src_path} not drained in {max_runs} "
-        f"runs (cap too small for the commit rate?)"
-    )
-
-
-def _cdc_op_frame(ch, F):
-    """Shared feed→I/U/D transform of both replication engines:
-    preimages drop, the remaining change types map to the
-    ``versioned_apply_changes`` op column."""
-    return (
-        ch.filter(F.col("_change_type") != "update_preimage")
-        .withColumn(
-            "op",
-            F.when(F.col("_change_type") == "delete", F.lit("D"))
-            .when(
-                F.col("_change_type") == "update_postimage", F.lit("U")
-            )
-            .otherwise(F.lit("I")),
-        )
-        .drop("_change_type")
     )
 
 
@@ -1762,8 +1504,8 @@ def _okey_off(off: dict) -> tuple:
 
 
 def _cursor_read(cur_file: Path) -> dict | None:
-    """The shared cursor file (the streaming engine's offset floor):
-    None for absent/corrupt."""
+    """The drain/replicate cursor file (the stream reader's offset-floor
+    format): None for absent/corrupt."""
     import json as _json
 
     try:
@@ -1771,14 +1513,6 @@ def _cursor_read(cur_file: Path) -> dict | None:
     except (OSError, ValueError):
         return None
     return c if isinstance(c, dict) and "version" in c else None
-
-
-def _is_partial(cur: dict | None) -> bool:
-    """A cursor a capped stream run left INSIDE a commit (or inside the
-    bootstrap snapshot) — only the stream engine can resume it."""
-    return cur is not None and (
-        cur.get("file_index") is not None or bool(cur.get("snapshot_start"))
-    )
 
 
 def _cursor_advance(cur_dir: Path, off: int | dict) -> None:
@@ -1810,12 +1544,11 @@ def _land_slice(
     names: write to a temp dir, delete leftovers matching
     ``clear_glob`` (default: same-prefix files — a previous attempt's
     partial slice), then move each file to ``<prefix><i><ext>``.  A
-    replay of the same slice — batch-engine re-run after a crash, or a
-    foreachBatch batch replay — rewrites the same names and converges:
-    sink-side exactly-once without a ``_spark_metadata`` transaction
-    log (whose presence makes batch reads IGNORE files the log doesn't
-    list — the reason both drain engines share this layout instead of
-    the streaming file sink).  Returns the number of files landed.
+    re-run of the same slice after a crash rewrites the same names and
+    converges: sink-side exactly-once without a ``_spark_metadata``
+    transaction log (whose presence makes batch reads IGNORE files the
+    log doesn't list — the reason the drain uses this layout instead
+    of the streaming file sink).  Returns the number of files landed.
     Part files that hold no rows are dropped — Spark writes one
     zero-row part file for an empty frame — so an empty slice lands
     nothing and returns 0, without a separate ``isEmpty()`` job."""
@@ -1858,7 +1591,7 @@ def _has_rows(part: Path, sink_format: str) -> bool:
 
 
 def _refuse_metadata_sink(sink_path: str) -> None:
-    """Both drain engines write slice-keyed plain files; a sink
+    """The drain writes slice-keyed plain files; a sink
     carrying a streaming file-sink ``_spark_metadata`` log would hide
     them from batch readers (reads through such a log IGNORE unlisted
     files) — refuse rather than land invisible rows."""
@@ -1871,35 +1604,6 @@ def _refuse_metadata_sink(sink_path: str) -> None:
             "invisible — drain into a fresh sink directory (or remove "
             "_spark_metadata after verifying no orphan part files)"
         )
-
-
-def _sink_incarnation(checkpoint: str) -> int:
-    """How many times this checkpoint's engine state has been wiped —
-    part of the stream drain's slice-name scope, because batch ids
-    restart at 0 after a wipe and an unchanged scope would make the
-    new batch 0's pre-delete erase a previous incarnation's slice."""
-    try:
-        return int(
-            (Path(checkpoint) / "_vc_cursor" / "incarnation").read_text()
-        )
-    except (OSError, ValueError):
-        return 0
-
-
-def _wipe_engine_checkpoint(checkpoint: str) -> None:
-    """After a batch-engine run the cursor file is the source of truth;
-    clear the Spark streaming checkpoint's engine state so a following
-    stream run starts fresh and (via initialOffsetFromFloor) AT the
-    cursor instead of re-delivering the batch-applied window.  Bumps
-    the sink incarnation so the next stream run's restarted batch ids
-    land under fresh slice names (see ``_sink_incarnation``)."""
-    import shutil
-
-    for sub in ("offsets", "commits", "metadata", "sources", "state"):
-        shutil.rmtree(Path(checkpoint) / sub, ignore_errors=True)
-    d = Path(checkpoint) / "_vc_cursor"
-    d.mkdir(parents=True, exist_ok=True)
-    (d / "incarnation").write_text(str(_sink_incarnation(checkpoint) + 1))
 
 
 def _plan_feed_slice(
@@ -1918,8 +1622,9 @@ def _plan_feed_slice(
     compact/metadata commits) and stop at the first version where a
     cap is reached.  Commit-granular: a single commit larger than the
     cap still forms a slice (the soft-cap rule — progress beats the
-    bound, same as the streaming source's at-least-one-file rule,
-    minus its sub-commit splitting).  Returns ``(hi, files)``; raises
+    bound), because ``read_change_feed(lo, hi)`` reads whole versions
+    and a keyed apply collapses a slice per key.  Returns
+    ``(hi, files)``; raises
     on a mid-range vacuum hole, naming the calling verb ``helper``
     (the feed contract — a silent gap would deliver wrong rows)."""
     missing = [g for g in range(lo + 1, tgt + 1) if g not in vs]
@@ -1989,30 +1694,93 @@ def _plan_feed_slice(
     return hi, files
 
 
-def _replicate_batch(
+def replicate_versioned_changes(
     spark,
     src: str,
     dst: str,
     checkpoint: str,
-    keys: list[str],
+    key_cols: list[str] | tuple[str, ...],
     *,
-    max_files: int | None,
-    max_bytes: int | None,
-    ending_version: int | None,
-    guard: bool,
-    allow_evo: bool,
-    max_runs: int,
+    max_files_per_trigger: int | None = None,
+    max_bytes_per_trigger: int | None = None,
+    ending_version: int | None = None,
+    guard_concurrent_target: bool = True,
+    allow_schema_evolution: bool = False,
+    catalog=None,
+    max_runs: int = 10000,
 ) -> int:
-    """The BATCH engine of ``replicate_versioned_changes``: contiguous
-    ``read_change_feed`` slices applied through the SAME cursor file
-    the streaming engine's offset floor uses — identical end state and
-    at-least-once/idempotent-apply guarantee, without paying one JVM
-    streaming-query startup (~3-6 s, SF-independent) per capped
-    micro-batch.  Per slice: plan (metadata-only walk, O(admitted
-    files)), read the feed, keyed apply as ONE commit, then durably
-    advance the cursor — a crash between apply and advance re-applies
-    one slice, which keyed I/U/D application converges under (the same
-    at-least-once contract foreachBatch gives the streaming engine)."""
+    """END-TO-END CDC REPLICATION (Delta's "CDF → MERGE" pattern):
+    follow ``src``'s change feed and apply it to the versioned table
+    ``dst`` through ``versioned_apply_changes`` — the composed workload
+    the two halves exist for: a versioned table as CDC *source* feeding
+    a versioned table as CDC *target*, keyed, rate-capped, restart-safe,
+    and bounded if asked.
+
+    Runs as contiguous ``read_change_feed`` slices through a cursor
+    file beside ``checkpoint`` — batch jobs only, no streaming query.
+    Per slice: plan (``_plan_feed_slice``, a metadata-only walk; caps
+    close at COMMIT granularity, so a commit larger than the cap forms
+    one slice), read the feed, keyed apply as ONE commit, then durably
+    advance the cursor.  ``update_preimage`` rows drop, the remaining
+    feed rows map to I/U/D (insert / update_postimage / delete), and
+    ``seq_col="_commit_version"`` collapses a multi-commit slice to the
+    LAST change per key — so one slice spanning an update and a later
+    delete of the same key applies the delete.  A crash between apply
+    and advance re-applies one slice; re-applying a keyed I/U/D slice
+    is state-idempotent on ``dst`` (an extra commit, never divergent
+    rows), the guarantee level of Delta's own foreachBatch-merge
+    replication recipe.  Every call resumes from the cursor, so
+    re-invoking is the restart.  A fresh replica of an ever-vacuumed
+    source bootstraps from the earliest surviving snapshot.
+
+    ``guard_concurrent_target=True`` passes each apply
+    ``source_version`` = the ``dst`` head it merged against, so a
+    concurrent writer landing on ``dst`` between slices turns silent
+    divergence into a clean ``ConcurrentCommitError`` (Iceberg's
+    validateFromSnapshot applied to replication).
+
+    ``ending_version`` bounds the replication — backfill ``dst``
+    through a fixed ``src`` version and stop (the point-in-time clone
+    shape); without it the call stops at ``src``'s head.  Returns the
+    number of slices that applied changes (a slice whose commits carry
+    no change files — metadata/compact-only — applies nothing and does
+    not count).
+
+    ``allow_schema_evolution=True`` lets the replica FOLLOW source
+    schema evolution: feed slices read under the source's committed
+    schema (pre-evolution change files read NULL for later columns,
+    exactly like the batch reader), and each apply may add the new
+    columns to ``dst``.  Without it, a widened slice refuses at the
+    apply — the honest default, since silently dropping a new column
+    would diverge the replica.
+
+    ``catalog`` (a ``catalog.VersionedCatalog``) makes ``src``/``dst``
+    NAME-addressable: a registered ``db.table`` resolves to its bound
+    root; an UNREGISTERED ``dst`` name lands at the registry's default
+    path and is registered once replication creates it (the same
+    create-by-name contract as the W5 merge selector).  Strings that
+    don't pass the registry's name validator stay plain paths; a bare
+    relative path that happens to look like a name (``backup.v2``)
+    would be taken as one — spell relative paths with a separator
+    (``./backup.v2``).
+
+    The cursor holds the stream reader's offset format: a
+    ``file_index``/``snapshot_start`` offset a capped streaming run
+    left re-delivers its whole commit (or snapshot) — idempotent."""
+    dst_name: str | None = None
+    if catalog is not None:
+        src = catalog.try_resolve(src) or src
+        resolved = catalog.try_resolve(dst)
+        if resolved is not None:
+            dst = resolved
+        elif "/" not in dst and type(catalog).is_name(dst):
+            # an unregistered db.table name (the registry's validator
+            # is the gate, so 'my-dir.v2' falls through as a path):
+            # create at the default path, register once replication has
+            # created the table.  A bare relative path that HAPPENS to
+            # validate ('backup.v2') is taken as a name — spell relative
+            # destinations with a separator ('./backup.v2').
+            dst_name, dst = dst, catalog.default_path(dst)
     from pyspark.sql import functions as F
 
     from ..sinks.versioned import (
@@ -2020,39 +1788,42 @@ def _replicate_batch(
         read_version,
         versioned_apply_changes,
     )
-    from ..sinks.versioned import versions as _versions
 
+    keys = list(key_cols)
     cur_dir = Path(checkpoint) / "_vc_cursor"
-    cur_file = cur_dir / "cursor.json"
-    _read_cursor = lambda: _cursor_read(cur_file)
-    _advance = lambda v: _cursor_advance(cur_dir, v)
 
     def _apply(ch) -> None:
         # no isEmpty pre-flight: the planner only sends slices whose
         # commits carry change files (n_files > 0), so the extra Spark
         # job would re-prove what the manifests already say
         sv = None
-        if guard:
-            dvs = _versions(dst)
+        if guard_concurrent_target:
+            dvs = versions(dst)
             sv = dvs[-1] if dvs else None
+        ops = ch.filter(F.col("_change_type") != "update_preimage").withColumn(
+            "op",
+            F.when(F.col("_change_type") == "delete", F.lit("D"))
+            .when(F.col("_change_type") == "update_postimage", F.lit("U"))
+            .otherwise(F.lit("I")),
+        )
         versioned_apply_changes(
-            _cdc_op_frame(ch, F),
+            ops.drop("_change_type"),
             dst,
             keys,
             op_col="op",
             seq_col="_commit_version",
             source_version=sv,
-            allow_schema_evolution=allow_evo,
+            allow_schema_evolution=allow_schema_evolution,
         )
 
     data_runs = 0
     for _ in range(max_runs):
         vs = versions(src)
         if not vs:
-            return data_runs
+            break
         head = vs[-1]
         tgt = head if ending_version is None else min(ending_version, head)
-        cur = _read_cursor()
+        cur = _cursor_read(cur_dir / "cursor.json")
         if cur is not None and cur.get("snapshot_start"):
             # a capped STREAMING run left a partial bootstrap mark:
             # commit granularity redoes the whole snapshot (idempotent
@@ -2068,7 +1839,7 @@ def _replicate_batch(
         else:
             lo = int(cur["version"])
         if lo >= tgt:
-            return data_runs
+            break
         if lo < vs[0] - 1 or (0 < lo < vs[0]):
             if lo == 0:
                 # nothing delivered yet and the early history is
@@ -2090,7 +1861,7 @@ def _replicate_batch(
                 )
                 _apply(snap)
                 data_runs += 1
-                _advance(boot)
+                _cursor_advance(cur_dir, boot)
                 continue
             raise ValueError(
                 f"replicate_versioned_changes: the replication cursor "
@@ -2100,246 +1871,20 @@ def _replicate_batch(
                 "from a snapshot"
             )
         hi, n_files = _plan_feed_slice(
-            src, lo, tgt, vs, max_files, max_bytes
+            src, lo, tgt, vs, max_files_per_trigger, max_bytes_per_trigger
         )
-        if n_files == 0:
-            _advance(hi)  # metadata/compact-only commits: no rows
-            continue
-        _apply(read_change_feed(spark, src, lo, hi))
-        data_runs += 1
-        _advance(hi)
-    raise RuntimeError(
-        f"replicate_versioned_changes: backlog at {src} not drained in "
-        f"{max_runs} slices (cap too small for the commit rate?)"
-    )
-
-
-def replicate_versioned_changes(
-    spark,
-    src: str,
-    dst: str,
-    checkpoint: str,
-    key_cols: list[str] | tuple[str, ...],
-    *,
-    max_files_per_trigger: int | None = None,
-    max_bytes_per_trigger: int | None = None,
-    ending_version: int | None = None,
-    guard_concurrent_target: bool = True,
-    allow_schema_evolution: bool = False,
-    catalog=None,
-    max_runs: int = 10000,
-    extra_options: dict | None = None,
-    engine: str = "auto",
-) -> int:
-    """END-TO-END CDC REPLICATION (Delta's "CDF → MERGE" pattern):
-    follow ``src``'s change feed as a ``readChangeFeed`` stream and
-    apply every micro-batch to the versioned table ``dst`` through
-    ``versioned_apply_changes`` inside ``foreachBatch`` — the composed
-    workload the two halves exist for: a versioned table as CDC
-    *source* feeding a versioned table as CDC *target*, keyed, rate-
-    capped, restart-safe, and bounded if asked.
-
-    Loop shape is ``drain_versioned_changes``'s: one running
-    micro-batch query per call drains the backlog as capped
-    micro-batches against ONE shared engine checkpoint — every CALL is
-    a fresh reader instance, i.e. the restart case by construction,
-    with the (default-on) persisted offset floor keeping capped offsets
-    exact across calls.  Per batch: ``update_preimage`` rows drop, the
-    remaining feed rows map to I/U/D (insert / update_postimage /
-    delete), and ``seq_col="_commit_version"`` collapses multi-commit
-    batches to the LAST change per key — so one batch spanning an
-    update and a later delete of the same key applies the delete.
-    foreachBatch is at-least-once on engine retry; re-applying a keyed
-    I/U/D batch is state-idempotent on ``dst`` (an extra commit, never
-    divergent rows), which is exactly the guarantee level Delta's own
-    foreachBatch-merge replication recipe documents.
-
-    ``guard_concurrent_target=True`` passes each apply
-    ``source_version`` = the ``dst`` head it merged against, so a
-    concurrent writer landing on ``dst`` between batches turns silent
-    divergence into a clean ``ConcurrentCommitError`` (Iceberg's
-    validateFromSnapshot applied to replication).
-
-    ``ending_version`` bounds the replication — backfill ``dst``
-    through a fixed ``src`` version and stop (the point-in-time clone
-    shape); without it the loop stops at ``src``'s head as of the
-    final run.  Returns the number of runs that delivered data —
-    precisely (r16+): distinct micro-batches/slices whose
-    POST-TRANSFORM op frame was non-empty, i.e. batches that actually
-    applied a change to ``dst``; a batch carrying only
-    ``update_preimage`` rows (or rows a ``skipChangeCommits`` reader
-    dropped) applies nothing and does not count, where the pre-r16
-    loop counted any run with ``numInputRows > 0``.
-
-    ``allow_schema_evolution=True`` lets the replica FOLLOW source
-    schema evolution: each availableNow run's fresh reader adopts the
-    source's committed head schema (pre-evolution change files read
-    NULL for later columns, exactly like the batch reader), and the
-    per-batch apply is allowed to add the new columns to ``dst``.
-    Without it, a widened batch refuses at the apply — the honest
-    default, since silently dropping a new column would diverge the
-    replica.
-
-    ``catalog`` (a ``catalog.VersionedCatalog``) makes ``src``/``dst``
-    NAME-addressable: a registered ``db.table`` resolves to its bound
-    root; an UNREGISTERED ``dst`` name lands at the registry's default
-    path and is registered once replication creates it (the same
-    create-by-name contract as the W5 merge selector).  Strings that
-    don't pass the registry's name validator stay plain paths; a bare
-    relative path that happens to look like a name (``backup.v2``)
-    would be taken as one — spell relative paths with a separator
-    (``./backup.v2``).
-
-    ``engine`` picks the execution engine (r16):
-
-    - ``"batch"`` — capped ``read_change_feed`` slices applied through
-      the same ``_vc_cursor`` file (``_replicate_batch``): identical
-      end state, caps honored at COMMIT granularity (a single commit
-      larger than the cap forms one slice — the soft-cap rule without
-      the streaming source's sub-commit splitting), and no JVM
-      streaming-query startup per micro-batch — a bounded backfill of
-      N capped batches costs N×(admitted bytes) instead of N×(3-6 s
-      fixed engine overhead).  The return value counts data-delivering
-      SLICES.
-    - ``"stream"`` — the availableNow loop over the
-      ``versioned_changes`` streaming source (the r15 path; sub-commit
-      capped offsets, ``extra_options`` honored).  Its reader sets
-      ``initialOffsetFromFloor``, so a run whose engine checkpoint is
-      fresh (or was reset by a prior batch-engine run) picks up AT the
-      shared cursor instead of re-delivering.
-    - ``"auto"`` (default) — ``batch``, unless ``extra_options`` are
-      given (reader options only the streaming source understands).
-
-    Both engines drive the SAME cursor file, so they interleave
-    safely: a batch run also clears the Spark streaming checkpoint's
-    engine state (the cursor supersedes it; apply is idempotent), and
-    the next stream run starts at the cursor."""
-    if engine not in ("auto", "batch", "stream"):
-        raise ValueError(
-            "replicate_versioned_changes: engine must be one of "
-            f"auto/batch/stream, got {engine!r}"
+        if n_files:  # 0: metadata/compact-only commits, no rows
+            _apply(read_change_feed(spark, src, lo, hi))
+            data_runs += 1
+        _cursor_advance(cur_dir, hi)
+    else:
+        raise RuntimeError(
+            f"replicate_versioned_changes: backlog at {src} not drained "
+            f"in {max_runs} slices (cap too small for the commit rate?)"
         )
-    if engine == "batch" and extra_options:
-        raise ValueError(
-            "replicate_versioned_changes: extra_options are streaming-"
-            "reader options — use engine='stream' (or 'auto') with them"
-        )
-    if engine == "auto":
-        engine = "stream" if extra_options else "batch"
-    dst_name: str | None = None
-    if catalog is not None:
-        src = catalog.try_resolve(src) or src
-        resolved = catalog.try_resolve(dst)
-        if resolved is not None:
-            dst = resolved
-        elif "/" not in dst and type(catalog).is_name(dst):
-            # an unregistered db.table name (the registry's validator
-            # is the gate, so 'my-dir.v2' falls through as a path):
-            # create at the default path, register once replication has
-            # created the table.  A bare relative path that HAPPENS to
-            # validate ('backup.v2') is taken as a name — spell relative
-            # destinations with a separator ('./backup.v2').
-            dst_name, dst = dst, catalog.default_path(dst)
-    from pyspark.sql import functions as F
-
-    from ..sinks.versioned import versioned_apply_changes
-    from ..sinks.versioned import versions as _versions
-
-    keys = list(key_cols)
-    if engine == "batch":
-        runs = _replicate_batch(
-            spark,
-            src,
-            dst,
-            checkpoint,
-            keys,
-            max_files=max_files_per_trigger,
-            max_bytes=max_bytes_per_trigger,
-            ending_version=ending_version,
-            guard=guard_concurrent_target,
-            allow_evo=allow_schema_evolution,
-            max_runs=max_runs,
-        )
-        _wipe_engine_checkpoint(checkpoint)
-        if dst_name is not None and _versions(dst):
-            catalog.register(dst_name, dst)
-        return runs
-
-    register(spark)
-
-    applied_ids: set[int] = set()
-
-    def _apply(bdf, batch_id):
-        ch = _cdc_op_frame(bdf, F)
-        if ch.isEmpty():
-            return
-        sv = None
-        if guard_concurrent_target:
-            dvs = _versions(dst)
-            sv = dvs[-1] if dvs else None
-        versioned_apply_changes(
-            ch,
-            dst,
-            keys,
-            op_col="op",
-            seq_col="_commit_version",
-            source_version=sv,
-            allow_schema_evolution=allow_schema_evolution,
-        )
-        # counted by BATCH ID, post-apply: a stop() racing a mid-flight
-        # batch makes the outer loop's next query replay the same id —
-        # the keyed apply converges, and the set keeps the returned
-        # count exact across the replay.  Semantics (r16+): a run
-        # "delivered data" when its post-transform op frame is
-        # non-empty — a batch holding only update_preimage rows (or
-        # rows dropped by skipChangeCommits) applies nothing and does
-        # not count.
-        applied_ids.add(batch_id)
-
-    reader = (
-        spark.readStream.format("versioned_changes")
-        .option("path", src)
-        .option("readChangeFeed", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if max_bytes_per_trigger is not None:
-        reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
-    if ending_version is not None:
-        reader = reader.option("endingVersion", str(ending_version))
-    reader = reader.option(
-        "offsetTrackingLocation", str(Path(checkpoint) / "_vc_cursor")
-    ).option(
-        # the per-checkpoint cursor IS this query's delivery record
-        # (possibly advanced by a prior batch-engine run): a fresh
-        # engine checkpoint starts AT it, never re-delivers below it
-        "initialOffsetFromFloor",
-        "true",
-    )
-    for k, v in (extra_options or {}).items():
-        reader = reader.option(k, str(v))
-
-    def start_sink(df):
-        return (
-            df.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-
-    runs = _capped_drain_loop(
-        src,
-        reader,
-        start_sink,
-        ending_version,
-        max_runs,
-        "replicate_versioned_changes",
-        cursor_dir=Path(checkpoint) / "_vc_cursor",
-        delivered=lambda: len(applied_ids),
-    )
-    if dst_name is not None and _versions(dst):
+    if dst_name is not None and versions(dst):
         catalog.register(dst_name, dst)
-    return runs
+    return data_runs
 
 
 def replicate_database(
@@ -2355,7 +1900,6 @@ def replicate_database(
     ending_versions: dict[str, int] | None = None,
     guard_concurrent_target: bool = True,
     allow_schema_evolution: bool = False,
-    engine: str = "auto",
     max_runs: int = 10000,
 ) -> dict[str, dict]:
     """DATABASE-LEVEL CDC replication — the reference's actual merge
@@ -2413,7 +1957,6 @@ def replicate_database(
                 allow_schema_evolution=allow_schema_evolution,
                 catalog=catalog,
                 max_runs=max_runs,
-                engine=engine,
             )
             path = catalog.resolve(dst_name)
             results[tbl] = {

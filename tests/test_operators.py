@@ -356,6 +356,25 @@ def test_pagerank_mass_conserved_and_hub_wins(spark):
     assert all(got["hub"] > got[s] for s in spokes)
 
 
+def test_pagerank_drops_null_endpoint_edges(spark):
+    """Edges with a NULL endpoint are dropped before the out-weight
+    join: no NULL node appears, a node reachable only through a
+    NULL-source edge is absent, the NULL-destination edge does not
+    dilute its source's out-weight, and the ranks still sum to 1."""
+    import pytest as _pt
+
+    from _spark_multi_format_data_lake_pipeline_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), (None, "d"), ("a", None)],
+        "src string, dst string",
+    )
+    got = {r.node: r.r for r in pagerank(edges, iters=10).collect()}
+    assert set(got) == {"a", "b", "c"}
+    assert sum(got.values()) == _pt.approx(1.0, abs=1e-9)
+    assert all(v == _pt.approx(1 / 3, abs=1e-9) for v in got.values())
+
+
 def test_pagerank_weights_shift_rank(spark):
     """src splits mass 3:1 between b and c -> b must outrank c; the
     unreferenced src holds exactly the teleport share (1-d)/N."""

@@ -1814,14 +1814,12 @@ def test_versioned_changes_available_now_with_cap_drains_per_run(
 
 
 def test_drain_versioned_changes_full_backlog_under_cap(spark, tmp_path):
-    """AvailableNow × rate cap: the Python DS API gives availableNow
-    single-batch semantics (one capped batch per run — the pinned
-    engine behavior), so drain_versioned_changes loops availableNow
-    runs against ONE checkpoint until the stream catches the head —
-    Delta's trigger(availableNow=True)-under-admission-control
-    contract as one call.  A 6-file backlog under a 1-file cap must
-    land in the sink exactly once, and a follow-up commit drains
-    incrementally through the same checkpoint."""
+    """Delta's trigger(availableNow=True)-under-admission-control
+    contract as one call: a 6-file backlog under a 1-file cap drains as
+    6 slices (the cap splits both commits) and lands in the sink
+    exactly once, without starting a streaming query or writing engine
+    offsets; a follow-up commit drains incrementally through the same
+    checkpoint."""
     from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import versioned_write
     from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
         drain_versioned_changes,
@@ -1839,6 +1837,8 @@ def test_drain_versioned_changes_full_backlog_under_cap(spark, tmp_path):
         spark, t, out, ckpt, max_files_per_trigger=1
     )
     assert runs == 6, f"6 files under a 1-file cap -> 6 data runs, got {runs}"
+    assert spark.streams.active == []
+    assert not (tmp_path / "ckpt" / "offsets").exists()
     got = spark.read.schema("id int, v string").parquet(out)
     assert sorted(r["id"] for r in got.collect()) == sorted(
         list(range(12)) + list(range(100, 106))
@@ -1933,16 +1933,13 @@ def test_cdf_partial_offset_survives_vacuumed_diff_base(spark, tmp_path):
     assert dels == [0, 2, 4, 6], "every change row exactly once, no dup"
 
 
-@pytest.mark.parametrize("engine", ["batch", "stream"])
-def test_replicate_versioned_changes_end_to_end(spark, tmp_path, engine):
-    """CDC replication composed end to end (r15; engine matrix r16):
-    the change feed over the source applies every capped batch to a
-    SECOND versioned table via versioned_apply_changes — through
-    restarts (each run resumes from the shared cursor), a bounded
-    backfill phase, and a source vacuum that trims the delivered
-    prefix — and the target's final state equals the source's head
-    snapshot exactly.  Both engines (capped read_change_feed slices /
-    the availableNow streaming loop) must satisfy the same contract."""
+def test_replicate_versioned_changes_end_to_end(spark, tmp_path):
+    """CDC replication composed end to end: the change feed over the
+    source applies every capped slice to a SECOND versioned table via
+    versioned_apply_changes — through restarts (each call resumes from
+    the cursor), a bounded backfill phase, and a source vacuum that
+    trims the delivered prefix — and the target's final state equals
+    the source's head snapshot exactly."""
     from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
         enable_change_data_feed,
         read_version,
@@ -1974,11 +1971,10 @@ def test_replicate_versioned_changes_end_to_end(spark, tmp_path, engine):
     versioned_write(mk([(41, "a41"), (42, "a42")]).coalesce(1), src)  # v5
 
     state = lambda df: sorted((r["id"], r["v"]) for r in df.collect())
-    # phase 1: bounded backfill through v3, capped (forces >= 2 runs,
-    # each one a fresh reader == a restart)
+    # phase 1: bounded backfill through v3, capped (forces >= 2 slices)
     runs1 = replicate_versioned_changes(
         spark, src, dst, ckpt, ["id"],
-        max_files_per_trigger=2, ending_version=3, engine=engine,
+        max_files_per_trigger=2, ending_version=3,
     )
     assert runs1 >= 2, "the cap must split the backfill into several runs"
     assert state(read_version(spark, dst)) == state(
@@ -1989,8 +1985,7 @@ def test_replicate_versioned_changes_end_to_end(spark, tmp_path, engine):
     assert versions(src) == [3, 4, 5]
     # phase 2: same checkpoint, unbounded — catches up to the head
     replicate_versioned_changes(
-        spark, src, dst, ckpt, ["id"], max_files_per_trigger=2,
-        engine=engine,
+        spark, src, dst, ckpt, ["id"], max_files_per_trigger=2
     )
     assert state(read_version(spark, dst)) == state(
         read_version(spark, src)
@@ -2001,8 +1996,7 @@ def test_replicate_versioned_changes_end_to_end(spark, tmp_path, engine):
     dvs = versions(dst)
     assert (
         replicate_versioned_changes(
-            spark, src, dst, ckpt, ["id"], max_files_per_trigger=2,
-            engine=engine,
+            spark, src, dst, ckpt, ["id"], max_files_per_trigger=2
         )
         == 0
     )
@@ -2171,12 +2165,10 @@ def test_replicate_by_name(spark, tmp_path):
 
 
 def test_replicate_batch_engine_no_stream_startup(spark, tmp_path, monkeypatch):
-    """The r16 batch engine: a capped bounded backfill runs as
-    read_change_feed slices through the shared cursor file — NO
-    streaming query ever starts (monkeypatched to prove it), no Spark
-    engine checkpoint is created, and the per-run semantics (data-slice
-    count, bounded-to-v3 state, cursor resume) match the stream
-    engine's contract."""
+    """A capped bounded backfill runs as read_change_feed slices
+    through the cursor file — NO streaming query ever starts
+    (monkeypatched to prove it), no Spark engine checkpoint is created,
+    and the slice count, bounded-to-v3 state and cursor resume hold."""
     import json as jsonlib
 
     from pyspark.sql.streaming import readwriter as stream_rw
@@ -2193,7 +2185,7 @@ def test_replicate_batch_engine_no_stream_startup(spark, tmp_path, monkeypatch):
     )
 
     def _no_start(*a, **k):  # pragma: no cover - failure path
-        raise AssertionError("batch engine must not start a streaming query")
+        raise AssertionError("replication must not start a streaming query")
 
     monkeypatch.setattr(stream_rw.DataStreamWriter, "start", _no_start)
 
@@ -2217,7 +2209,7 @@ def test_replicate_batch_engine_no_stream_startup(spark, tmp_path, monkeypatch):
     assert state(read_version(spark, dst)) == state(
         read_version(spark, src, 3)
     )
-    # the cursor file is the streaming floor file, parked at the bound
+    # the cursor file (the stream reader's floor format), parked at the bound
     cur = jsonlib.loads(
         (tmp_path / "ckpt" / "_vc_cursor" / "cursor.json").read_text()
     )
@@ -2231,71 +2223,6 @@ def test_replicate_batch_engine_no_stream_startup(spark, tmp_path, monkeypatch):
     assert (
         replicate_versioned_changes(spark, src, dst, ckpt, ["id"]) == 0
     ), "a caught-up re-run must deliver nothing"
-    # extra_options are stream-reader options: explicit batch refuses,
-    # auto falls back to the stream engine (which would .start())
-    with pytest.raises(ValueError, match="extra_options"):
-        replicate_versioned_changes(
-            spark, src, dst, ckpt, ["id"], engine="batch",
-            extra_options={"schemaTrackingLocation": str(tmp_path / "st")},
-        )
-    with pytest.raises(ValueError, match="engine"):
-        replicate_versioned_changes(
-            spark, src, dst, ckpt, ["id"], engine="warp"
-        )
-
-
-def test_replicate_engines_interleave(spark, tmp_path):
-    """Engine interleave through ONE checkpoint: stream phase → batch
-    catch-up → stream tail.  The shared cursor file is the source of
-    truth (the batch engine clears the Spark checkpoint's engine state
-    and the stream reader starts AT the floor), so no window is ever
-    re-delivered into the replica and the final state equals the
-    source head."""
-    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
-        enable_change_data_feed,
-        read_version,
-        table_history,
-        versioned_upsert,
-        versioned_write,
-    )
-    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
-        replicate_versioned_changes,
-    )
-
-    src, dst, ckpt = (
-        str(tmp_path / "src"), str(tmp_path / "dst"), str(tmp_path / "ckpt")
-    )
-    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
-    versioned_write(mk([(i, f"v{i}") for i in range(8)]).coalesce(1), src)
-    enable_change_data_feed(src)  # v2
-    versioned_upsert(mk([(1, "u1"), (10, "i10")]), src, ["id"])  # v3
-    # phase 1: STREAM engine through v3
-    replicate_versioned_changes(
-        spark, src, dst, ckpt, ["id"], ending_version=3, engine="stream"
-    )
-    state = lambda df: sorted((r["id"], r["v"]) for r in df.collect())
-    assert state(read_version(spark, dst)) == state(
-        read_version(spark, src, 3)
-    )
-    # phase 2: BATCH engine catches up new commits through the same ckpt
-    versioned_upsert(mk([(2, "u2"), (11, "i11")]), src, ["id"])  # v4
-    replicate_versioned_changes(
-        spark, src, dst, ckpt, ["id"], engine="batch"
-    )
-    assert state(read_version(spark, dst)) == state(read_version(spark, src))
-    n_commits = len(table_history(spark, dst).collect())
-    # phase 3: STREAM engine again — starts at the cursor, re-delivers
-    # nothing (no extra commit on the replica for the caught-up window)
-    versioned_upsert(mk([(3, "u3")]), src, ["id"])  # v5
-    replicate_versioned_changes(
-        spark, src, dst, ckpt, ["id"], engine="stream"
-    )
-    assert state(read_version(spark, dst)) == state(read_version(spark, src))
-    n_after = len(table_history(spark, dst).collect())
-    assert n_after == n_commits + 1, (
-        "the stream tail must apply exactly the one new commit — a "
-        "re-delivered window would add more"
-    )
 
 
 def test_replicate_database_sweep(spark, tmp_path):
@@ -2371,12 +2298,11 @@ def test_replicate_database_sweep(spark, tmp_path):
 
 
 def test_drain_batch_engine(spark, tmp_path):
-    """r16 batch drain: capped append slices land as slice-keyed files
-    through the shared cursor — exactly-once across re-runs and
-    incremental drains, non-append commits refuse unless
-    skip_change_commits, a partial STREAM offset refuses the engine
-    switch (commit-granular re-delivery would duplicate), and a batch
-    backfill hands over to a streaming tail without re-delivery."""
+    """Capped append slices land as slice-keyed files through the
+    cursor — exactly-once across re-runs and incremental drains, a cap
+    splits a commit, non-append commits refuse unless
+    skip_change_commits, and cursors or options the slice planner
+    cannot serve refuse."""
     import json as jsonlib
 
     from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
@@ -2394,9 +2320,9 @@ def test_drain_batch_engine(spark, tmp_path):
     versioned_write(mk([(1, "a"), (2, "b")]).repartition(2), t)  # v1: 2 files
     versioned_write(mk([(3, "c")]).coalesce(1), t)  # v2
     runs = drain_versioned_changes(
-        spark, t, out, ckpt, max_files_per_trigger=1, engine="batch"
+        spark, t, out, ckpt, max_files_per_trigger=1
     )
-    assert runs == 2, "2-file v1 closes slice 1 under the 1-file cap"
+    assert runs == 3, "the 1-file cap splits the 2-file v1, then v2"
     read = lambda: sorted(
         (r["id"], r["v"])
         for r in spark.read.schema("id int, v string").parquet(out).collect()
@@ -2405,50 +2331,46 @@ def test_drain_batch_engine(spark, tmp_path):
     # slice-keyed deterministic names, no Spark engine checkpoint
     names = sorted(p.name for p in (tmp_path / "out").glob("slice-*"))
     assert names and all(n.startswith("slice-v") for n in names)
+    assert any(n.startswith("slice-v000001f000001-") for n in names), (
+        "the sub-commit slice is keyed by its full start offset"
+    )
     assert not (tmp_path / "ckpt" / "offsets").exists()
     assert jsonlib.loads(
         (tmp_path / "ckpt" / "_vc_cursor" / "cursor.json").read_text()
     ) == {"version": 2}
     # caught-up re-drain: 0 runs, sink unchanged
     assert drain_versioned_changes(
-        spark, t, out, ckpt, max_files_per_trigger=1, engine="batch"
+        spark, t, out, ckpt, max_files_per_trigger=1
     ) == 0
     assert read() == [(1, "a"), (2, "b"), (3, "c")]
     # a row-level commit refuses without skip_change_commits
     versioned_upsert(mk([(1, "u1")]), t, ["id"])  # v3
     versioned_write(mk([(4, "d")]).coalesce(1), t)  # v4
     with pytest.raises(ValueError, match="append-only"):
-        drain_versioned_changes(spark, t, out, ckpt, engine="batch")
+        drain_versioned_changes(spark, t, out, ckpt)
     runs2 = drain_versioned_changes(
-        spark, t, out, ckpt, engine="batch", skip_change_commits=True
+        spark, t, out, ckpt, skip_change_commits=True
     )
     assert runs2 == 1
     assert read() == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
-    # handover: more appends drain through the STREAMING tail with no
-    # re-delivery of the batch-drained window
-    versioned_write(mk([(5, "e")]).coalesce(1), t)  # v5
-    drain_versioned_changes(
-        spark, t, out, ckpt, engine="stream", skip_change_commits=True
-    )
-    assert read() == [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")]
-    # a partial STREAM offset refuses the batch engine
+    # offsets inside the bootstrap snapshot, or inside a change-feed
+    # commit, are not resumable by the slice planners
     cur = tmp_path / "ckpt2" / "_vc_cursor"
     cur.mkdir(parents=True)
-    (cur / "cursor.json").write_text('{"version": 1, "file_index": 1}')
-    with pytest.raises(ValueError, match="partial streaming offset"):
+    for off, opts in (
+        ({"version": 0, "file_index": 1, "snapshot_start": True}, None),
+        ({"version": 1, "file_index": 1}, {"readChangeFeed": "true"}),
+    ):
+        (cur / "cursor.json").write_text(jsonlib.dumps(off))
+        with pytest.raises(ValueError, match="cannot resume"):
+            drain_versioned_changes(
+                spark, t, str(tmp_path / "out2"), str(tmp_path / "ckpt2"),
+                extra_options=opts,
+            )
+    # reader options other than readChangeFeed belong to the source
+    with pytest.raises(ValueError, match="readStream"):
         drain_versioned_changes(
-            spark, t, str(tmp_path / "out2"), str(tmp_path / "ckpt2"),
-            engine="batch", skip_change_commits=True,
-        )
-    # build() projections apply per slice; batch refusals validate
-    with pytest.raises(ValueError, match="append-mode"):
-        drain_versioned_changes(
-            spark, t, out, ckpt, engine="batch", output_mode="complete"
-        )
-    with pytest.raises(ValueError, match="extra_options"):
-        drain_versioned_changes(
-            spark, t, out, ckpt, engine="batch",
-            extra_options={"x": "1"},
+            spark, t, out, ckpt, extra_options={"startingVersion": "1"}
         )
 
 
@@ -2478,8 +2400,7 @@ def test_drain_batch_engine_bootstrap_and_build(spark, tmp_path):
     assert versions(t) == [3, 4]
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     runs = drain_versioned_changes(
-        spark, t, out, ckpt, engine="batch",
-        build=lambda df: df.select("id"),
+        spark, t, out, ckpt, build=lambda df: df.select("id")
     )
     assert runs == 2, "bootstrap snapshot + the v4 append"
     got = sorted(
@@ -2492,46 +2413,28 @@ def test_drain_batch_engine_bootstrap_and_build(spark, tmp_path):
     (cur / "cursor.json").write_text('{"version": 1}')
     with pytest.raises(ValueError, match="vacuumed manifest"):
         drain_versioned_changes(
-            spark, t, str(tmp_path / "out2"), str(tmp_path / "ckpt2"),
-            engine="batch",
+            spark, t, str(tmp_path / "out2"), str(tmp_path / "ckpt2")
         )
 
 
 def test_drain_engines_full_interleave_and_crash_recovery(
     spark, tmp_path, monkeypatch
 ):
-    """r16 self-review fixes pinned: (a) stream → batch → stream
-    through one checkpoint keeps EVERY earlier window in the sink (the
-    post-wipe stream run's restarted batch ids land under an
-    incarnation-scoped name, never clobbering the first stream run's
-    slices); (b) a batch-engine crash between slice write and cursor
-    advance, with NEW commits landing before the retry, converges with
-    no duplicates (leftovers clear by slice START, not exact range);
-    (c) a mid-backlog column RENAME drains pre-rename rows under the
-    head's logical name through physical identity, never as NULLs."""
+    """(b) a crash between slice write and cursor advance, with NEW
+    commits landing before the retry, converges with no duplicates
+    (leftovers clear by slice START, not exact range); (c) a
+    mid-backlog column RENAME drains pre-rename rows under the head's
+    logical name through physical identity, never as NULLs."""
     from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
         rename_column,
         versioned_write,
     )
     from _spark_multi_format_data_lake_pipeline_spark.sources import versioned_stream as VS
 
-    # (a) stream -> batch -> stream
-    t, out, ckpt = (
-        str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
     mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
-    versioned_write(mk([(1, "a")]).coalesce(1), t)  # v1
-    VS.drain_versioned_changes(spark, t, out, ckpt, engine="stream")
-    versioned_write(mk([(2, "b")]).coalesce(1), t)  # v2
-    VS.drain_versioned_changes(spark, t, out, ckpt, engine="batch")
-    versioned_write(mk([(3, "c")]).coalesce(1), t)  # v3
-    VS.drain_versioned_changes(spark, t, out, ckpt, engine="stream")
     read = lambda p: sorted(
         (r["id"], r["v"])
         for r in spark.read.schema("id int, v string").parquet(p).collect()
-    )
-    assert read(out) == [(1, "a"), (2, "b"), (3, "c")], (
-        "every window must survive the engine interleave"
     )
     # (b) crash between slice write and cursor advance + new commits
     t2, out2, ckpt2 = (
@@ -2549,9 +2452,9 @@ def test_drain_engines_full_interleave_and_crash_recovery(
 
     monkeypatch.setattr(VS, "_cursor_advance", crashy)
     with pytest.raises(OSError, match="simulated crash"):
-        VS.drain_versioned_changes(spark, t2, out2, ckpt2, engine="batch")
+        VS.drain_versioned_changes(spark, t2, out2, ckpt2)
     versioned_write(mk([(3, "c")]).coalesce(1), t2)  # v2 lands pre-retry
-    VS.drain_versioned_changes(spark, t2, out2, ckpt2, engine="batch")
+    VS.drain_versioned_changes(spark, t2, out2, ckpt2)
     assert read(out2) == [(1, "a"), (2, "b"), (3, "c")], (
         "the crashed slice must be superseded, not duplicated"
     )
@@ -2566,7 +2469,7 @@ def test_drain_engines_full_interleave_and_crash_recovery(
         spark.createDataFrame([(2, "new2")], "id int, w string").coalesce(1),
         t3,
     )  # v3
-    VS.drain_versioned_changes(spark, t3, out3, ckpt3, engine="batch")
+    VS.drain_versioned_changes(spark, t3, out3, ckpt3)
     got = sorted(
         (r["id"], r["w"])
         for r in spark.read.schema("id int, w string").parquet(out3).collect()
@@ -2576,12 +2479,103 @@ def test_drain_engines_full_interleave_and_crash_recovery(
     )
 
 
+def test_drain_sub_commit_slice_crash_retry_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A cap that splits a commit lands SUB-COMMIT slices.  A crash
+    between landing one and advancing the cursor, with a new commit
+    landing before the retry, must leave the sink equal to the table
+    exactly once: the retry replans from the same start offset and its
+    slice replaces the crashed attempt's files."""
+    import json as jsonlib
+
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import versioned_write
+    from _spark_multi_format_data_lake_pipeline_spark.sources import versioned_stream as VS
+
+    t, out, ckpt = (
+        str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    mk = lambda lo, n: spark.createDataFrame(
+        [(lo + i, f"v{lo + i}") for i in range(n)], "id int, v string"
+    )
+    versioned_write(mk(0, 12).repartitionByRange(4, "id"), t)  # v1: 4 files
+    real_advance = VS._cursor_advance
+    calls = {"n": 0}
+
+    def crashy(cur_dir, off):
+        calls["n"] += 1
+        if calls["n"] == 2:  # the second slice landed, cursor not moved
+            raise OSError("simulated crash before cursor advance")
+        real_advance(cur_dir, off)
+
+    monkeypatch.setattr(VS, "_cursor_advance", crashy)
+    with pytest.raises(OSError, match="simulated crash"):
+        VS.drain_versioned_changes(
+            spark, t, out, ckpt, max_files_per_trigger=1
+        )
+    monkeypatch.setattr(VS, "_cursor_advance", real_advance)
+    assert jsonlib.loads(
+        (tmp_path / "ckpt" / "_vc_cursor" / "cursor.json").read_text()
+    ) == {"version": 1, "file_index": 1}, "the crash left a sub-commit cursor"
+    ids = lambda: sorted(
+        r["id"]
+        for r in spark.read.schema("id int, v string").parquet(out).collect()
+    )
+    assert len(ids()) > 3, "the crashed slice's files are in the sink"
+    versioned_write(mk(100, 2).repartition(1), t)  # v2 lands pre-retry
+    runs = VS.drain_versioned_changes(
+        spark, t, out, ckpt, max_files_per_trigger=1
+    )
+    assert runs == 4, "v1's last three files, then v2"
+    assert ids() == list(range(12)) + [100, 101], (
+        "the retried sub-commit slice must replace, not duplicate"
+    )
+
+
+def test_drain_cap_takes_commit_after_vacuum_gap_whole(spark, tmp_path):
+    """A cap splits a commit only when its direct predecessor manifest
+    survives: a sub-commit cursor indexes the new-file list diffed
+    against V-1, so a commit behind a tag+vacuum gap is taken whole
+    (the soft cap) and the drain still converges exactly once."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        create_tag,
+        vacuum,
+        versioned_write,
+        versions,
+    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    t, out, ckpt = (
+        str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    mk = lambda lo, n: spark.createDataFrame(
+        [(lo + i, f"v{lo + i}") for i in range(n)], "id int, v string"
+    )
+    versioned_write(mk(0, 2).coalesce(1), t)  # v1
+    create_tag(t, "anchor", 1)
+    versioned_write(mk(10, 4).repartitionByRange(2, "id"), t)  # v2
+    versioned_write(mk(20, 4).repartitionByRange(2, "id"), t)  # v3
+    vacuum(t, keep_last=1)
+    assert versions(t) == [1, 3]
+    runs = drain_versioned_changes(
+        spark, t, out, ckpt, max_files_per_trigger=1
+    )
+    assert runs == 2, "v1, then v2+v3's four files as one slice"
+    got = sorted(
+        r["id"]
+        for r in spark.read.schema("id int, v string").parquet(out).collect()
+    )
+    assert got == [0, 1, 10, 11, 12, 13, 20, 21, 22, 23]
+
+
 def test_drain_empty_slice_lands_nothing(spark, tmp_path):
     """An empty slice is not a delivered batch: Spark writes one
     zero-row part file for an empty frame, so ``_land_slice`` decides
     emptiness from the written rows, lands no file and returns 0 — and
     a drain whose ``build`` filters every row away returns 0 and leaves
-    no ``slice-*`` file, on both engines."""
+    no ``slice-*`` file."""
     from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import versioned_write
     from _spark_multi_format_data_lake_pipeline_spark.sources import versioned_stream as VS
 
@@ -2597,23 +2591,20 @@ def test_drain_empty_slice_lands_nothing(spark, tmp_path):
         .coalesce(1),
         t,
     )
-    for engine in ("batch", "stream"):
-        out = tmp_path / f"out_{engine}"
-        runs = VS.drain_versioned_changes(
-            spark, t, str(out), str(tmp_path / f"ck_{engine}"),
-            engine=engine, build=lambda df: df.filter("id < 0"),
-        )
-        assert runs == 0, f"{engine}: an all-filtered drain delivered {runs}"
-        assert not list(out.glob("slice-*")), engine
+    out = tmp_path / "out"
+    runs = VS.drain_versioned_changes(
+        spark, t, str(out), str(tmp_path / "ck"),
+        build=lambda df: df.filter("id < 0"),
+    )
+    assert runs == 0, f"an all-filtered drain delivered {runs}"
+    assert not list(out.glob("slice-*"))
 
 
-def test_drain_change_feed_default_batch_engine(spark, tmp_path, monkeypatch):
-    """The default (``auto``) change-feed drain runs the BATCH slice
-    engine: across an upsert, a DV delete and an append the sink equals
-    ``read_change_feed(0)`` with no streaming query started and no
-    engine offsets written; every input only the stream engine serves
-    routes to it; and a stream → auto → stream interleave through one
-    checkpoint keeps every window."""
+def test_drain_change_feed_default_batch_engine(spark, tmp_path):
+    """The change-feed drain runs as batch slices: across an upsert, a
+    DV delete and an append the sink equals ``read_change_feed(0)``
+    with no streaming query started and no engine offsets written, and
+    a later drain through the same cursor lands only the new window."""
     import json as jsonlib
 
     from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
@@ -2660,47 +2651,13 @@ def test_drain_change_feed_default_batch_engine(spark, tmp_path, monkeypatch):
         spark, t, out, ckpt, extra_options=cdf
     ) == 0, "a caught-up drain delivers nothing"
 
-    # stream -> auto -> stream: every window survives
+    # incremental: the next drain lands exactly the new window
     versioned_upsert(mk([(2, "u2")]), t, ["id"])  # v6
-    VS.drain_versioned_changes(
-        spark, t, out, ckpt, extra_options=cdf, engine="stream"
-    )
     versioned_delete(spark, t, "id = 5", strategy="dv")  # v7
     assert VS.drain_versioned_changes(
         spark, t, out, ckpt, extra_options=cdf
     ) == 1
-    versioned_write(mk([(8, "a8")]).coalesce(1), t)  # v8
-    VS.drain_versioned_changes(
-        spark, t, out, ckpt, extra_options=cdf, engine="stream"
-    )
-    assert sink() == feed(), "every window must survive the interleave"
-
-    # routing: each input only the stream engine serves picks it
-    monkeypatch.setattr(VS, "_drain_batch", lambda *a, **k: "batch")
-    monkeypatch.setattr(VS, "_capped_drain_loop", lambda *a, **k: "stream")
-    ck2 = tmp_path / "ck2"
-    route = lambda **kw: VS.drain_versioned_changes(
-        spark, t, str(tmp_path / "out2"), str(ck2), **kw
-    )
-    assert route(extra_options=cdf) == "batch"
-    assert route() == "batch"
-    for kw in (
-        {"extra_options": {**cdf, "startingVersion": "3"}},
-        {"extra_options": cdf, "output_mode": "update"},
-        {"extra_options": cdf, "max_files_per_trigger": 1},
-        {"extra_options": cdf, "max_bytes_per_trigger": 1 << 20},
-        {"extra_options": cdf, "build": lambda df: df},
-    ):
-        assert route(**kw) == "stream", kw
-    (ck2 / "_vc_cursor").mkdir(parents=True, exist_ok=True)
-    for partial in (
-        {"version": 3, "file_index": 1},
-        {"version": 0, "snapshot_start": True},
-    ):
-        (ck2 / "_vc_cursor" / "cursor.json").write_text(
-            jsonlib.dumps(partial)
-        )
-        assert route(extra_options=cdf) == "stream", partial
+    assert sink() == feed(), "every window lands exactly once"
 
 
 def test_drain_change_feed_batch_bootstrap_and_gap(spark, tmp_path):

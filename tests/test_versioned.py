@@ -6358,9 +6358,7 @@ def test_branch_change_feed_fork_semantics(spark, tmp_path):
         versioned_delete,
         versioned_upsert,
     )
-    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
-        drain_versioned_changes,
-    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources import versioned_stream
 
     t = str(tmp_path / "tbl")
     mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
@@ -6413,9 +6411,18 @@ def test_branch_change_feed_fork_semantics(spark, tmp_path):
     )
     # streaming readChangeFeed against the branch root
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    drain_versioned_changes(
-        spark, b, out, ckpt, extra_options={"readChangeFeed": "true"},
-        engine="stream",
+    versioned_stream.register(spark)
+    (
+        spark.readStream.format("versioned_changes")
+        .option("path", b)
+        .option("readChangeFeed", "true")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
     streamed = sorted(
         (r["id"], r["_change_type"], r["_commit_version"])
@@ -6737,3 +6744,53 @@ def test_side_job_pool_lazy_init_is_race_free(monkeypatch):
     assert not any(th.is_alive() for th in threads)
     assert got[0] is not None and got[0] is got[1]
     assert len(made) == 1, f"{len(made)} pools built"
+
+
+def test_cdf_side_job_settled_when_snapshot_write_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that fails AFTER submitting its change-feed side job
+    (here the snapshot's footer harvest raises) must settle that job
+    before re-raising: no new manifest, no orphan ``_change_data/``
+    directory, and no side job still running against inputs the
+    caller unpersists.  The feed job is held until the snapshot path
+    has failed, so it is in flight when the error propagates."""
+    import threading
+    from pathlib import Path
+
+    from _spark_multi_format_data_lake_pipeline_spark.sinks import versioned as V
+
+    t = str(tmp_path / "tbl")
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    versioned_write(mk([(i, f"v{i}") for i in range(6)]).coalesce(1), t)
+    V.enable_change_data_feed(t)
+    feed_dirs = lambda: sorted(
+        p.name for p in (Path(t) / "_change_data").glob("*")
+    )
+    before_vs, before_cd = V.versions(t), feed_dirs()
+
+    failed = threading.Event()
+    real_pool = V._side_job_pool()
+    submitted = []
+
+    class HeldPool:
+        def submit(self, fn, *a, **k):
+            def held():
+                failed.wait(timeout=30)
+                return fn(*a, **k)
+
+            submitted.append(real_pool.submit(held))
+            return submitted[-1]
+
+    def boom(*a, **k):
+        failed.set()
+        raise RuntimeError("simulated snapshot write failure")
+
+    monkeypatch.setattr(V, "_side_job_pool", lambda: HeldPool())
+    monkeypatch.setattr(V, "_harvest", boom)
+    with pytest.raises(RuntimeError, match="simulated snapshot write"):
+        V.versioned_upsert(mk([(1, "u1"), (9, "i9")]), t, ["id"])
+    assert submitted, "the upsert must submit its feed as a side job"
+    assert all(f.done() for f in submitted), "a side job is still running"
+    assert V.versions(t) == before_vs, "a failed commit adds no manifest"
+    assert feed_dirs() == before_cd, "the feed write left an orphan dir"
