@@ -57,8 +57,10 @@ _RECHECK = (
     # drain/replicate batch counting, pagerank's lineage cap, and the
     # probe-list caps in the point-lookup query bodies — every catalog
     # query consuming a changed branch re-proves below (derived by
-    # scanning query sources for the changed verb names; 5 always-on +
-    # 42 recheck ≤ 50 slots).
+    # scanning query sources for the changed verb names).  The staged
+    # commit pipeline moved every metadata-only commit onto one manifest
+    # builder: the rollback, rename and add-column-default queries
+    # re-prove it (5 always-on + 45 recheck ≤ 50 slots).
     "q110_stable_ids",
     "q118_cdc_apply",
     "q156_nation_trade_pagerank",
@@ -74,10 +76,12 @@ _RECHECK = (
     "q244_versioned_conditional_merge",
     "q245_versioned_bloom_multi_lookup",
     "q246_versioned_compact_dv_zorder",
+    "q247_versioned_rollback_append",
     "q248_versioned_branch_isolation",
     "q250_versioned_deep_clone_export",
     "q253_versioned_update_rows",
     "q257_versioned_merge_by_source",
+    "q258_versioned_column_rename",
     "q260_versioned_identity_column",
     "q261_versioned_merge_schema_evolution",
     "q264_versioned_incremental_compact",
@@ -86,6 +90,7 @@ _RECHECK = (
     "q268_versioned_branch_merge_back",
     "q271_versioned_parquet_checkpoint",
     "q272_versioned_branch_merge_diverged",
+    "q273_versioned_add_column_default",
     "q275_versioned_stream_drain",
     "q276_versioned_change_feed",
     "q277_versioned_stream_change_feed",

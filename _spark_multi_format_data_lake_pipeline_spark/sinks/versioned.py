@@ -101,11 +101,13 @@ exactly as Delta-on-S3 does)."""
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
 import threading
 import uuid
+from dataclasses import dataclass, field, replace
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -194,7 +196,7 @@ def versions(path: str) -> list[int]:
 #   retained manifest references.
 _CHECKPOINT_INTERVAL = 10
 
-# How many consecutive lost commit races an APPEND re-validates and
+# How many consecutive lost commit races a commit re-validates and
 # re-links through before giving up (each retry rebases onto the then-
 # current head, so livelock needs a sustained faster writer).
 _COMMIT_RETRIES = 5
@@ -496,14 +498,15 @@ def _commit_state(path: str, state: dict, prev: dict | None) -> int:
 
     ``committed_at`` is clamped MONOTONE here (in-commit timestamps,
     Delta's rule: ``max(prev_committed_at + ε, now)``) — every commit
-    verb stamps ``time.time()`` and every consumer of the table clock
+    is stamped ``time.time()`` by ``_next_manifest`` and every consumer
+    of the table clock
     (``version_at_or_before`` / ``version_at_or_after``, TIMESTAMP AS
     OF, the stream's ``startingTimestamp``/``endingTimestamp``, the
     vacuum-gap proof) assumes commit clocks never step back, so an NTP
     step-back between commits must not be able to record a regressed
-    stamp.  Centralized at the single commit choke point instead of at
-    the ~15 stamp sites; legacy manifests without the field skip the
-    clamp (their consumers already fall back to manifest mtime)."""
+    stamp.  Clamped here, at the single commit choke point; legacy
+    manifests without the field skip the clamp (their consumers already
+    fall back to manifest mtime)."""
     version = state["version"]
     if prev is not None:
         pat = prev.get("committed_at")
@@ -995,6 +998,769 @@ def _attach_bucket(df: DataFrame, bb: tuple[str, int]) -> DataFrame:
     return df.withColumn(_BUCKET_COL, _bucket_expr(bb[0], int(bb[1])))
 
 
+# --- the commit stages: one path for every versioned write -----------
+#
+# A snapshot write runs one short chain of stages (``_write_snapshot``):
+# resolve the spec, prepare the frame, write + harvest, side outputs,
+# assemble the manifest, commit.  The merge-on-read DV delete builds its
+# manifest with ``_next_manifest`` and the metadata-only verbs stop
+# there; every one of them commits through ``_commit_loop``, so the
+# rebase rule, the manifest stamping and the feed side job each exist
+# once.
+
+_SNAPSHOT_MODES = ("append", "overwrite", "compact", "upsert", "delete", "update")
+
+# Modes whose lost commit race may rebase onto the new head (an
+# overwrite replaces the whole table: no serial order keeps both).
+_REBASEABLE = ("append", "upsert", "delete", "update", "compact")
+
+# Manifest keys that describe ONE commit and are never carried.
+_PER_COMMIT_KEYS = ("txn_id", "cdf_files", "cdf_file_meta")
+
+# Table properties a rebasing commit must find unchanged at the head.
+_REBASE_SPEC_KEYS = (
+    "partition_by",
+    "bucket_by",
+    "bloom_by",
+    "ndv_by",
+    "cluster_by",
+    "generated_columns",
+    "column_mapping",
+    "dropped_physical",
+    "row_tracking",
+    # a concurrently-added column DEFAULT: this commit's frame never
+    # materialized it, so in the "winner first" serial order its new
+    # files would wrongly read NULL where the default belongs
+    "column_defaults",
+    # a concurrent feed enable/disable: this commit decided its change
+    # rows (or that it writes none) under the old property
+    "change_data_feed",
+)
+
+
+@dataclass
+class TableSpec:
+    """Every table-level property a snapshot commit carries, resolved
+    once from the previous manifest and the write's arguments
+    (``_resolve_spec``).  ``manifest_keys`` is the one place they become
+    manifest keys; ``_REBASE_SPEC_KEYS`` names those a rebase compares.
+    ``partition_by`` holds logical names plus ``__bucket`` when
+    bucketed, as the manifest records it."""
+
+    partition_by: list
+    bucket_by: tuple | None
+    bloom_by: dict | None
+    ndv_by: dict | None
+    cluster_by: list | None
+    generated_columns: dict
+    identity_columns: dict
+    constraints: dict
+    column_defaults: dict
+    column_mapping: dict
+    dropped_physical: list
+    change_data_feed: bool
+    row_tracking: bool
+
+    def hashed(self) -> set:
+        """Columns whose committed bloom masks / bucket ids hash the
+        physical type (Spark's murmur3 hashes int and long of the same
+        value differently)."""
+        return set(self.bloom_by["cols"] if self.bloom_by else []) | (
+            {self.bucket_by[0]} if self.bucket_by else set()
+        )
+
+    def manifest_keys(self, schema: dict) -> dict:
+        # Defaults leave with their column only via drop_column; the
+        # schema filter keeps a default from outliving its column should
+        # a verb ever commit a schema that lost it without materializing
+        names = {f["name"] for f in schema["fields"]}
+        keys = {
+            "partition_by": self.partition_by,
+            "bucket_by": list(self.bucket_by) if self.bucket_by else None,
+            "bloom_by": self.bloom_by,
+            "ndv_by": self.ndv_by,
+            "cluster_by": self.cluster_by,
+            "constraints": self.constraints,
+            "column_defaults": {
+                c: d for c, d in self.column_defaults.items() if c in names
+            },
+            "change_data_feed": self.change_data_feed,
+            "row_tracking": self.row_tracking,
+            "generated_columns": self.generated_columns,
+            "identity_columns": self.identity_columns,
+            "column_mapping": self.column_mapping,
+            "dropped_physical": self.dropped_physical,
+        }
+        return {k: v for k, v in keys.items() if v}
+
+
+@dataclass
+class _NewFiles:
+    """What one snapshot write produced: its data files with their
+    harvested planes, the committed schema and the row-id draw."""
+
+    files: list
+    schema: dict
+    stats: dict
+    meta: dict
+    rows: int
+    materialized_ids: bool
+    rid_consumed: int
+    blooms: dict = field(default_factory=dict)
+    ndv: dict = field(default_factory=dict)
+
+
+def _norm(v):
+    """JSON-normal form, so read-only plane views compare as dicts."""
+    return json.loads(json.dumps(v, default=dict))
+
+
+def _next_manifest(base: dict, mode: str, **fields) -> dict:
+    """The manifest of the commit after ``base``: every key of ``base``
+    but the per-commit ones, the next version, ``mode`` and a fresh
+    commit clock, then ``fields`` on top (``version=`` included, for a
+    commit whose base is another table's or an older snapshot)."""
+    import time
+
+    out = {k: v for k, v in base.items() if k not in _PER_COMMIT_KEYS}
+    out.update(
+        {
+            "version": base.get("version", 0) + 1,
+            "mode": mode,
+            "committed_at": time.time(),
+        },
+        **fields,
+    )
+    return out
+
+
+@contextlib.contextmanager
+def _feed_job(feed, path: str, cmap: dict):
+    """Run a commit's change-feed write as a side job: its parquet write
+    is independent of the snapshot / DV write (disjoint output dirs,
+    shared pinned inputs), so the commit pays max(feed, data) wall-clock
+    instead of the sum (guide §2.6).  Yields the Future (None without a
+    feed).  Anything raised inside the block settles the job with
+    ``_abandon_cdf`` — no job left running against inputs the caller
+    unpersists, no orphan ``_change_data/`` dir.  A ``feed`` that is
+    already a Future belongs to an outer block and passes through."""
+    from concurrent.futures import Future
+
+    if feed is None or isinstance(feed, Future):
+        yield feed
+        return
+    fut = _side_job_pool().submit(_write_cdf, feed, path, cmap)
+    try:
+        yield fut
+    except BaseException:
+        _abandon_cdf(fut, path)
+        raise
+
+
+def _may_intersect(m: dict, files: list[str], read_range: tuple) -> list[str]:
+    """Those of ``files`` that ``m``'s zone maps cannot prove outside
+    ``read_range`` = (column, lo, hi)."""
+    return _candidate_split({**m, "files": files}, *read_range)[0]
+
+
+def _rebase_check(
+    path: str,
+    mode: str,
+    prev: dict,
+    head: dict,
+    manifest: dict,
+    read_set: set | None,
+    read_range: tuple | None,
+    content_independent: bool,
+) -> None:
+    """Optimistic-concurrency conflict resolution (the Delta/Iceberg
+    commit protocol): raise ``ConcurrentCommitError`` unless ``manifest``
+    — built on ``prev``, beaten to the next version by ``head`` — may be
+    rebuilt on ``head`` and re-linked.
+
+    APPENDs (``read_set=None``) always rebase — an append reads nothing,
+    so two writers landing disjoint file sets both commit whatever the
+    interleaving (Delta's append-vs-append rule).  ROW-LEVEL REWRITES
+    (upsert/delete/update/compact, and the DV delete) rebase iff the
+    rebased result equals SOME serial order of the two commits — write
+    serializability, Delta's default isolation level and the semantics
+    Iceberg's optimistic commits give the reference's MERGE (reference
+    utils/merge_utils.py:70-82):
+
+    - winner was a PURE APPEND → serial order "loser first, winner
+      second": an append is a blind write, so it lands identically on
+      top of the loser's output — even when the appended rows would
+      have matched the loser's predicate (Delta's WriteSerializable
+      accepts the same reordering).
+    - winner REWROTE or DV'd rows → serial order "winner first, loser
+      second": valid iff the loser's ``read_set`` (the files whose rows
+      it decided over) is untouched — no file removed, no deletion
+      vector added — and the winner's ADDED files are provably outside
+      the loser's ``read_range`` by the head's zone maps, else the loser
+      should have read them.  ``content_independent`` (compact) skips
+      the added-file check: compaction moves rows without deciding on
+      them, so a file it didn't select is merely left uncompacted.
+    - anything else — overlapping rewrites, table properties changed
+      underfoot (``_REBASE_SPEC_KEYS``), no read predicate to prove
+      added-file disjointness with — refuses deterministically and the
+      caller re-runs against the new head.
+
+    Concurrent identity-id consumption refuses too: compared against
+    the spec the loser STARTED from, because both racers advance
+    'assigned' identically from the same base, so output specs can
+    agree while the assigned id RANGES collide."""
+    for k in _REBASE_SPEC_KEYS:
+        if _norm(head.get(k)) != _norm(manifest.get(k)):
+            raise ConcurrentCommitError(
+                f"{mode} at {path} lost a commit race and the winner "
+                f"changed the table's {k} spec ({_norm(manifest.get(k))!r} "
+                f"-> {_norm(head.get(k))!r}); cannot rebase — re-run "
+                "against the new head"
+            )
+    if _norm(head.get("identity_columns")) != _norm(
+        prev.get("identity_columns")
+    ):
+        raise ConcurrentCommitError(
+            f"{mode} at {path} lost a commit race and the winner consumed "
+            "identity-column ids; the ids assigned here would collide — "
+            "re-run"
+        )
+    if read_set is None:
+        return
+    prev_files = set(prev["files"])
+    winner_removed = prev_files - set(head["files"])
+    prev_dvc = prev.get("dv_counts") or {}
+    head_dvc = head.get("dv_counts") or {}
+    if conflicted := sorted(
+        (winner_removed & read_set)
+        | {f for f in read_set if head_dvc.get(f, 0) != prev_dvc.get(f, 0)}
+    ):
+        raise ConcurrentCommitError(
+            f"{mode} at {path} lost a commit race and the winner rewrote "
+            f"or deleted rows in file(s) {conflicted} this {mode} read and "
+            "decided rows over — overlapping rewrites cannot rebase; "
+            "re-run against the new head"
+        )
+    winner_added = [f for f in head["files"] if f not in prev_files]
+    pure_append = not winner_removed and _norm(head.get("dv_counts")) == _norm(
+        prev.get("dv_counts")
+    )
+    if pure_append or content_independent or not winner_added:
+        return
+    if read_range is None:
+        raise ConcurrentCommitError(
+            f"{mode} at {path} lost a commit race to a row-level rewrite "
+            "and read the whole table (no prune range) — cannot prove the "
+            "winner's added files disjoint; re-run against the new head"
+        )
+    if may := _may_intersect(head, winner_added, read_range):
+        raise ConcurrentCommitError(
+            f"{mode} at {path} lost a commit race and the winner's added "
+            f"file(s) {may} may hold rows inside this {mode}'s read range "
+            f"{read_range!r} — re-run against the new head"
+        )
+
+
+def _commit_loop(
+    path: str,
+    mode: str,
+    prev: dict,
+    build,
+    read_set: set | None,
+    read_range: tuple | None = None,
+    content_independent: bool = False,
+) -> int:
+    """Commit ``build(prev)`` through the atomic ``_commit_state``.  On a
+    lost version race, re-read the head, validate the rebase
+    (``_rebase_check``) and commit ``build(head)`` at head+1 — at most
+    ``_COMMIT_RETRIES`` consecutive races.  ``prev`` is the manifest the
+    commit's decisions were made over (no ``version`` key: the table
+    was empty); ``read_set`` the files it read and decided rows over,
+    fixed at entry so every rebase compares against the files actually
+    read, or None for a blind append."""
+    manifest = build(prev)
+    for _ in range(_COMMIT_RETRIES):
+        try:
+            return _commit_state(
+                path, manifest, prev if "version" in prev else None
+            )
+        except ConcurrentCommitError as e:
+            if mode not in _REBASEABLE:
+                raise ConcurrentCommitError(
+                    f"{mode} at {path} lost a commit race for version "
+                    f"{manifest['version']}: an overwrite replaces the "
+                    "whole table, so no serial order preserves both "
+                    "commits — re-run against the new head"
+                ) from e
+            head = _read_manifest(path, versions(path)[-1])
+            _rebase_check(
+                path, mode, prev, head, manifest, read_set, read_range,
+                content_independent,
+            )
+            manifest, prev = build(head), head
+    raise ConcurrentCommitError(
+        f"{mode} at {path} lost {_COMMIT_RETRIES} consecutive commit "
+        "races; giving up (retry externally)"
+    )
+
+
+def _resolve_spec(
+    prev: dict,
+    mode: str,
+    *,
+    partition_by,
+    bucket_by,
+    bloom_by,
+    ndv_by,
+    cluster_by,
+    evolve_partitioning: bool,
+    generated_columns,
+    identity_columns,
+) -> TableSpec:
+    """Stage 1: the commit's ``TableSpec``.  Each layout argument
+    inherits the table's spec when None and replaces it otherwise; an
+    APPEND to an existing table refuses a changed spec (a change needs an
+    overwrite — or, for ``partition_by``, ``evolve_partitioning=True``:
+    Iceberg partition-spec evolution, existing files keep their layout).
+    ``cluster_by`` (liquid clustering: every write z-orders its new files
+    along the Morton curve of the spec) may change on any write; like
+    Delta's, it replaces partitioning and cannot combine with
+    ``partition_by`` or ``bucket_by``."""
+    refuse = mode == "append" and "version" in prev
+
+    def inherit(what, arg, prev_v, norm, refuse_change=refuse, hint=""):
+        if arg is None:
+            return prev_v
+        v = norm(arg)
+        if refuse_change and v != prev_v:
+            raise ValueError(
+                f"append {what} spec {v} != table spec {prev_v}; changing "
+                f"the spec requires an overwrite{hint}"
+            )
+        return v
+
+    bb = inherit(
+        "bucket",
+        bucket_by,
+        tuple(prev["bucket_by"]) if prev.get("bucket_by") else None,
+        lambda a: (str(a[0]), int(a[1])) if a else None,
+    )
+    bspec = inherit(
+        "bloom",
+        bloom_by,
+        prev.get("bloom_by"),
+        lambda a: {"cols": list(a), "m": _BLOOM_M, "k": _BLOOM_K} if a else None,
+    )
+    nspec = inherit(
+        "ndv",
+        ndv_by,
+        prev.get("ndv_by"),
+        lambda a: {"cols": list(a), "p": _NDV_P} if a else None,
+    )
+    pb = inherit(
+        "partition",
+        partition_by,
+        [c for c in (prev.get("partition_by") or []) if c != _BUCKET_COL],
+        list,
+        refuse and not evolve_partitioning,
+        " or an explicit evolve_partitioning=True append (Iceberg "
+        "partition-spec evolution: existing files keep their layout, new "
+        "files use the new spec)",
+    )
+    cb = inherit(
+        "cluster",
+        cluster_by,
+        prev.get("cluster_by") or None,
+        lambda a: [str(c) for c in a] if a else None,
+        False,
+    )
+    if cb and (pb or bb):
+        raise ValueError(
+            "cluster_by cannot combine with partition_by or bucket_by "
+            "(clustering replaces partitioning — Delta's rule)"
+        )
+    gen = (
+        dict(generated_columns)
+        if generated_columns is not None
+        else prev.get("generated_columns", {})
+    )
+    ident = {
+        k: dict(v)
+        for k, v in (
+            identity_columns
+            if identity_columns is not None
+            else prev.get("identity_columns", {})
+        ).items()
+    }
+    if bad := sorted(set(ident) & set(gen)):
+        raise ValueError(
+            f"identity column(s) {bad} are also generated columns; "
+            "generation would overwrite every assigned id"
+        )
+    if bb:
+        pb = pb + [_BUCKET_COL]
+    if bspec and (bad := [c for c in bspec["cols"] if c in pb]):
+        raise ValueError(
+            f"bloom_by columns {bad} are partition/bucket columns — "
+            "their [v, v] zone-map ranges already prune exactly"
+        )
+    return TableSpec(
+        partition_by=pb,
+        bucket_by=bb,
+        bloom_by=bspec,
+        ndv_by=nspec,
+        cluster_by=cb,
+        generated_columns=gen,
+        identity_columns=ident,
+        constraints=prev.get("constraints", {}),
+        column_defaults=dict(prev.get("column_defaults") or {}),
+        column_mapping=dict(prev.get("column_mapping") or {}),
+        dropped_physical=list(prev.get("dropped_physical") or []),
+        change_data_feed=_cdf_on(prev),
+        row_tracking=_row_tracking_on(prev),
+    )
+
+
+def _assign_identity(df: DataFrame, ident: dict) -> DataFrame:
+    """IDENTITY columns (Delta GENERATED BY DEFAULT AS IDENTITY): rows
+    arriving with NULL in an identity column get fresh ids from the
+    spec's high-water mark (``assigned``, advanced in place); non-NULL
+    values pass through — which is exactly what carried-row rewrites,
+    upsert survivors and UPDATE pre-images produce, so every write path
+    composes for free and only genuinely NEW rows consume ids.
+    Assignment is DETERMINISTIC (ids = start + step × running count,
+    ranked by the spec's ``order_by`` key within the commit) and fully
+    parallel — the range-partition prefix-sum numbering of
+    ``operators/ids.py::assign_contiguous_ids``, never a global
+    ROW_NUMBER funnel.  Like Delta, BY DEFAULT does not police
+    uniqueness of user-supplied values."""
+    from pyspark.sql import functions as F
+
+    from ..operators.ids import assign_contiguous_ids
+
+    for name, sp in ident.items():
+        ob = sp.get("order_by")
+        if not ob:
+            raise ValueError(
+                f"identity column {name!r}: spec needs 'order_by' "
+                "(a unique key among inserted rows) — deterministic "
+                "assignment is the contract"
+            )
+        start = int(sp.get("start", 1))
+        step = int(sp.get("step", 1))
+        if step == 0:
+            raise ValueError(f"identity column {name!r}: step must be nonzero")
+        assigned = int(sp.get("assigned", 0))
+        if name not in df.columns:
+            df = df.withColumn(name, F.lit(None).cast("long"))
+        else:
+            df = df.withColumn(name, F.col(name).cast("long"))
+        # the numbering's own per-partition count collect reports n_null
+        # (with_count) — no separate need.count() pre-flight
+        ranked, n_null = assign_contiguous_ids(
+            df.filter(F.col(name).isNull()).drop(name),
+            list(ob),
+            id_col="__ident_rank",
+            with_count=True,
+        )
+        if n_null:
+            numbered = ranked.withColumn(
+                name,
+                (
+                    F.lit(start)
+                    + F.lit(step) * (F.lit(assigned) + F.col("__ident_rank"))
+                ).cast("long"),
+            ).drop("__ident_rank")
+            df = df.filter(F.col(name).isNotNull()).unionByName(
+                numbered.select(*df.columns)
+            )
+        ident[name] = {
+            "start": start,
+            "step": step,
+            "order_by": list(ob),
+            "assigned": assigned + n_null,
+        }
+    return df
+
+
+def _prepare_frame(
+    df: DataFrame, prev: dict, spec: TableSpec, mode: str, carry: list[str]
+) -> DataFrame:
+    """Stage 2: the frame the data write lands.  Column DEFAULTS fill a
+    frame that omits the column (Delta's INSERT-without-the-column rule;
+    a carried column keeps its values, an explicit NULL stays NULL).
+    GENERATED columns are recomputed from their SQL over the same row —
+    authoritative, so the invariant holds on every write path and no
+    validation scan is needed; computed before the bucket attach so they
+    can drive the layout (the date_trunc partitioning pattern).
+    IDENTITY ids are assigned.  Hashed columns arriving NARROWER than the
+    committed type (int into a long column) are upcast: bloom masks and
+    bucket ids hash the physical type, so a reader probing with the wide
+    type would MISS the new files; a WIDER arrival is left for the
+    widening guard to refuse.  Then the bucket column, persisted CHECK
+    constraints on the NEW rows (carried files were validated when
+    new), the cluster_by z-order (compact orders its own selection), and
+    fresh physical names for NEW logical columns whose identity name is a
+    tombstone or another column's physical (old files hold unrelated
+    data under it — it must read NULL, not resurrect)."""
+    from pyspark.sql import functions as F
+
+    df = _materialize_defaults(df, prev)
+    for n, e in spec.generated_columns.items():
+        df = df.withColumn(n, F.expr(e))
+    if spec.identity_columns:
+        df = _assign_identity(df, spec.identity_columns)
+    if carry and prev.get("schema"):
+        committed = {
+            f["name"]: f["type"]
+            for f in prev["schema"]["fields"]
+            if isinstance(f["type"], str)
+        }
+        hashed = spec.hashed()
+        for fld in df.schema.fields:
+            t = committed.get(fld.name)
+            arrived = fld.dataType.jsonValue()
+            if (
+                fld.name in hashed
+                and t is not None
+                and arrived != t
+                and _widened(t, arrived) == t
+            ):
+                df = df.withColumn(fld.name, F.col(fld.name).cast(t))
+    if spec.bucket_by:
+        df = _attach_bucket(df, spec.bucket_by)
+    if spec.constraints:
+        _validate_constraints(df, spec.constraints, f"{mode} write")
+    if spec.cluster_by and mode != "compact":
+        from ..operators.layout import zorder_by
+
+        df = zorder_by(df, spec.cluster_by)
+    cmap, dropped = spec.column_mapping, spec.dropped_physical
+    if cmap or dropped:
+        prev_names = {
+            f["name"] for f in (prev.get("schema") or {}).get("fields", [])
+        }
+        taken = set(cmap.values())
+        for fld in df.schema.fields:
+            if fld.name in cmap or fld.name in prev_names:
+                continue
+            if fld.name in dropped or fld.name in taken:
+                cmap[fld.name] = f"{fld.name}_r{uuid.uuid4().hex[:8]}"
+    return df
+
+
+def _write_files(
+    df: DataFrame,
+    path: str,
+    prev: dict,
+    spec: TableSpec,
+    carry: list[str],
+    allow_type_widening: bool,
+    max_records_per_file: int | None,
+    row_ids_consumed: int,
+) -> _NewFiles:
+    """Stage 3: write the data files and harvest their planes.  The
+    committed schema is the frame's minus the hidden row-tracking
+    columns (they live in rewrite-written parquet; readers add them via
+    ``keep_row_ids``), merged with the previous schema when files carry;
+    a widened hash-indexed column refuses (its committed masks / bucket
+    ids hash the narrow type).  Files, path components and the stats
+    plane speak PHYSICAL names (Delta column mapping, name mode).  The
+    new-row count comes from the footers the harvest reads, with a
+    re-read only for an unreadable footer; partition values join the zone
+    maps as [v, v] ranges.  Rewrite-written files carry materialized row
+    ids and the verb reports its fresh draw (``row_ids_consumed``);
+    append-written files draw one implicit id per row."""
+    cmap = spec.column_mapping
+    schema = df.schema.jsonValue()
+    materialized = _ROWID_COL in df.columns
+    if (materialized or _ROWCV_COL in df.columns) and not spec.row_tracking:
+        raise ValueError(
+            f"{_ROWID_COL!r}/{_ROWCV_COL!r} are reserved column names "
+            "(row tracking); rename the column"
+        )
+    if materialized:
+        schema = {
+            **schema,
+            "fields": [
+                f
+                for f in schema["fields"]
+                if f["name"] not in (_ROWID_COL, _ROWCV_COL)
+            ],
+        }
+    if carry and prev.get("schema"):
+        schema = _merge_schemas(
+            prev["schema"], schema, allow_type_widening=allow_type_widening
+        )
+        changed = {
+            f["name"]
+            for f, p in zip(schema["fields"], prev["schema"]["fields"])
+            if f["name"] == p["name"] and f["type"] != p["type"]
+        }
+        if bad := sorted(changed & spec.hashed()):
+            raise ValueError(
+                f"type widening refused for {bad}: the column(s) back a "
+                "hash-indexed layout (bloom index / hash buckets) whose "
+                "committed masks hash the narrow type; rebuild via "
+                "overwrite or compact first"
+            )
+    if cmap:
+        from pyspark.sql import functions as F
+
+        df_w = df.select([F.col(c).alias(cmap.get(c, c)) for c in df.columns])
+    else:
+        df_w = df
+    data_dir = Path(path) / "data" / uuid.uuid4().hex
+    writer = df_w.write.mode("error")
+    if max_records_per_file:
+        # write-time file sizing: cap rows per file so one wide task
+        # can't emit a multi-GB file
+        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+    if spec.partition_by:
+        writer = writer.partitionBy(*[cmap.get(c, c) for c in spec.partition_by])
+    writer.parquet(str(data_dir))
+    files = sorted(
+        str(p.relative_to(path))
+        for p in data_dir.rglob("*.parquet")
+        if p.is_file()
+    )
+    stats, meta = _harvest(path, files)
+    if files and all("rows" in meta.get(f, {}) for f in files):
+        rows = sum(int(meta[f]["rows"]) for f in files)
+    else:
+        rows = df.sparkSession.read.parquet(str(data_dir)).count() if files else 0
+    if spec.partition_by:
+        for rel in files:
+            for name, v in _partition_values(rel, schema, cmap).items():
+                if v is not None:
+                    stats.setdefault(rel, {})[cmap.get(name, name)] = [v, v]
+    rid = int(row_ids_consumed or 0)
+    if spec.row_tracking and not materialized:
+        rid = sum(int(meta[f].get("rows") or 0) for f in files)
+    return _NewFiles(files, schema, stats, meta, rows, materialized, rid)
+
+
+def _assemble(
+    path: str,
+    base: dict,
+    carry: list[str],
+    new: _NewFiles,
+    spec: TableSpec,
+    mode: str,
+    tail: dict,
+) -> dict:
+    """Stage 5: the snapshot manifest on ``base`` — the first attempt's
+    base is the manifest the write started from (``carry`` in the
+    caller's order), a rebase's is the head.  Carried files keep their
+    planes verbatim (stats, meta, bloom, ndv, shallow-clone
+    ``file_base``) and their delete vectors (DV rows key by immutable
+    (file, pos); a commit that carries no DV'd file drops the set, so
+    overwrite and compact materialize outstanding deletes).  New files
+    are stamped with the version that commits (the initial-default read
+    path compares it to since-versions) and, on a row-tracking table,
+    dealt implicit base row ids from ``base``'s watermark.  No other key
+    of ``base`` carries implicitly: the table keys come from ``spec``,
+    the per-commit ones from ``tail``."""
+
+    def carried(key: str) -> dict:
+        plane = base.get(key) or {}
+        return {f: plane[f] for f in carry if f in plane}
+
+    version = base.get("version", 0) + 1
+    meta = {f: {**e, "v": version} for f, e in new.meta.items()}
+    hw = int(base.get("row_id_high_water") or 0)
+    if spec.row_tracking and not new.materialized_ids:
+        nb = hw
+        for f in new.files:
+            meta[f]["brid"] = nb
+            nb += int(meta[f].get("rows") or 0)
+    dv_counts = carried("dv_counts")
+    dv_files, dv_covers = _carry_dv_files(base, dv_counts)
+    base_fb = base.get("file_base") or {}
+    if mode == "append":
+        carried_rows = base["row_count"]
+    else:
+        base_meta = base.get("file_meta") or {}
+        carried_rows = sum(
+            _file_rows(path, f, base_meta, base_fb) for f in carry
+        ) - sum(dv_counts.values())
+    planes = {
+        "dv_counts": dv_counts,
+        "dv_files": dv_files,
+        "dv_covers": dv_covers,
+        "bloom": {**carried("bloom"), **new.blooms} if spec.bloom_by else None,
+        "ndv": {**carried("ndv"), **new.ndv} if spec.ndv_by else None,
+        "file_base": {
+            f: base_fb[f] for f in [*carry, *dv_files] if f in base_fb
+        },
+    }
+    manifest = _next_manifest(
+        {"version": version - 1},
+        mode,
+        files=list(carry) + new.files,
+        row_count=new.rows + carried_rows,
+        schema=new.schema,
+        file_stats={**carried("file_stats"), **new.stats},
+        file_meta={**carried("file_meta"), **meta},
+        **{k: v for k, v in planes.items() if v},
+        **spec.manifest_keys(new.schema),
+        **tail,
+    )
+    if spec.row_tracking:
+        manifest["row_id_high_water"] = hw + new.rid_consumed
+    return manifest
+
+
+def _revalidate_rebase(
+    path: str,
+    mode: str,
+    df: DataFrame,
+    prev: dict,
+    head: dict,
+    new: _NewFiles,
+    spec: TableSpec,
+    allow_type_widening: bool,
+) -> dict:
+    """What a snapshot write re-checks before rebasing onto ``head``,
+    beyond ``_rebase_check``: CHECK constraints the winner added
+    re-validate the new rows, and the schemas re-merge (returned).  A
+    concurrent widening of a hash-indexed column refuses (our masks hash
+    the narrow type), and so does a concurrent row-id draw when this
+    commit's files carry materialized fresh ids (they would collide;
+    implicit base ids are re-dealt by ``_assemble`` instead)."""
+    extra = {
+        n: x
+        for n, x in (head.get("constraints") or {}).items()
+        if spec.constraints.get(n) != x
+    }
+    if extra and new.files:
+        _validate_constraints(
+            df, extra, f"{mode} rebase (constraint added concurrently)"
+        )
+    merged = _merge_schemas(
+        head["schema"], new.schema, allow_type_widening=allow_type_widening
+    )
+    mine = {f["name"]: f["type"] for f in new.schema["fields"]}
+    hashed = spec.hashed()
+    for fld in merged["fields"]:
+        if fld["name"] in hashed and fld["type"] != mine.get(
+            fld["name"], fld["type"]
+        ):
+            raise ConcurrentCommitError(
+                f"{mode} at {path} lost a commit race and the winner "
+                f"widened hash-indexed column {fld['name']!r}; our "
+                "committed masks hash the narrow type — re-run"
+            )
+    hw = lambda m: int(m.get("row_id_high_water") or 0)  # noqa: E731
+    if new.materialized_ids and new.rid_consumed and hw(head) != hw(prev):
+        raise ConcurrentCommitError(
+            f"{mode} at {path} lost a commit race and the winner consumed "
+            "row-tracking ids; the fresh ids materialized into this "
+            "commit's files would collide — re-run against the new head"
+        )
+    return merged
+
+
 def _write_snapshot(
     df: DataFrame,
     path: str,
@@ -1011,23 +1777,28 @@ def _write_snapshot(
     cluster_by: list[str] | None = None,
     read_range: tuple | None = None,
     content_independent: bool = False,
-    cdf_files: list[str] | None = None,
     cdf_feed=None,  # DataFrame, or an already-submitted Future[list]
-    cdf_cmap: dict | None = None,
     ndv_by: list[str] | None = None,
     row_ids_consumed: int = 0,
     max_records_per_file: int | None = None,
 ) -> int:
     """Shared body of every versioned write (append / overwrite /
-    compact / upsert / delete): write the data files, list them, combine
-    with the carried-over portion of the previous manifest's file list,
-    commit the next version.  One code path so file-listing / row-count /
-    stats semantics can never diverge between entry points.
+    compact / upsert / delete / update): write the data files, combine
+    them with the carried-over portion of the previous manifest's file
+    list, commit the next version.  One code path so file-listing /
+    row-count / stats semantics can never diverge between entry points.
+    The stages, in order:
+
+    1. ``_resolve_spec`` — inherit-or-refuse the table spec;
+    2. ``_prepare_frame`` — defaults, generated, identity, bucket, CHECK;
+    3. ``_write_files`` — the parquet write and its footer harvest;
+    4. side outputs — blooms, NDV registers, the joined feed side job;
+    5. ``_assemble`` + ``_commit_loop`` — the manifest, committed/rebased.
 
     ``carry_files`` is the copy-on-write contract: upsert/delete pass
-    the previous snapshot's UNTOUCHED files explicitly and this function
-    keeps their manifest entries (stats, sizes, rows) verbatim — only
-    the rewritten portion costs I/O.  ``append`` is the degenerate case
+    the previous snapshot's UNTOUCHED files explicitly and their
+    manifest entries (stats, sizes, rows) carry verbatim — only the
+    rewritten portion costs I/O.  ``append`` is the degenerate case
     carry=all, ``overwrite``/``compact`` carry=none.
 
     ``partition_by`` (Hive-layout ``partitionBy`` on the data write —
@@ -1041,884 +1812,80 @@ def _write_snapshot(
     ``bucket_by=(col, n)`` is the HASH-bucket layout (Iceberg's
     ``bucket(n, col)`` transform, the jar-free ``bucketBy``): every
     write materializes ``__bucket = pmod(hash(col), n)`` and lays files
-    out partitioned by it, so the manifest zone maps carry each file's
-    bucket as a [b, b] range.  Point lookups and keyed upserts then
-    confine themselves to |touched buckets|/n of the files EVEN WHEN
-    the key is uniformly distributed — exactly the workload where
-    min/max zone maps prune nothing.  Inherited like the partition
-    spec; attached here (the single write choke point) so compaction,
-    CDC applies and streaming appends can never drop the layout."""
-    if mode not in (
-        "append",
-        "overwrite",
-        "compact",
-        "upsert",
-        "delete",
-        "update",
-    ):
+    out partitioned by it, so point lookups and keyed upserts confine
+    themselves to |touched buckets|/n of the files EVEN WHEN the key is
+    uniformly distributed.  Inherited like the partition spec; attached
+    here (the single write choke point) so compaction, CDC applies and
+    streaming appends can never drop the layout.
+
+    ``cdf_feed`` is the commit's change rows: a frame runs as a side job
+    (``_feed_job``) overlapping the data write and is joined right
+    before the manifest needs its file list; a caller with eager work of
+    its own between building the feed and committing (the row-id chain)
+    submits the job early and hands its Future down."""
+    if mode not in _SNAPSHOT_MODES:
         raise ValueError(f"versioned snapshot write: unknown mode {mode!r}")
-    # CDF feed handed as a FRAME: its parquet write is independent of the
-    # snapshot write (disjoint output dirs, shared pinned inputs), so it
-    # runs as a concurrent side job and is joined right before the
-    # manifest needs the file list — one commit pays max(feed, snapshot)
-    # wall-clock instead of feed + snapshot (guide §2.6 overlapping
-    # independent jobs).  Callers pass either cdf_files (already
-    # written) or cdf_feed, never both.
-    cdf_future = None
-    if cdf_feed is not None:
-        if cdf_files is not None:
-            raise ValueError(
-                "_write_snapshot: pass cdf_files or cdf_feed, not both"
-            )
-        from concurrent.futures import Future
-
-        # a caller that has eager work of its own between building the
-        # feed and committing (the row-id chain) submits the side job
-        # early and hands the Future down
-        cdf_future = (
-            cdf_feed
-            if isinstance(cdf_feed, Future)
-            else _side_job_pool().submit(
-                _write_cdf, cdf_feed, path, dict(cdf_cmap or {})
-            )
+    vs = versions(path)
+    prev = _read_manifest(path, vs[-1]) if vs else {"files": [], "row_count": 0}
+    with _feed_job(cdf_feed, path, _column_mapping(prev)) as cdf_fut:
+        spec = _resolve_spec(
+            prev,
+            mode,
+            partition_by=partition_by,
+            bucket_by=bucket_by,
+            bloom_by=bloom_by,
+            ndv_by=ndv_by,
+            cluster_by=cluster_by,
+            evolve_partitioning=evolve_partitioning,
+            generated_columns=generated_columns,
+            identity_columns=identity_columns,
         )
-    try:
-        vs = versions(path)
-        prev = (
-            _read_manifest(path, vs[-1])
-            if vs
-            else {"files": [], "row_count": 0}
-        )
-        # Column DEFAULTS (add_column ... DEFAULT): a write whose frame
-        # OMITS a defaulted column materializes the default into the new
-        # files (Delta's INSERT-without-the-column rule), so only
-        # pre-evolution files ever need the read-time fill; a frame that
-        # carries the column keeps its values — an explicit NULL stays NULL.
-        cdefaults = dict(prev.get("column_defaults") or {})
-        df = _materialize_defaults(df, prev)
-        prev_bb = tuple(prev["bucket_by"]) if prev.get("bucket_by") else None
-        if bucket_by is None:
-            bb = prev_bb
-        else:
-            bb = (str(bucket_by[0]), int(bucket_by[1])) if bucket_by else None
-            if mode == "append" and vs and bb != prev_bb:
-                raise ValueError(
-                    f"append bucket spec {bb} != table spec {prev_bb}; "
-                    "changing the spec requires an overwrite"
-                )
-        prev_bloom_spec = prev.get("bloom_by")
-        if bloom_by is None:
-            bspec = prev_bloom_spec
-        else:
-            bspec = (
-                {"cols": list(bloom_by), "m": _BLOOM_M, "k": _BLOOM_K}
-                if bloom_by
-                else None
-            )
-            if mode == "append" and vs and bspec != prev_bloom_spec:
-                raise ValueError(
-                    f"append bloom spec {bspec} != table spec "
-                    f"{prev_bloom_spec}; changing the spec requires an "
-                    "overwrite"
-                )
-        prev_ndv_spec = prev.get("ndv_by")
-        if ndv_by is None:
-            nspec = prev_ndv_spec
-        else:
-            nspec = {"cols": list(ndv_by), "p": _NDV_P} if ndv_by else None
-            if mode == "append" and vs and nspec != prev_ndv_spec:
-                raise ValueError(
-                    f"append ndv spec {nspec} != table spec "
-                    f"{prev_ndv_spec}; changing the spec requires an "
-                    "overwrite"
-                )
-        if partition_by is None:
-            pb = prev.get("partition_by") or []
-            pb = [c for c in pb if c != _BUCKET_COL]
-        else:
-            pb = list(partition_by)
-            prev_pb = [
-                c for c in (prev.get("partition_by") or []) if c != _BUCKET_COL
-            ]
-            if (
-                mode == "append"
-                and vs
-                and pb != prev_pb
-                and not evolve_partitioning
-            ):
-                raise ValueError(
-                    f"append partition spec {pb} != table spec "
-                    f"{prev_pb}; changing the spec requires an overwrite "
-                    "or an explicit evolve_partitioning=True append "
-                    "(Iceberg partition-spec evolution: existing files "
-                    "keep their layout, new files use the new spec)"
-                )
-        # LIQUID-CLUSTERING-STYLE AUTO-LAYOUT (Delta liquid clustering's
-        # write-path half): ``cluster_by=[cols]`` is a table property that
-        # rides the manifest like the bucket/bloom specs — EVERY write
-        # z-orders its NEW files along the Morton curve of the clustering
-        # columns (operators/layout.py, one tiny agg + one range shuffle of
-        # the new data only), so multi-dim zone-map pruning
-        # (read_version_pruned_multi) works without ever running an
-        # explicit OPTIMIZE ZORDER; ``compact`` re-clusters by the spec by
-        # default, healing the cross-file overlap incremental appends
-        # accumulate.  Like Delta, clustering REPLACES partitioning: it
-        # cannot combine with partition_by or bucket_by (they would shred
-        # the curve into per-directory fragments).  Changing the spec on a
-        # later write is allowed and applies to that write's files onward —
-        # old files keep their old layout, their committed zone maps stay
-        # exact (Iceberg spec-evolution semantics).
-        prev_cb = prev.get("cluster_by") or None
-        if cluster_by is None:
-            cb_spec = prev_cb
-        else:
-            cb_spec = [str(c) for c in cluster_by] if cluster_by else None
-        if cb_spec and (pb or bb):
-            raise ValueError(
-                "cluster_by cannot combine with partition_by or bucket_by "
-                "(clustering replaces partitioning — Delta's rule)"
-            )
-        # GENERATED COLUMNS (Delta generated columns): the spec rides the
-        # manifest like constraints and generation is AUTHORITATIVE — the
-        # engine always (re)computes each generated column from its SQL
-        # expression over the same row, so the invariant holds by
-        # construction on every write path (append, upsert survivors+changes,
-        # UPDATE of a source column, CDC apply), a caller-supplied value is
-        # simply overwritten, and no write-time validation scan is needed.
-        # Computed BEFORE bucket attach / partitionBy so generated columns
-        # can drive the layout (Delta's generated-column partitioning, the
-        # date_trunc pattern).
-        gen = (
-            dict(generated_columns)
-            if generated_columns is not None
-            else prev.get("generated_columns", {})
-        )
-        if gen:
-            from pyspark.sql import functions as F
-
-            for n, e in gen.items():
-                df = df.withColumn(n, F.expr(e))
-        # IDENTITY columns (Delta GENERATED BY DEFAULT AS IDENTITY): rows
-        # arriving with NULL in an identity column get fresh ids from the
-        # manifest's high-water mark; non-NULL values pass through — which
-        # is exactly what carried-row rewrites, upsert survivors and UPDATE
-        # pre-images produce, so every write path composes for free and
-        # only genuinely NEW rows consume ids.  Assignment is DETERMINISTIC
-        # (ids = start + step × running count, ranked by the spec's
-        # ``order_by`` key within the commit) and fully parallel — the
-        # range-partition prefix-sum numbering of
-        # ``operators/ids.py::assign_contiguous_ids``, never a global
-        # ROW_NUMBER funnel.  Like Delta, BY DEFAULT does not police
-        # uniqueness of user-supplied values.
-        ident = (
-            {k: dict(v) for k, v in identity_columns.items()}
-            if identity_columns is not None
-            else {k: dict(v) for k, v in prev.get("identity_columns", {}).items()}
-        )
-        if ident:
-            from pyspark.sql import functions as F
-
-            if bad := sorted(set(ident) & set(gen)):
-                raise ValueError(
-                    f"identity column(s) {bad} are also generated columns; "
-                    "generation would overwrite every assigned id"
-                )
-            for name, sp in ident.items():
-                ob = sp.get("order_by")
-                if not ob:
-                    raise ValueError(
-                        f"identity column {name!r}: spec needs 'order_by' "
-                        "(a unique key among inserted rows) — deterministic "
-                        "assignment is the contract"
-                    )
-                start = int(sp.get("start", 1))
-                step = int(sp.get("step", 1))
-                if step == 0:
-                    raise ValueError(f"identity column {name!r}: step must be nonzero")
-                assigned = int(sp.get("assigned", 0))
-                if name not in df.columns:
-                    df = df.withColumn(name, F.lit(None).cast("long"))
-                else:
-                    df = df.withColumn(name, F.col(name).cast("long"))
-                need = df.filter(F.col(name).isNull())
-                from ..operators.ids import assign_contiguous_ids
-
-                # the numbering's own per-partition count collect reports
-                # n_null (with_count) — one job less per identity commit
-                # than the old separate need.count() pre-flight
-                ranked, n_null = assign_contiguous_ids(
-                    need.drop(name),
-                    list(ob),
-                    id_col="__ident_rank",
-                    with_count=True,
-                )
-                if n_null:
-                    numbered = ranked.withColumn(
-                        name,
-                        (
-                            F.lit(start)
-                            + F.lit(step)
-                            * (F.lit(assigned) + F.col("__ident_rank"))
-                        ).cast("long"),
-                    ).drop("__ident_rank")
-                    df = df.filter(F.col(name).isNotNull()).unionByName(
-                        numbered.select(*df.columns)
-                    )
-                    sp["assigned"] = assigned + n_null
-                ident[name] = {
-                    "start": start,
-                    "step": step,
-                    "order_by": list(ob),
-                    "assigned": sp.get("assigned", assigned),
-                }
-        # Narrow arrival on a hash-indexed column (int data appended to a
-        # committed-long column, the legal type-widening dual): bloom masks
-        # and bucket ids hash the PHYSICAL type, and Spark's murmur3 hashes
-        # int and long of the same value differently — left as-is, a reader
-        # probing with the committed wide type would silently MISS the new
-        # files (false negatives).  Zone maps compare values and stay
-        # exact; the hashed layouts need writer and reader to hash the same
-        # type, so incoming hashed columns are UPCAST to the committed type
-        # before bucket attach / write.  Only the narrow→wide direction is
-        # cast here: a WIDER arrival is left alone so the widening guard
-        # below still refuses it (a downcast would silently truncate).
-        _will_carry = (
-            carry_files
-            if carry_files is not None
-            else (prev["files"] if mode == "append" else [])
-        )
-        if _will_carry and prev.get("schema"):
-            from pyspark.sql import functions as F
-
-            _committed = {
-                f["name"]: f["type"]
-                for f in prev["schema"]["fields"]
-                if isinstance(f["type"], str)
-            }
-            _hashed = set(bspec["cols"] if bspec else []) | (
-                {bb[0]} if bb else set()
-            )
-            for _fld in df.schema.fields:
-                _t = _committed.get(_fld.name)
-                _in = _fld.dataType.jsonValue()
-                if (
-                    _fld.name in _hashed
-                    and _t is not None
-                    and _in != _t
-                    and _widened(_t, _in) == _t
-                ):
-                    df = df.withColumn(_fld.name, F.col(_fld.name).cast(_t))
-        if bb:
-            df = _attach_bucket(df, bb)
-            pb = pb + [_BUCKET_COL]
-        if bspec:
-            bad = [c for c in bspec["cols"] if c in pb]
-            if bad:
-                raise ValueError(
-                    f"bloom_by columns {bad} are partition/bucket columns — "
-                    "their [v, v] zone-map ranges already prune exactly"
-                )
         if carry_files is None:
             carry_files = prev["files"] if mode == "append" else []
-        constraints = prev.get("constraints", {})
-        if constraints:
-            # persisted CHECK constraints gate every commit's NEW rows
-            # (carried files were validated when they were new)
-            _validate_constraints(df, constraints, f"{mode} write")
-        if cb_spec and mode != "compact":
-            # compact manages its own layout (it z-orders the selected
-            # rows by the spec already, with the bin count it chose) —
-            # re-clustering here would just repeat the range shuffle
-            from ..operators.layout import zorder_by
-
-            df = zorder_by(df, cb_spec)
-        # Column mapping (Delta name-mode): data files, path components and
-        # the stats/bloom planes speak PHYSICAL names; everything above
-        # this point spoke logical.  The mapping is a table property that
-        # rides every commit like constraints.  A column re-added after a
-        # ``drop_column`` gets a FRESH physical name — old files still hold
-        # dead data under the tombstoned one, which must read as NULL, not
-        # as resurrected values.
-        cmap = dict(prev.get("column_mapping") or {})
-        dropped = list(prev.get("dropped_physical") or [])
-        if cmap or dropped:
-            prev_names = {
-                f["name"] for f in (prev.get("schema") or {}).get("fields", [])
-            }
-            taken = set(cmap.values())
-            for fld in df.schema.fields:
-                if fld.name in cmap or fld.name in prev_names:
-                    continue
-                # a NEW logical column whose identity physical name is a
-                # tombstone (re-add after drop) or another column's
-                # physical (its logical name was renamed away) — either way
-                # old files hold UNRELATED data under that name
-                if fld.name in dropped or fld.name in taken:
-                    cmap[fld.name] = f"{fld.name}_r{uuid.uuid4().hex[:8]}"
-        if cmap:
-            from pyspark.sql import functions as F
-
-            df_w = df.select(
-                [F.col(c).alias(cmap.get(c, c)) for c in df.columns]
-            )
-            pb_w = [cmap.get(c, c) for c in pb]
-        else:
-            df_w, pb_w = df, pb
-        data_dir = Path(path) / "data" / uuid.uuid4().hex
-        writer = df_w.write.mode("error")
-        if max_records_per_file:
-            # write-time file sizing (the other half of the small-files
-            # problem compaction fixes after the fact): cap rows per file
-            # so one wide task can't emit a multi-GB file
-            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-        if pb_w:
-            writer = writer.partitionBy(*pb_w)
-        writer.parquet(str(data_dir))
-        new_files = sorted(
-            str(p.relative_to(path))
-            for p in data_dir.rglob("*.parquet")
-            if p.is_file()
+        df = _prepare_frame(df, prev, spec, mode, carry_files)
+        new = _write_files(
+            df, path, prev, spec, carry_files, allow_type_widening,
+            max_records_per_file, row_ids_consumed,
         )
-        files = list(carry_files) + new_files
-        schema = df.schema.jsonValue()
-        # the hidden materialized-row-id column never joins the committed
-        # schema (it IS in the parquet of rewrite-written files; readers
-        # add it explicitly via keep_row_ids)
-        materialized_ids = _ROWID_COL in df.columns
-        if (
-            materialized_ids or _ROWCV_COL in df.columns
-        ) and not _row_tracking_on(prev):
-            raise ValueError(
-                f"{_ROWID_COL!r}/{_ROWCV_COL!r} are reserved column names "
-                "(row tracking); rename the column"
+        # bloom masks and NDV registers: one extra scan per column over
+        # the NEW files only; carried files keep their committed refs
+        spark = df.sparkSession
+        if spec.bloom_by and new.files:
+            new.blooms = _build_blooms(
+                spark, path, new.files, spec.bloom_by, spec.column_mapping
             )
-        if materialized_ids:
-            schema = {
-                **schema,
-                "fields": [
-                    f
-                    for f in schema["fields"]
-                    if f["name"] not in (_ROWID_COL, _ROWCV_COL)
-                ],
-            }
-        if carry_files and prev.get("schema"):
-            schema = _merge_schemas(
-                prev["schema"], schema, allow_type_widening=allow_type_widening
+        if spec.ndv_by and new.files:
+            new.ndv = _build_ndv(
+                spark, path, new.files, spec.ndv_by, spec.column_mapping
             )
-            # a widened column's committed bloom masks / bucket assignments
-            # hash the NARROW physical values — Spark hashes int and long of
-            # the same value differently, so a widened probe would silently
-            # MISS files (false negatives).  Zone maps compare values, not
-            # hashes, and stay exact; the hash-indexed layouts must refuse.
-            changed = {
-                f["name"]
-                for f, p in zip(schema["fields"], prev["schema"]["fields"])
-                if f["name"] == p["name"] and f["type"] != p["type"]
-            }
-            if changed:
-                hashed = set(bspec["cols"] if bspec else []) | (
-                    {bb[0]} if bb else set()
-                )
-                bad = sorted(changed & hashed)
-                if bad:
-                    raise ValueError(
-                        f"type widening refused for {bad}: the column(s) "
-                        "back a hash-indexed layout (bloom index / hash "
-                        "buckets) whose committed masks hash the narrow "
-                        "type; rebuild via overwrite or compact first"
-                    )
-        new_stats, new_meta = _harvest(path, new_files)
-        # The commit's new-row count comes from the parquet FOOTERS the
-        # stats harvest just read (md.num_rows is authoritative) — not a
-        # second Spark scan of everything the write produced; only an
-        # unreadable footer (no "rows" entry) falls back to the re-read.
-        if new_files and all("rows" in new_meta.get(f, {}) for f in new_files):
-            n_new = sum(int(new_meta[f]["rows"]) for f in new_files)
-        else:
-            n_new = (
-                df.sparkSession.read.parquet(str(data_dir)).count()
-                if new_files
-                else 0
-            )
-        # Stamp each new file's COMMIT VERSION into its meta entry: the
-        # initial-default read path decides "file predates column C" by
-        # comparing this against the default's since-version (files with no
-        # stamp are legacy = pre-default by construction).  Kept exact
-        # across commit races — the rebase bumps it to the version that
-        # actually commits.
-        for f in new_files:
-            new_meta.setdefault(f, {})["v"] = (vs[-1] + 1) if vs else 1
-        # Row tracking: append-written files get a base_row_id (implicit
-        # ids, zero storage); rewrite-written files carry materialized ids
-        # and the verb reports how many FRESH ids it drew (upsert inserts).
-        track = _row_tracking_on(prev)
-        rid_consumed = int(row_ids_consumed or 0)
-        hw0 = int(prev.get("row_id_high_water") or 0) if track else 0
-        if track and not materialized_ids:
-            nb = hw0
-            for f in new_files:
-                new_meta[f]["brid"] = nb
-                nb += int(new_meta[f].get("rows") or 0)
-            rid_consumed = nb - hw0
-        if pb:
-            for rel in new_files:
-                for name, v in _partition_values(rel, schema, cmap).items():
-                    if v is not None:
-                        new_stats.setdefault(rel, {})[
-                            cmap.get(name, name)
-                        ] = [v, v]
-        prev_stats = prev.get("file_stats", {})
-        prev_meta = prev.get("file_meta", {})
-        file_stats = {
-            **{f: prev_stats[f] for f in carry_files if f in prev_stats},
-            **new_stats,
-        }
-        file_meta = {
-            **{f: prev_meta[f] for f in carry_files if f in prev_meta},
-            **new_meta,
-        }
-        # Bloom indexes ride per-file like stats: carried files keep their
-        # committed masks verbatim, new files get one extra scan per bloom
-        # column (NEW data only — the unchanged portion costs zero I/O here
-        # too).  A false positive only costs an extra file open, and DV'd
-        # rows staying in a mask is harmless for the same reason.
-        prev_blooms = prev.get("bloom") or {}
-        blooms = {f: prev_blooms[f] for f in carry_files if f in prev_blooms}
-        if bspec and new_files:
-            blooms.update(
-                _build_blooms(df.sparkSession, path, new_files, bspec, cmap)
-            )
-        # NDV registers ride per-file exactly like bloom masks: carried
-        # files keep their committed sidecar refs, new files get one extra
-        # register scan (NEW data only)
-        prev_ndv = prev.get("ndv") or {}
-        ndv_plane = {f: prev_ndv[f] for f in carry_files if f in prev_ndv}
-        if nspec and new_files:
-            ndv_plane.update(
-                _build_ndv(df.sparkSession, path, new_files, nspec, cmap)
-            )
-        # Shallow-clone lineage: carried files keep their source-table base
-        # (zero-copy); every rewrite lands locally, so mutation gradually
-        # materializes the clone and compact()/overwrite completes it.
-        prev_fb = prev.get("file_base") or {}
-        file_base = {f: prev_fb[f] for f in carry_files if f in prev_fb}
-        # Delete vectors ride with the files they address: a carried file
-        # keeps its DV'd positions (the DV parquet keys rows by immutable
-        # (file, pos), so entries for rewritten/dropped files go dead
-        # harmlessly); a commit that carries no DV'd file drops the DV set —
-        # overwrite and compact therefore materialize outstanding deletes.
-        prev_dv_counts = prev.get("dv_counts") or {}
-        dv_counts = {
-            f: prev_dv_counts[f] for f in carry_files if f in prev_dv_counts
-        }
-        dv_files_c, dv_covers_c = _carry_dv_files(prev, dv_counts)
-        if dv_counts:  # carried DV parquet files keep their base too
-            for f in dv_files_c:
-                if f in prev_fb:
-                    file_base[f] = prev_fb[f]
-        carried_rows = (
-            prev["row_count"]
-            if mode == "append"
-            else sum(
-                _file_rows(path, f, prev_meta, prev_fb) for f in carry_files
-            )
-            - sum(dv_counts.values())
+        tail = {}
+        if cdf_fut is not None and (cdf_files := cdf_fut.result()):
+            tail["cdf_files"] = cdf_files
+            tail["cdf_file_meta"] = _cdf_file_meta(path, cdf_files)
+        if txn_id is not None:
+            tail["txn_id"] = txn_id
+        read_set = (
+            None if mode == "append" else set(prev["files"]) - set(carry_files)
         )
-    except BaseException:
-        # a failure between submitting the feed side job and joining
-        # it must not leave the job running against inputs the
-        # caller unpersists, nor its output orphaned in _change_data/
-        if cdf_future is not None:
-            _abandon_cdf(cdf_future, path)
-        raise
 
-    import time
-
-    if cdf_future is not None:
-        # join the concurrent feed write; its file list rides the
-        # manifest exactly as a pre-written cdf_files list would
-        cdf_files = cdf_future.result()
-    manifest = {
-        "version": (vs[-1] + 1) if vs else 1,
-        "mode": mode,
-        "committed_at": time.time(),
-        "files": files,
-        "row_count": n_new + carried_rows,
-        "schema": schema,
-        "file_stats": file_stats,
-        "file_meta": file_meta,
-    }
-    if dv_counts:
-        manifest["dv_counts"] = dv_counts
-        manifest["dv_files"] = dv_files_c
-        if dv_covers_c:
-            manifest["dv_covers"] = dv_covers_c
-    if pb:
-        manifest["partition_by"] = pb
-    if bb:
-        manifest["bucket_by"] = list(bb)
-    if bspec:
-        manifest["bloom_by"] = bspec
-        if blooms:
-            manifest["bloom"] = blooms
-    if nspec:
-        manifest["ndv_by"] = nspec
-        if ndv_plane:
-            manifest["ndv"] = ndv_plane
-    if cb_spec:
-        manifest["cluster_by"] = cb_spec
-    if file_base:
-        manifest["file_base"] = file_base
-    if constraints:
-        manifest["constraints"] = constraints
-    if cdefaults:
-        # Defaults can only leave with their column via drop_column
-        # (which prunes column_defaults in its own metadata commit) — a
-        # NARROWER overwrite frame never drops one, because
-        # _materialize_defaults above re-adds every omitted defaulted
-        # column before the write (Delta keeps defaults until an
-        # explicit drop, too).  The schema filter here is therefore a
-        # consistency guard, not a live narrowing path: it keeps a
-        # default from outliving its column should a future verb commit
-        # a schema that lost the column without routing through
-        # materialization.
-        live_cd = {
-            c: spec
-            for c, spec in cdefaults.items()
-            if any(f["name"] == c for f in schema["fields"])
-        }
-        if live_cd:
-            manifest["column_defaults"] = live_cd
-    if _cdf_on(prev):  # the feed property rides every commit
-        manifest["change_data_feed"] = True
-    if cdf_files:  # THIS commit's materialized change rows (never carried)
-        manifest["cdf_files"] = cdf_files
-        manifest["cdf_file_meta"] = _cdf_file_meta(path, cdf_files)
-    if track:
-        manifest["row_tracking"] = True
-        manifest["row_id_high_water"] = hw0 + rid_consumed
-    if gen:
-        manifest["generated_columns"] = gen
-    if ident:
-        manifest["identity_columns"] = ident
-    if cmap:
-        manifest["column_mapping"] = cmap
-    if dropped:
-        manifest["dropped_physical"] = dropped
-    if txn_id is not None:
-        manifest["txn_id"] = txn_id
-    # Optimistic-concurrency conflict resolution (the Delta/Iceberg
-    # commit protocol): the loser of a version race re-reads the new
-    # head, re-VALIDATES its commit against it, and re-links at head+1.
-    #
-    # APPENDs always rebase — an append's read set is empty, so two
-    # writers landing disjoint file sets both commit whatever the
-    # interleaving (Delta's append-vs-append rule).  ROW-LEVEL REWRITES
-    # (upsert/delete/update/compact) rebase iff the rebased result
-    # equals SOME serial order of the two commits — write
-    # serializability, Delta's default isolation level and the
-    # semantics Iceberg's optimistic commits give the reference's MERGE
-    # (/root/reference/utils/merge_utils.py:70-82):
-    #
-    # - winner was a PURE APPEND → serial order "loser first, winner
-    #   second": an append is a blind write, so it lands identically on
-    #   top of the loser's output.  Valid unconditionally — even when
-    #   the appended rows would have matched the loser's predicate (in
-    #   that serial order they arrived after the rewrite; Delta's
-    #   WriteSerializable accepts the same reordering).
-    # - winner REWROTE or DV'd rows → serial order "winner first, loser
-    #   second": valid iff the loser's decisions would have been
-    #   identical over the head — its READ SET (the candidate files it
-    #   rewrote) must be untouched (no file removed, no deletion vector
-    #   added: ``_rebase_read_set`` disjointness), and the winner's
-    #   ADDED files must be provably outside the loser's read predicate
-    #   (``read_range``) by the head's zone maps, else the loser should
-    #   have read them.  ``content_independent=True`` (compact) skips
-    #   the added-file check: compaction moves rows without deciding on
-    #   them, so a file it didn't select is merely left uncompacted.
-    # - anything else — overlapping rewrites, spec changes underfoot,
-    #   no read predicate to prove added-file disjointness with —
-    #   refuses deterministically and the caller re-runs against the
-    #   new head (the conservative Delta/Iceberg overlapping-rewrite
-    #   rule).
-    #
-    # OVERWRITE never rebases: it replaces the whole table, so no
-    # serial order preserves both commits' effects.
-    #
-    # Every rebase re-checks what the head could have changed
-    # underfoot: layout specs must be unchanged, concurrently-added
-    # CHECK constraints re-validate the new rows, schemas re-merge, a
-    # concurrent widening of a hash-indexed column refuses (our
-    # committed masks hash the narrow type), and concurrent
-    # identity-id consumption refuses (assigned ranges would collide).
-    _norm = lambda v: json.loads(json.dumps(v, default=dict))  # noqa: E731
-    _rebaseable = ("append", "upsert", "delete", "update", "compact")
-    # the files this commit READ and rewrote (decisions were made over
-    # their rows): fixed at entry — later rebase iterations keep
-    # comparing against the files actually read, not the moving head
-    _read_set = set(prev.get("files") or []) - set(carry_files)
-    for _ in range(_COMMIT_RETRIES):
-        try:
-            return _commit_state(path, manifest, prev if vs else None)
-        except ConcurrentCommitError as e:
-            if mode not in _rebaseable:
-                raise ConcurrentCommitError(
-                    f"{mode} at {path} lost a commit race for version "
-                    f"{manifest['version']}: an overwrite replaces the "
-                    "whole table, so no serial order preserves both "
-                    "commits — re-run against the new head"
-                ) from e
-            head_vs = versions(path)
-            head = _read_manifest(path, head_vs[-1])
-            for k in (
-                "partition_by",
-                "bucket_by",
-                "bloom_by",
-                "ndv_by",
-                "cluster_by",
-                "generated_columns",
-                "column_mapping",
-                "dropped_physical",
-                "row_tracking",
-                # a concurrently-added column DEFAULT refuses: this
-                # commit's frame never materialized it, so in the
-                # "winner first" serial order its new files would
-                # wrongly read NULL where the default belongs
-                "column_defaults",
-            ):
-                if _norm(head.get(k)) != _norm(manifest.get(k)):
-                    raise ConcurrentCommitError(
-                        f"{mode} at {path} lost a commit race and the "
-                        f"winner changed the table's {k} spec "
-                        f"({_norm(manifest.get(k))!r} -> "
-                        f"{_norm(head.get(k))!r}); cannot rebase"
-                    ) from e
-            # identity watermark: compare the head against the spec the
-            # loser STARTED from (prev), not its output spec — both
-            # racers advance 'assigned' identically from the same base,
-            # so output specs can agree while the assigned id RANGES
-            # collide.  Any concurrent consumption refuses.
-            if _norm(head.get("identity_columns")) != _norm(
-                prev.get("identity_columns")
-            ):
-                raise ConcurrentCommitError(
-                    f"{mode} at {path} lost a commit race and the "
-                    "winner consumed identity-column ids; the ids "
-                    "assigned here would collide — re-run"
-                ) from e
-            prev_files = set(prev.get("files") or [])
-            winner_removed = prev_files - set(head["files"])
-            winner_added = [
-                f for f in head["files"] if f not in prev_files
+        def build(base: dict) -> dict:
+            nonlocal spec
+            if base is prev:
+                return _assemble(path, prev, carry_files, new, spec, mode, tail)
+            merged = _revalidate_rebase(
+                path, mode, df, prev, base, new, spec, allow_type_widening
+            )
+            spec = replace(spec, constraints=base.get("constraints") or {})
+            carry = [
+                f for f in base["files"] if read_set is None or f not in read_set
             ]
-            prev_dvc = prev.get("dv_counts") or {}
-            head_dvc = head.get("dv_counts") or {}
-            if mode != "append":
-                if conflicted := sorted(
-                    (winner_removed & _read_set)
-                    | {
-                        f
-                        for f in _read_set
-                        if head_dvc.get(f, 0) != prev_dvc.get(f, 0)
-                    }
-                ):
-                    raise ConcurrentCommitError(
-                        f"{mode} at {path} lost a commit race and the "
-                        f"winner rewrote or deleted rows in file(s) "
-                        f"{conflicted} this {mode} read and decided "
-                        "rows over — overlapping rewrites cannot "
-                        "rebase; re-run against the new head"
-                    ) from e
-                pure_append = not winner_removed and _norm(
-                    head.get("dv_counts")
-                ) == _norm(prev.get("dv_counts"))
-                if (
-                    not pure_append
-                    and not content_independent
-                    and winner_added
-                ):
-                    # serial order must be "winner first": the winner's
-                    # added files count as rows the loser SHOULD have
-                    # read unless the head zone maps prove them outside
-                    # its read predicate
-                    if read_range is None:
-                        raise ConcurrentCommitError(
-                            f"{mode} at {path} lost a commit race to a "
-                            "row-level rewrite and read the whole "
-                            "table (no prune range) — cannot prove the "
-                            "winner's added files disjoint; re-run "
-                            "against the new head"
-                        ) from e
-                    may, _skip = _candidate_split(
-                        {
-                            "files": winner_added,
-                            "file_stats": head.get("file_stats") or {},
-                            "schema": head.get("schema"),
-                            "column_mapping": head.get("column_mapping"),
-                        },
-                        *read_range,
-                    )
-                    if may:
-                        raise ConcurrentCommitError(
-                            f"{mode} at {path} lost a commit race and "
-                            f"the winner's added file(s) {may} may "
-                            "hold rows inside this rewrite's read "
-                            f"range {read_range!r} — re-run against "
-                            "the new head"
-                        ) from e
-            ours = manifest.get("constraints") or {}
-            extra = {
-                n: x
-                for n, x in (head.get("constraints") or {}).items()
-                if ours.get(n) != x
-            }
-            if extra and new_files:
-                _validate_constraints(
-                    df,
-                    extra,
-                    f"{mode} rebase (constraint added concurrently)",
-                )
-            merged = _merge_schemas(
-                head["schema"],
-                schema,
-                allow_type_widening=allow_type_widening,
+            return _assemble(
+                path, base, carry, replace(new, schema=merged), spec, mode, tail
             )
-            hashed = set(bspec["cols"] if bspec else []) | (
-                {bb[0]} if bb else set()
-            )
-            mine = {f["name"]: f["type"] for f in schema["fields"]}
-            for fld in merged["fields"]:
-                if (
-                    fld["name"] in hashed
-                    and fld["name"] in mine
-                    and fld["type"] != mine[fld["name"]]
-                ):
-                    raise ConcurrentCommitError(
-                        f"{mode} at {path} lost a commit race and the "
-                        f"winner widened hash-indexed column "
-                        f"{fld['name']!r}; our committed masks hash "
-                        "the narrow type — re-run"
-                    ) from e
-            new_blooms = {f: blooms[f] for f in new_files if f in blooms}
-            head_blooms = head.get("bloom") or {}
-            new_ndv = {f: ndv_plane[f] for f in new_files if f in ndv_plane}
-            head_ndv = head.get("ndv") or {}
-            head_meta = head.get("file_meta") or {}
-            head_fb = head.get("file_base") or {}
-            if mode == "append":
-                rebase_carry = list(head["files"])
-                carried_rows_rb = head["row_count"]
-                carried_dvc = dict(head_dvc)
-            else:
-                # winner-first serial order: the head minus the files
-                # this commit read (their rows live in new_files now)
-                rebase_carry = [
-                    f for f in head["files"] if f not in _read_set
-                ]
-                carried_dvc = {
-                    f: head_dvc[f] for f in rebase_carry if f in head_dvc
-                }
-                carried_rows_rb = sum(
-                    _file_rows(path, f, head_meta, head_fb)
-                    for f in rebase_carry
-                ) - sum(carried_dvc.values())
-            head_stats = head.get("file_stats") or {}
-            rebase_fb = {
-                f: head_fb[f] for f in rebase_carry if f in head_fb
-            }
-            carried_dvf, carried_cov = _carry_dv_files(head, carried_dvc)
-            for f in carried_dvf:
-                if f in head_fb:
-                    rebase_fb[f] = head_fb[f]
-            # keep the commit-version stamp exact under the rebase (the
-            # initial-default read path compares it to since-versions)
-            new_meta = {
-                f: {**e, "v": head["version"] + 1}
-                for f, e in new_meta.items()
-            }
-            if track:
-                head_hw = int(head.get("row_id_high_water") or 0)
-                if head_hw != hw0:
-                    if materialized_ids and rid_consumed:
-                        raise ConcurrentCommitError(
-                            f"{mode} at {path} lost a commit race and "
-                            "the winner consumed row-tracking ids; the "
-                            "fresh ids materialized into this commit's "
-                            "files would collide — re-run against the "
-                            "new head"
-                        ) from e
-                    # implicit base ids are pure metadata: re-deal them
-                    # from the head's watermark, no file rewritten
-                    nb = head_hw
-                    for f in new_files:
-                        if "brid" in new_meta.get(f, {}):
-                            new_meta[f] = {**new_meta[f], "brid": nb}
-                            nb += int(new_meta[f].get("rows") or 0)
-                    hw0 = head_hw
-            manifest = {
-                **manifest,
-                "version": head["version"] + 1,
-                "committed_at": time.time(),
-                "files": rebase_carry + new_files,
-                "row_count": carried_rows_rb + n_new,
-                "schema": merged,
-                "file_stats": {
-                    **{
-                        f: head_stats[f]
-                        for f in rebase_carry
-                        if f in head_stats
-                    },
-                    **new_stats,
-                },
-                "file_meta": {
-                    **{
-                        f: head_meta[f]
-                        for f in rebase_carry
-                        if f in head_meta
-                    },
-                    **new_meta,
-                },
-            }
-            for k, v in (
-                ("dv_counts", carried_dvc),
-                ("dv_files", carried_dvf),
-                ("dv_covers", carried_cov),
-                (
-                    "bloom",
-                    {
-                        **{
-                            f: head_blooms[f]
-                            for f in rebase_carry
-                            if f in head_blooms
-                        },
-                        **new_blooms,
-                    },
-                ),
-                (
-                    "ndv",
-                    {
-                        **{
-                            f: head_ndv[f]
-                            for f in rebase_carry
-                            if f in head_ndv
-                        },
-                        **new_ndv,
-                    },
-                ),
-                ("file_base", rebase_fb),
-                ("constraints", head.get("constraints")),
-            ):
-                if v:
-                    manifest[k] = v
-                else:
-                    manifest.pop(k, None)
-            if track:
-                manifest["row_id_high_water"] = hw0 + rid_consumed
-            prev, vs = head, head_vs
-    raise ConcurrentCommitError(
-        f"{mode} at {path} lost {_COMMIT_RETRIES} consecutive commit "
-        "races; giving up (retry externally)"
-    )
+
+        return _commit_loop(
+            path, mode, prev, build, read_set, read_range, content_independent
+        )
 
 
 def _materialize_defaults(df: DataFrame, manifest: dict) -> DataFrame:
@@ -3420,13 +3387,8 @@ def rollback(path: str, to_version: int) -> int:
     ``read_as_of`` probe at a time when some later version was current
     must keep resolving to that later version, not be shadowed by a
     rollback commit carrying the rolled-back-to snapshot's old clock."""
-    import time
-
     m = dict(_read_manifest(path, to_version))
-    txn = m.pop("txn_id", None)
-    m.pop("cdf_files", None)  # per-commit key: the rollback did not
-    m.pop("cdf_file_meta", None)
-    # produce the source commit's change rows
+    txn = m.get("txn_id")
     vs = versions(path)
     if m.get("row_tracking"):
         # ids assigned AFTER the rolled-back-to snapshot must never be
@@ -3437,13 +3399,9 @@ def rollback(path: str, to_version: int) -> int:
         m["row_id_high_water"] = max(
             int(m.get("row_id_high_water") or 0), cur_hw
         )
-    nxt = vs[-1] + 1
-    manifest = {
-        **m,
-        "version": nxt,
-        "mode": f"rollback:{to_version}",
-        "committed_at": time.time(),
-    }
+    # the per-commit keys drop: the rollback did not produce the source
+    # commit's change rows, nor is it that commit's transaction
+    manifest = _next_manifest(m, f"rollback:{to_version}", version=vs[-1] + 1)
     if txn is not None:
         manifest["rolled_back_txn_id"] = txn
     return _commit_state(path, manifest, _read_manifest(path, vs[-1]))
@@ -3485,8 +3443,6 @@ def clone_table(
     DistCp-shaped (cost = snapshot bytes), which is exactly Delta's
     deep-clone economics; everything incremental should use
     ``read_changes`` ∘ ``versioned_apply_changes`` instead."""
-    import time
-
     vs = versions(src)
     if not vs:
         raise FileNotFoundError(f"no committed versions at {src}")
@@ -3500,18 +3456,12 @@ def clone_table(
     file_base = dict(m.get("file_base") or {})  # clone-of-clone: keep
     for f in list(m["files"]) + list(m.get("dv_files") or []):
         file_base.setdefault(f, src_abs)
-    manifest = {
-        **m,
-        "version": 1,
-        "mode": (
-            f"export:{src_abs}@v{v}" if deep else f"clone:{src_abs}@v{v}"
-        ),
-        "committed_at": time.time(),
-        "file_base": file_base,
-    }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
+    manifest = _next_manifest(
+        m,
+        f"export:{src_abs}@v{v}" if deep else f"clone:{src_abs}@v{v}",
+        version=1,
+        file_base=file_base,
+    )
     if deep:
         import shutil
         from concurrent.futures import ThreadPoolExecutor
@@ -3724,7 +3674,6 @@ def merge_branch(
     reference — and raises the same cannot-fast-forward error the
     up-front check gives, leaving zero orphans in the parent root."""
     import shutil
-    import time
     from concurrent.futures import ThreadPoolExecutor
 
     branches = list_branches(path)
@@ -3790,15 +3739,9 @@ def merge_branch(
     # every live file now resolves against the parent root natively:
     # parent-based files were already there, everything else was just
     # copied under its same relative name — no file_base survives
-    manifest = {
-        **bh,
-        "version": pvs[-1] + 1,
-        "mode": f"merge_branch:{name}@v{bvs[-1]}",
-        "committed_at": time.time(),
-    }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
+    manifest = _next_manifest(
+        bh, f"merge_branch:{name}@v{bvs[-1]}", version=pvs[-1] + 1
+    )
     manifest.pop("file_base", None)
     try:
         return _commit_state(path, manifest, _read_manifest(path, pvs[-1]))
@@ -4536,7 +4479,6 @@ def versioned_upsert(
             carry_files=untouched,
             read_range=(pc, lo, hi),
             cdf_feed=cdf,
-            cdf_cmap=_column_mapping(m),
             row_ids_consumed=rid_consumed,
         )
     finally:
@@ -4628,7 +4570,6 @@ def versioned_delete(
             path,
             predicate,
             m,
-            vs,
             candidates,
             read_range=(
                 (prune_col, lo, hi) if prune_col is not None else None
@@ -4669,7 +4610,6 @@ def versioned_delete(
                 (prune_col, lo, hi) if prune_col is not None else None
             ),
             cdf_feed=cdf,
-            cdf_cmap=_column_mapping(m),
         )
     finally:
         if pinned is not None:
@@ -4681,7 +4621,6 @@ def _delete_with_vectors(
     path: str,
     predicate: str,
     m: dict,
-    vs: list[int],
     candidates: list[str],
     read_range: tuple | None = None,
 ) -> int:
@@ -4690,9 +4629,15 @@ def _delete_with_vectors(
     so a position can never be recorded twice), write the matched
     (file, pos) pairs as a new DV parquet, and commit a metadata-only
     manifest — same file list, stats and sizes verbatim, row_count
-    decremented by the manifest-recorded per-file match counts."""
-    import time
+    decremented by the manifest-recorded per-file match counts.
 
+    The commit goes through ``_commit_loop`` with the candidates as its
+    read set: the vectors address IMMUTABLE rows, so a losing DV delete
+    re-links on the head whenever its candidate files are untouched
+    there (present, DV state unchanged — a winner's new vector could
+    overlap ours and double-count) and the winner's added files are
+    provably outside the read range (pure appends always: serial order
+    delete-then-append)."""
     from pyspark.sql import functions as F
 
     cur = _read_files(spark, path, candidates, m, keep_lineage=True)
@@ -4702,185 +4647,83 @@ def _delete_with_vectors(
     # candidate file — pin it (O(deleted rows), not O(candidate
     # bytes)) so the candidates are scanned once.  Unpersisted below.
     pinned = hit.persist() if _cdf_on(m) else None
+    feed = None
     if pinned is not None:
         hit = pinned
-    matched = hit.select(
-        F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
-    )
+        feed = hit.drop("__dv_file", "__dv_pos").withColumn(
+            "_change_type", F.lit("delete")
+        )
     dv_rel = f"_deletes/{uuid.uuid4().hex}"
-    cdf_files = None
     try:
         # the feed write and the (file, pos) DV write are independent
-        # jobs over the SAME pinned matched set — run them concurrently
-        # (guide §2.6): the commit pays max(feed, dv) instead of
-        # feed + dv.  try/finally so the pin never outlives the verb
-        # even when a write raises.
-        cdf_fut = (
-            _side_job_pool().submit(
-                _write_cdf,
-                hit.drop("__dv_file", "__dv_pos").withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                path,
-                _column_mapping(m),
+        # jobs over the SAME pinned matched set: the feed runs as the
+        # side job, so the commit pays max(feed, dv), not feed + dv
+        with _feed_job(feed, path, _column_mapping(m)) as cdf_fut:
+            hit.select(
+                F.col("__dv_file").alias("file"),
+                F.col("__dv_pos").alias("pos"),
+            ).write.mode("error").parquet(str(Path(path) / dv_rel))
+            tail = {}
+            if cdf_fut is not None and (cdf_files := cdf_fut.result()):
+                tail["cdf_files"] = cdf_files
+                tail["cdf_file_meta"] = _cdf_file_meta(path, cdf_files)
+            new_dv_files = sorted(
+                str(p.relative_to(path))
+                for p in (Path(path) / dv_rel).rglob("*.parquet")
+                if p.is_file()
             )
-            if _cdf_on(m)
-            else None
-        )
-        matched.write.mode("error").parquet(str(Path(path) / dv_rel))
-        if cdf_fut is not None:
-            cdf_files = cdf_fut.result()
+            per_file = (
+                spark.read.parquet(str(Path(path) / dv_rel))
+                .groupBy("file")
+                .agg(
+                    F.count(F.lit(1)).alias("count"),
+                    # which DV parquet part(s) hold this file's rows —
+                    # recorded as dv_covers so later carries can drop
+                    # vectors whose covered files all left the table
+                    # (O(matched files) rows, same bound as the count)
+                    F.collect_set(F.col("_metadata.file_name")).alias(
+                        "dv_parts"
+                    ),
+                )
+                .collect()
+                if new_dv_files
+                else []
+            )
+            ours: dict[str, int] = {}
+            by_part = {Path(d).name: d for d in new_dv_files}
+            covers_new: dict[str, set] = {d: set() for d in new_dv_files}
+            for r in per_file:
+                ours[r["file"]] = ours.get(r["file"], 0) + r["count"]
+                for pn in r["dv_parts"]:
+                    covers_new[by_part[pn]].add(r["file"])
+
+            def build(base: dict) -> dict:
+                merged = dict(base.get("dv_counts") or {})
+                for f, n in ours.items():
+                    merged[f] = merged.get(f, 0) + n
+                out = _next_manifest(
+                    base,
+                    "delete",
+                    row_count=base["row_count"] - sum(ours.values()),
+                    **tail,
+                )
+                if merged:
+                    out["dv_counts"] = merged
+                    out["dv_files"] = (base.get("dv_files") or []) + new_dv_files
+                    cov = {
+                        **(base.get("dv_covers") or {}),
+                        **{d: sorted(covers_new[d]) for d in new_dv_files},
+                    }
+                    if cov:
+                        out["dv_covers"] = cov
+                return out
+
+            return _commit_loop(
+                path, "delete", m, build, set(candidates), read_range
+            )
     finally:
         if pinned is not None:
             pinned.unpersist()
-    new_dv_files = sorted(
-        str(p.relative_to(path))
-        for p in (Path(path) / dv_rel).rglob("*.parquet")
-        if p.is_file()
-    )
-    per_file = (
-        spark.read.parquet(str(Path(path) / dv_rel))
-        .groupBy("file")
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            # which DV parquet part(s) hold this file's rows — recorded
-            # as dv_covers so later carries can drop vectors whose
-            # covered files all left the table (O(matched files) rows,
-            # same bound as the count collect)
-            F.collect_set(F.col("_metadata.file_name")).alias("dv_parts"),
-        )
-        .collect()
-        if new_dv_files
-        else []
-    )
-    dv_counts = dict(m.get("dv_counts") or {})
-    total = 0
-    ours: dict[str, int] = {}
-    by_part = {Path(d).name: d for d in new_dv_files}
-    covers_new: dict[str, set] = {d: set() for d in new_dv_files}
-    for r in per_file:
-        ours[r["file"]] = ours.get(r["file"], 0) + r["count"]
-        dv_counts[r["file"]] = dv_counts.get(r["file"], 0) + r["count"]
-        total += r["count"]
-        for pn in r["dv_parts"]:
-            covers_new[by_part[pn]].add(r["file"])
-
-    def _mk(base: dict) -> dict:
-        merged = dict(base.get("dv_counts") or {})
-        for f, n in ours.items():
-            merged[f] = merged.get(f, 0) + n
-        out = {
-            **base,
-            "version": base["version"] + 1,
-            "mode": "delete",
-            "committed_at": time.time(),
-            "row_count": base["row_count"] - total,
-        }
-        out.pop("txn_id", None)
-        out.pop("cdf_file_meta", None)
-        out.pop("cdf_files", None)
-        if cdf_files:
-            out["cdf_files"] = cdf_files
-            out["cdf_file_meta"] = _cdf_file_meta(path, cdf_files)
-        if merged:
-            out["dv_counts"] = merged
-            out["dv_files"] = (base.get("dv_files") or []) + new_dv_files
-            cov = {
-                **(base.get("dv_covers") or {}),
-                **{d: sorted(covers_new[d]) for d in new_dv_files},
-            }
-            if cov:
-                out["dv_covers"] = cov
-        return out
-
-    # Same write-serializability rebase as ``_write_snapshot``, for the
-    # merge-on-read commit: the (file, pos) vectors address IMMUTABLE
-    # rows, so a losing DV delete re-links on the head whenever its
-    # candidate files are untouched there (present, DV state unchanged
-    # — a winner's new vector could overlap ours and double-count) and
-    # the winner's added files are provably outside the read range
-    # (pure appends always: serial order delete-then-append).
-    _norm = lambda v: json.loads(json.dumps(v, default=dict))  # noqa: E731
-    base = m
-    for _ in range(_COMMIT_RETRIES):
-        try:
-            return _commit_state(path, _mk(base), base)
-        except ConcurrentCommitError as e:
-            head_vs = versions(path)
-            head = _read_manifest(path, head_vs[-1])
-            for k in (
-                "partition_by",
-                "bucket_by",
-                "bloom_by",
-                "ndv_by",
-                "cluster_by",
-                "generated_columns",
-                "column_mapping",
-                "dropped_physical",
-                "identity_columns",
-                "row_tracking",
-            ):
-                if _norm(head.get(k)) != _norm(base.get(k)):
-                    raise ConcurrentCommitError(
-                        f"dv delete at {path} lost a commit race and "
-                        f"the winner changed the table's {k} spec; "
-                        "cannot rebase — re-run against the new head"
-                    ) from e
-            cand = set(candidates)
-            base_dvc = base.get("dv_counts") or {}
-            head_dvc = head.get("dv_counts") or {}
-            removed = cand - set(head["files"])
-            dv_changed = {
-                f
-                for f in cand
-                if head_dvc.get(f, 0) != base_dvc.get(f, 0)
-            }
-            if conflicted := sorted(removed | dv_changed):
-                raise ConcurrentCommitError(
-                    f"dv delete at {path} lost a commit race and the "
-                    f"winner rewrote or deleted rows in file(s) "
-                    f"{conflicted} this delete scanned — overlapping "
-                    "rewrites cannot rebase; re-run against the new "
-                    "head"
-                ) from e
-            winner_added = [
-                f for f in head["files"] if f not in set(base["files"])
-            ]
-            pure_append = set(base["files"]) <= set(
-                head["files"]
-            ) and _norm(head.get("dv_counts")) == _norm(
-                base.get("dv_counts")
-            )
-            if not pure_append and winner_added:
-                if read_range is None:
-                    raise ConcurrentCommitError(
-                        f"dv delete at {path} lost a commit race to a "
-                        "row-level rewrite and read the whole table "
-                        "(no prune range) — cannot prove the winner's "
-                        "added files disjoint; re-run against the new "
-                        "head"
-                    ) from e
-                may, _skip = _candidate_split(
-                    {
-                        "files": winner_added,
-                        "file_stats": head.get("file_stats") or {},
-                        "schema": head.get("schema"),
-                        "column_mapping": head.get("column_mapping"),
-                    },
-                    *read_range,
-                )
-                if may:
-                    raise ConcurrentCommitError(
-                        f"dv delete at {path} lost a commit race and "
-                        f"the winner's added file(s) {may} may hold "
-                        "rows inside this delete's read range "
-                        f"{read_range!r} — re-run against the new head"
-                    ) from e
-            base = head
-    raise ConcurrentCommitError(
-        f"dv delete at {path} lost {_COMMIT_RETRIES} consecutive "
-        "commit races; giving up (retry externally)"
-    )
 
 
 def versioned_update(
@@ -5018,7 +4861,6 @@ def versioned_update(
                 (prune_col, lo, hi) if prune_col is not None else None
             ),
             cdf_feed=cdf,
-            cdf_cmap=_column_mapping(m),
         )
     finally:
         if hit is not None:
@@ -5078,7 +4920,6 @@ def _validate_merge_source_version(
                 "verb reads the whole table (by-source clauses / no "
                 "prune range) — recompute against the head"
             )
-        pc, lo, hi = read_range
         conflicts = []
         for src, fl in (
             (cur_side, added),
@@ -5086,18 +4927,7 @@ def _validate_merge_source_version(
         ):
             if not fl:
                 continue
-            may, _ = _candidate_split(
-                {
-                    "files": fl,
-                    "file_stats": src.get("file_stats") or {},
-                    "schema": src.get("schema"),
-                    "column_mapping": src.get("column_mapping"),
-                },
-                pc,
-                lo,
-                hi,
-            )
-            conflicts.extend(may)
+            conflicts.extend(_may_intersect(src, fl, read_range))
         if conflicts:
             raise ConcurrentCommitError(
                 f"{verb}: batch computed against "
@@ -5295,8 +5125,7 @@ def versioned_apply_changes(
         if track:
             out = _pin(out)
         return _apply_changes_commit(
-            spark, path, m, keys, cur, out, feed, cdf_on, track,
-            untouched, rr, pin=_pin,
+            path, m, keys, cur, out, feed, track, untouched, rr, pin=_pin
         )
     finally:
         for p in held:
@@ -5304,14 +5133,12 @@ def versioned_apply_changes(
 
 
 def _apply_changes_commit(
-    spark: SparkSession,
     path: str,
     m: dict,
     keys: list[str],
     cur: DataFrame,
     out: DataFrame,
     feed: DataFrame | None,
-    cdf_on: bool,
     track: bool,
     untouched: list[str],
     rr: tuple | None,
@@ -5328,57 +5155,53 @@ def _apply_changes_commit(
     # chain's eager jobs overlap it, then handed to _write_snapshot as
     # a Future — the feed selects off the pinned merge join, so the
     # overlap shares the pin, never re-runs the join
-    cdf_fut = (
-        _side_job_pool().submit(_write_cdf, feed, path, _column_mapping(m))
-        if cdf_on
-        else None
-    )
-    rid_consumed = 0
-    if track:
-        # carried rows keep id + commit version (not logically
-        # modified); updated rows inherit the replaced row's id but
-        # re-stamp their version; inserted keys draw fresh ids past the
-        # watermark — exactly versioned_upsert's contract.  The id map
-        # is its own candidate-file read consumed by BOTH the id-
-        # assignment count and the snapshot write — pin it (narrow:
-        # keys + two longs) so the candidate files are read once here.
-        cur_ids = (
-            cur.select(*keys, _ROWID_COL, _ROWCV_COL)
-            .groupBy(*keys)
-            .agg(
-                F.min(_ROWID_COL).alias(_ROWID_COL),
-                F.min(_ROWCV_COL).alias("__cv0"),
+    with _feed_job(feed, path, _column_mapping(m)) as cdf_fut:
+        rid_consumed = 0
+        if track:
+            # carried rows keep id + commit version (not logically
+            # modified); updated rows inherit the replaced row's id but
+            # re-stamp their version; inserted keys draw fresh ids past
+            # the watermark — exactly versioned_upsert's contract.  The
+            # id map is its own candidate-file read consumed by BOTH the
+            # id-assignment count and the snapshot write — pin it
+            # (narrow: keys + two longs) so the candidates are read once.
+            cur_ids = (
+                cur.select(*keys, _ROWID_COL, _ROWCV_COL)
+                .groupBy(*keys)
+                .agg(
+                    F.min(_ROWID_COL).alias(_ROWID_COL),
+                    F.min(_ROWCV_COL).alias("__cv0"),
+                )
             )
-        )
-        if pin is not None:
-            cur_ids = pin(cur_ids)
-        outi = (
-            out.join(cur_ids, keys, "left")
-            .withColumn(
-                _ROWCV_COL,
-                F.when(F.col("__act") == "carry", F.col("__cv0")).cast(
-                    "long"
-                ),
+            if pin is not None:
+                cur_ids = pin(cur_ids)
+            outi = (
+                out.join(cur_ids, keys, "left")
+                .withColumn(
+                    _ROWCV_COL,
+                    F.when(F.col("__act") == "carry", F.col("__cv0")).cast(
+                        "long"
+                    ),
+                )
+                .drop("__cv0", "__act")
             )
-            .drop("__cv0", "__act")
+            ins, rid_consumed = _assign_fresh_row_ids(
+                outi.filter(F.col(_ROWID_COL).isNull()).drop(_ROWID_COL),
+                keys,
+                int(m.get("row_id_high_water") or 0),
+            )
+            out = outi.filter(F.col(_ROWID_COL).isNotNull()).unionByName(
+                ins, allowMissingColumns=True
+            )
+        return _write_snapshot(
+            out,
+            path,
+            "upsert",
+            carry_files=untouched,
+            read_range=rr,
+            cdf_feed=cdf_fut,
+            row_ids_consumed=rid_consumed,
         )
-        ins, rid_consumed = _assign_fresh_row_ids(
-            outi.filter(F.col(_ROWID_COL).isNull()).drop(_ROWID_COL),
-            keys,
-            int(m.get("row_id_high_water") or 0),
-        )
-        out = outi.filter(F.col(_ROWID_COL).isNotNull()).unionByName(
-            ins, allowMissingColumns=True
-        )
-    return _write_snapshot(
-        out,
-        path,
-        "upsert",
-        carry_files=untouched,
-        read_range=rr,
-        cdf_feed=cdf_fut,
-        row_ids_consumed=rid_consumed,
-    )
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -5397,7 +5220,6 @@ def rename_column(path: str, old: str, new: str) -> int:
     mapping entry.  Time travel before the rename shows the old name,
     exactly like Delta."""
     import re
-    import time
 
     vs = versions(path)
     if not vs:
@@ -5432,19 +5254,17 @@ def rename_column(path: str, old: str, new: str) -> int:
     physical = cmap.pop(old, old)
     if physical != new:
         cmap[new] = physical
-    manifest = {
-        **m,
-        "version": vs[-1] + 1,
-        "mode": f"rename-column:{old}->{new}",
-        "committed_at": time.time(),
-        "schema": {
+    manifest = _next_manifest(
+        m,
+        f"rename-column:{old}->{new}",
+        schema={
             **m["schema"],
             "fields": [
                 {**f, "name": new} if f["name"] == old else dict(f)
                 for f in m["schema"]["fields"]
             ],
         },
-    }
+    )
     if cmap:
         manifest["column_mapping"] = cmap
     else:
@@ -5484,9 +5304,6 @@ def rename_column(path: str, old: str, new: str) -> int:
         manifest["column_defaults"] = {
             (new if k == old else k): v for k, v in cd.items()
         }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
     return _commit_state(path, manifest, m)
 
 
@@ -5503,7 +5320,6 @@ def drop_column(path: str, name: str) -> int:
     constraint or another generated column's expression; dropping a
     generated column removes its generation spec with it."""
     import re
-    import time
 
     vs = versions(path)
     if not vs:
@@ -5562,19 +5378,17 @@ def drop_column(path: str, name: str) -> int:
     dropped = list(m.get("dropped_physical") or [])
     if physical not in dropped:
         dropped.append(physical)
-    manifest = {
-        **m,
-        "version": vs[-1] + 1,
-        "mode": f"drop-column:{name}",
-        "committed_at": time.time(),
-        "schema": {
+    manifest = _next_manifest(
+        m,
+        f"drop-column:{name}",
+        schema={
             **m["schema"],
             "fields": [
                 dict(f) for f in m["schema"]["fields"] if f["name"] != name
             ],
         },
-        "dropped_physical": dropped,
-    }
+        dropped_physical=dropped,
+    )
     if cmap:
         manifest["column_mapping"] = cmap
     else:
@@ -5600,9 +5414,6 @@ def drop_column(path: str, name: str) -> int:
             manifest["column_defaults"] = c2
         else:
             manifest.pop("column_defaults", None)
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
     return _commit_state(path, manifest, m)
 
 
@@ -5634,8 +5445,6 @@ def add_column(
     The default value must be a plain JSON-representable literal of the
     column's type (int/float/str/bool) — expressions are the CHECK/
     generated-column machinery's job, not a default's."""
-    import time
-
     from pyspark.sql.types import StructType as _St
 
     vs = versions(path)
@@ -5653,7 +5462,7 @@ def add_column(
         raise ValueError(
             f"add_column: invalid type {type_str!r} for {name!r}"
         ) from e
-    field = {
+    col = {
         "name": name,
         "type": dt.jsonValue(),
         "nullable": True,
@@ -5666,25 +5475,19 @@ def add_column(
             f"add_column: default must be a plain literal, got "
             f"{type(default).__name__}"
         )
-    version = vs[-1] + 1
-    manifest = {
-        **m,
-        "version": version,
-        "mode": f"add-column:{name}",
-        "committed_at": time.time(),
-        "schema": {
+    manifest = _next_manifest(
+        m,
+        f"add-column:{name}",
+        schema={
             **m["schema"],
-            "fields": [dict(f) for f in m["schema"]["fields"]] + [field],
+            "fields": [dict(f) for f in m["schema"]["fields"]] + [col],
         },
-    }
+    )
     if default is not None:
         manifest["column_defaults"] = {
             **(m.get("column_defaults") or {}),
-            name: {"value": default, "since": version},
+            name: {"value": default, "since": manifest["version"]},
         }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
     return _commit_state(path, manifest, m)
 
 
@@ -5707,8 +5510,6 @@ def add_check_constraint(
     spec (carried across commits; the add itself is a metadata-only
     commit, mode ``add-constraint``), so time travel shows when each
     constraint appeared."""
-    import time
-
     vs = versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed versions at {path}")
@@ -5716,16 +5517,11 @@ def add_check_constraint(
     _validate_constraints(
         _read_files(spark, path, m["files"], m), {name: expr}, "existing data"
     )
-    manifest = {
-        **m,
-        "version": vs[-1] + 1,
-        "mode": f"add-constraint:{name}",
-        "committed_at": time.time(),
-        "constraints": {**m.get("constraints", {}), name: expr},
-    }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
+    manifest = _next_manifest(
+        m,
+        f"add-constraint:{name}",
+        constraints={**m.get("constraints", {}), name: expr},
+    )
     return _commit_state(path, manifest, m)
 
 
@@ -5767,8 +5563,6 @@ def enable_row_tracking(path: str) -> int:
     positions, whose ids simply retire with them), and the high-water
     mark starts past them.  O(files) metadata, zero data I/O — the
     Delta ALTER TABLE row-tracking backfill shape."""
-    import time
-
     vs = versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed versions at {path}")
@@ -5782,18 +5576,13 @@ def enable_row_tracking(path: str) -> int:
         rows = _file_rows(path, f, meta, fb)
         meta[f] = {**(meta.get(f) or {}), "brid": hw}
         hw += rows
-    manifest = {
-        **m,
-        "version": vs[-1] + 1,
-        "mode": "enable-row-tracking",
-        "committed_at": time.time(),
-        "row_tracking": True,
-        "row_id_high_water": hw,
-        "file_meta": meta,
-    }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
+    manifest = _next_manifest(
+        m,
+        "enable-row-tracking",
+        row_tracking=True,
+        row_id_high_water=hw,
+        file_meta=meta,
+    )
     return _commit_state(path, manifest, m)
 
 
@@ -5865,48 +5654,27 @@ def enable_change_data_feed(path: str) -> int:
     Commits from BEFORE enablement have no change files — feed reads
     across them raise honestly (``read_changes`` still serves any
     range by snapshot diff).  Metadata-only commit."""
-    import time
-
     vs = versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed versions at {path}")
     m = _read_manifest(path, vs[-1])
     if _cdf_on(m):
         return vs[-1]
-    manifest = {
-        **m,
-        "version": vs[-1] + 1,
-        "mode": "enable-cdf",
-        "committed_at": time.time(),
-        "change_data_feed": True,
-    }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
+    manifest = _next_manifest(m, "enable-cdf", change_data_feed=True)
     return _commit_state(path, manifest, m)
 
 
 def disable_change_data_feed(path: str) -> int:
     """Stop materializing change rows (metadata-only commit); already-
     written feed files stay readable for their versions."""
-    import time
-
     vs = versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed versions at {path}")
     m = _read_manifest(path, vs[-1])
     if not _cdf_on(m):
         return vs[-1]
-    manifest = {
-        **m,
-        "version": vs[-1] + 1,
-        "mode": "disable-cdf",
-        "committed_at": time.time(),
-    }
+    manifest = _next_manifest(m, "disable-cdf")
     manifest.pop("change_data_feed", None)
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
     return _commit_state(path, manifest, m)
 
 
@@ -6009,8 +5777,6 @@ def drop_not_null(path: str, column: str) -> int:
 
 def drop_check_constraint(path: str, name: str) -> int:
     """Remove a persisted CHECK constraint (metadata-only commit)."""
-    import time
-
     vs = versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed versions at {path}")
@@ -6019,16 +5785,7 @@ def drop_check_constraint(path: str, name: str) -> int:
     if name not in cons:
         raise ValueError(f"no constraint {name!r} on {path}")
     del cons[name]
-    manifest = {
-        **m,
-        "version": vs[-1] + 1,
-        "mode": f"drop-constraint:{name}",
-        "committed_at": time.time(),
-        "constraints": cons,
-    }
-    manifest.pop("txn_id", None)
-    manifest.pop("cdf_files", None)
-    manifest.pop("cdf_file_meta", None)
+    manifest = _next_manifest(m, f"drop-constraint:{name}", constraints=cons)
     return _commit_state(path, manifest, m)
 
 

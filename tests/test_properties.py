@@ -623,10 +623,19 @@ def test_lakehouse_verbs_model_row_ids_and_feed(spark, ops):
             "upsert_high",
             "delete_low",
             "delete_high",
+            "delete_dv_low",
+            "delete_dv_high",
         ]
     ),
     loser=st.sampled_from(
-        ["upsert_low", "upsert_high", "delete_low", "delete_high"]
+        [
+            "upsert_low",
+            "upsert_high",
+            "delete_low",
+            "delete_high",
+            "delete_dv_low",
+            "delete_dv_high",
+        ]
     ),
 )
 @settings(
@@ -641,7 +650,9 @@ def test_commit_race_rebase_matches_serial_order(spark, winner, loser):
     winner confined to a PROVABLY DISJOINT file lets the loser rebase
     (winner→loser), (c) overlapping rewrites refuse deterministically
     and a re-run against the new head converges — and in every case the
-    final table equals the model's serial-order state."""
+    final table equals the model's serial-order state.  The ``delete_dv_*``
+    verbs are merge-on-read deletes (deletion vectors) with the same
+    model as their copy-on-write twins."""
     import tempfile
 
     import _spark_multi_format_data_lake_pipeline_spark.sinks.versioned as V
@@ -671,12 +682,18 @@ def test_commit_race_rebase_matches_serial_order(spark, winner, loser):
             versioned_upsert(
                 mk([(101, f"u{tag}"), (103, f"u{tag}")]), t, ["id"]
             )
-        elif verb == "delete_low":
-            versioned_delete(spark, t, "id <= 2", prune_col="id", lo=0, hi=2)
-        elif verb == "delete_high":
-            versioned_delete(
-                spark, t, "id >= 108", prune_col="id", lo=108, hi=109
-            )
+        elif verb.startswith("delete"):
+            strategy = "dv" if "_dv_" in verb else "cow"
+            if verb.endswith("low"):
+                versioned_delete(
+                    spark, t, "id <= 2", prune_col="id", lo=0, hi=2,
+                    strategy=strategy,
+                )
+            else:
+                versioned_delete(
+                    spark, t, "id >= 108", prune_col="id", lo=108, hi=109,
+                    strategy=strategy,
+                )
 
     def model(state, verb, tag):
         if verb == "append_in":
@@ -687,11 +704,8 @@ def test_commit_race_rebase_matches_serial_order(spark, winner, loser):
             state[1] = state[3] = f"u{tag}"
         elif verb == "upsert_high":
             state[101] = state[103] = f"u{tag}"
-        elif verb == "delete_low":
-            for i in (0, 1, 2):
-                state.pop(i, None)
-        elif verb == "delete_high":
-            for i in (108, 109):
+        elif verb.startswith("delete"):
+            for i in (0, 1, 2) if verb.endswith("low") else (108, 109):
                 state.pop(i, None)
         return state
 

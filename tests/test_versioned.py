@@ -6749,48 +6749,243 @@ def test_side_job_pool_lazy_init_is_race_free(monkeypatch):
 def test_cdf_side_job_settled_when_snapshot_write_raises(
     spark, tmp_path, monkeypatch
 ):
-    """A commit that fails AFTER submitting its change-feed side job
-    (here the snapshot's footer harvest raises) must settle that job
-    before re-raising: no new manifest, no orphan ``_change_data/``
-    directory, and no side job still running against inputs the
-    caller unpersists.  The feed job is held until the snapshot path
-    has failed, so it is in flight when the error propagates."""
+    """A commit that fails AFTER submitting its change-feed side job must
+    settle that job before re-raising: no new manifest, no orphan
+    ``_change_data/`` directory, and no side job still running against
+    inputs the caller unpersists.  Three failure points, one per site
+    that submits a feed job:
+
+    - an upsert whose footer harvest raises (the feed job is held until
+      the snapshot path has failed, so it is in flight when the error
+      propagates);
+    - a DV delete whose vector parquet write raises (its target
+      directory already exists);
+    - a keyed apply on a row-tracking table whose fresh row-id
+      assignment raises (the feed job is submitted before the id chain
+      so the two overlap)."""
     import threading
+    import types
+    import uuid
     from pathlib import Path
 
     from _spark_multi_format_data_lake_pipeline_spark.sinks import versioned as V
 
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    real_pool = V._side_job_pool()
+
+    def case(name, fail, run, track=False):
+        t = str(tmp_path / name)
+        versioned_write(mk([(i, f"v{i}") for i in range(6)]).coalesce(1), t)
+        V.enable_change_data_feed(t)
+        if track:
+            V.enable_row_tracking(t)
+        feed_dirs = lambda: sorted(
+            p.name for p in (Path(t) / "_change_data").glob("*")
+        )
+        before_vs, before_cd = V.versions(t), feed_dirs()
+        failed = threading.Event()
+        submitted = []
+
+        class HeldPool:
+            def submit(self, fn, *a, **k):
+                def held():
+                    failed.wait(timeout=30)
+                    return fn(*a, **k)
+
+                submitted.append(real_pool.submit(held))
+                return submitted[-1]
+
+        with monkeypatch.context() as mp:
+            mp.setattr(V, "_side_job_pool", lambda: HeldPool())
+            fail(mp, t, failed)
+            with pytest.raises(Exception, match="simulated|already exists"):
+                run(t)
+        failed.set()
+        assert submitted, f"{name}: the verb must submit its feed side job"
+        assert all(f.done() for f in submitted), (
+            f"{name}: a side job is still running"
+        )
+        assert V.versions(t) == before_vs, (
+            f"{name}: a failed commit adds no manifest"
+        )
+        assert feed_dirs() == before_cd, (
+            f"{name}: the feed write left an orphan dir"
+        )
+
+    def boom_at(attr):
+        def fail(mp, t, failed):
+            def boom(*a, **k):
+                failed.set()
+                raise RuntimeError("simulated commit failure")
+
+            mp.setattr(V, attr, boom)
+
+        return fail
+
+    def dv_target_exists(mp, t, failed):
+        # the vector write lands under _deletes/<uuid>: fix the uuid and
+        # create that directory first, so the write raises "already
+        # exists"; the feed job is not held (nothing observes the
+        # failure point), so it runs alongside the failing write
+        failed.set()
+        fixed = uuid.uuid4()
+        mp.setattr(V, "uuid", types.SimpleNamespace(uuid4=lambda: fixed))
+        (Path(t) / "_deletes" / fixed.hex).mkdir(parents=True)
+
+    case(
+        "upsert",
+        boom_at("_harvest"),
+        lambda t: V.versioned_upsert(mk([(1, "u1"), (9, "i9")]), t, ["id"]),
+    )
+    case(
+        "dv_delete",
+        dv_target_exists,
+        lambda t: V.versioned_delete(spark, t, "id = 1", strategy="dv"),
+    )
+    case(
+        "apply",
+        boom_at("_assign_fresh_row_ids"),
+        lambda t: V.versioned_apply_changes(
+            spark.createDataFrame(
+                [(1, "u1", "U"), (9, "i9", "I")], "id int, v string, op string"
+            ),
+            t,
+            ["id"],
+        ),
+        track=True,
+    )
+
+
+@pytest.mark.parametrize("loser", ["upsert", "cow_delete", "dv_delete"])
+def test_concurrent_rewrite_refuses_feed_enabled_underfoot(
+    spark, tmp_path, monkeypatch, loser
+):
+    """A row-level commit that loses its race to
+    ``enable_change_data_feed`` refuses: it decided no change rows, so a
+    rebase would commit either a manifest without the feed property
+    (upsert, copy-on-write delete) or a feed-enabled delete with no
+    change files (DV delete).  A re-run against the new head commits
+    with the feed on, and ``read_change_feed`` serves its rows."""
+    import _spark_multi_format_data_lake_pipeline_spark.sinks.versioned as V
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        enable_change_data_feed,
+        read_change_feed,
+        versioned_delete,
+        versioned_upsert,
+    )
+
     t = str(tmp_path / "tbl")
     mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
     versioned_write(mk([(i, f"v{i}") for i in range(6)]).coalesce(1), t)
-    V.enable_change_data_feed(t)
-    feed_dirs = lambda: sorted(
-        p.name for p in (Path(t) / "_change_data").glob("*")
+
+    def run():
+        if loser == "upsert":
+            return versioned_upsert(mk([(1, "u1"), (9, "i9")]), t, ["id"])
+        strategy = "dv" if loser == "dv_delete" else "cow"
+        return versioned_delete(spark, t, "id = 1", strategy=strategy)
+
+    real_cs = V._commit_state
+    fired = {"done": False}
+
+    def racy_cs(path, state, prev):
+        if not fired["done"] and state["version"] == 2:
+            fired["done"] = True
+            enable_change_data_feed(path)  # the winner lands v2
+        return real_cs(path, state, prev)
+
+    monkeypatch.setattr(V, "_commit_state", racy_cs)
+    with pytest.raises(ConcurrentCommitError, match="change_data_feed"):
+        run()
+    monkeypatch.setattr(V, "_commit_state", real_cs)
+    assert versions(t) == [1, 2]
+    assert run() == 3
+    assert _read_manifest(t, 3).get("change_data_feed") is True
+    got = sorted(
+        (r["id"], r["v"], r["_change_type"])
+        for r in read_change_feed(spark, t, 2, 3).collect()
     )
-    before_vs, before_cd = V.versions(t), feed_dirs()
+    want = (
+        [(1, "u1", "update_postimage"), (1, "v1", "update_preimage"),
+         (9, "i9", "insert")]
+        if loser == "upsert"
+        else [(1, "v1", "delete")]
+    )
+    assert got == want
 
-    failed = threading.Event()
-    real_pool = V._side_job_pool()
-    submitted = []
 
-    class HeldPool:
-        def submit(self, fn, *a, **k):
-            def held():
-                failed.wait(timeout=30)
-                return fn(*a, **k)
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs it ran): the ids of jobs outside any
+    job group before and after, read once the listener bus has drained.
+    Jobs of the side-job pool's threads carry no group, so they count."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
 
-            submitted.append(real_pool.submit(held))
-            return submitted[-1]
 
-    def boom(*a, **k):
-        failed.set()
-        raise RuntimeError("simulated snapshot write failure")
+def test_commit_job_counts_pinned(spark, tmp_path):
+    """Spark jobs per commit, pinned exactly for five verbs: a CDF
+    upsert, a copy-on-write delete, a DV delete on a feed table, a keyed
+    apply on a feed table, and an append to a table with an identity
+    column.  A refactor of the commit path that adds a pass over the
+    data (or drops one) moves these counts."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        enable_change_data_feed,
+        versioned_apply_changes,
+        versioned_delete,
+        versioned_upsert,
+    )
 
-    monkeypatch.setattr(V, "_side_job_pool", lambda: HeldPool())
-    monkeypatch.setattr(V, "_harvest", boom)
-    with pytest.raises(RuntimeError, match="simulated snapshot write"):
-        V.versioned_upsert(mk([(1, "u1"), (9, "i9")]), t, ["id"])
-    assert submitted, "the upsert must submit its feed as a side job"
-    assert all(f.done() for f in submitted), "a side job is still running"
-    assert V.versions(t) == before_vs, "a failed commit adds no manifest"
-    assert feed_dirs() == before_cd, "the feed write left an orphan dir"
+    assert not spark.streams.active, "a running stream would add jobs"
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    t = str(tmp_path / "tbl")
+    versioned_write(mk([(i, f"v{i}") for i in range(20)]).coalesce(1), t)
+    plain = str(tmp_path / "plain")
+    versioned_write(mk([(i, f"v{i}") for i in range(20)]).coalesce(1), plain)
+    enable_change_data_feed(t)
+    ident = str(tmp_path / "ident")
+    versioned_write(
+        mk([(i, f"v{i}") for i in range(5)]).coalesce(1),
+        ident,
+        identity_columns={"rid": {"order_by": ["id"]}},
+    )
+    got = {}
+    _, got["cdf_upsert"] = _jobs_of(
+        spark,
+        lambda: versioned_upsert(
+            mk([(1, "u1"), (30, "i30")]).coalesce(1), t, ["id"]
+        ),
+    )
+    _, got["cow_delete"] = _jobs_of(
+        spark, lambda: versioned_delete(spark, plain, "id = 2")
+    )
+    _, got["dv_delete"] = _jobs_of(
+        spark, lambda: versioned_delete(spark, t, "id = 3", strategy="dv")
+    )
+    _, got["keyed_apply"] = _jobs_of(
+        spark,
+        lambda: versioned_apply_changes(
+            spark.createDataFrame(
+                [(4, "a4", "U"), (5, None, "D"), (40, "a40", "I")],
+                "id int, v string, op string",
+            ).coalesce(1),
+            t,
+            ["id"],
+        ),
+    )
+    _, got["identity_append"] = _jobs_of(
+        spark,
+        lambda: versioned_write(
+            mk([(i, f"v{i}") for i in range(5, 9)]).coalesce(1), ident
+        ),
+    )
+    assert got == {
+        "cdf_upsert": 11,
+        "cow_delete": 1,
+        "dv_delete": 5,
+        "keyed_apply": 13,
+        "identity_append": 6,
+    }
