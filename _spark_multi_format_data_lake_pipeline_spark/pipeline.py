@@ -17,7 +17,7 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 from .catalog import CatalogManager
-from .registry import TableHandle
+from .registry import TableHandle, map_tables
 from .sinks.merge import TableMerger
 from .sinks.writer import verify_tables, write_tables
 from .sources.readers import load_all_sources
@@ -50,7 +50,13 @@ def run_ingestion(
     isolated inside load_all_sources.  With ``versioned`` (a
     ``catalog.VersionedCatalog``) the ingestion lands each table as an
     atomic versioned-table snapshot registered as ``database.name``
-    instead of ``saveAsTable`` — see ``sinks/writer.py::write_tables``."""
+    instead of ``saveAsTable`` — see ``sinks/writer.py::write_tables``.
+
+    Inside each phase (read, write, verify) the tables run concurrently,
+    at most ``defaultParallelism`` at a time; the phases still run one
+    after another.  ``tables``, ``written`` and ``verification`` keep
+    sweep order.  A failed write or verify raises after the phase's
+    other tables finish (the first failure in sweep order)."""
     t0 = time.time()
     report = IngestionReport()
     report.tables = load_all_sources(spark, data_dir)
@@ -80,7 +86,11 @@ def run_merge(
 ) -> dict[str, dict]:
     """§3.2 flow: enumerate source tables → per-table strategy merge into
     the target database with per-table error isolation → recount.
-    Returns {table: merge-result-or-error}.
+    Returns {table: merge-result-or-error}, in ``list_tables`` order.
+
+    The tables merge concurrently, at most ``defaultParallelism`` at a
+    time; a table whose merge raises reports ``{"strategy": "ERROR"}``
+    and never stops the others (reference merge_to_minio.py:189-192).
 
     ``versioned`` (an optional ``catalog.VersionedCatalog``) extends the
     flow across BOTH naming planes: source enumeration and reads union
@@ -99,13 +109,14 @@ def run_merge(
         create_versioned=create_versioned,
     )
 
-    results: dict[str, dict] = {}
-    for tbl in cat.list_tables(source_db):
+    def merge_one(tbl: str) -> dict:
         target = f"{target_db}.{tbl}"
         try:
             df = cat.table(f"{source_db}.{tbl}")
             exists = cat.table_exists(target)
-            results[tbl] = merger.merge_table(df, target, exists)
+            return merger.merge_table(df, target, exists)
         except Exception as e:  # noqa: BLE001 — reference merge_to_minio.py:189-192
-            results[tbl] = {"strategy": "ERROR", "error": str(e)[:200]}
-    return results
+            return {"strategy": "ERROR", "error": str(e)[:200]}
+
+    tables = cat.list_tables(source_db)
+    return dict(zip(tables, map_tables(spark, merge_one, tables)))

@@ -36,6 +36,8 @@ Python model. On a real cluster the statement analyzes/executes untouched.
 
 from __future__ import annotations
 
+import contextlib
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,14 +93,23 @@ class TableMerger:
         # INSERT OVERWRITE, and time travel over every merge run.
         self.versioned = versioned
 
+    @contextlib.contextmanager
+    def _temp_view(self, df: DataFrame, stem: str):
+        """Register ``df`` as a temp view named for this call only: temp
+        views are session-wide, and two merges running at once on one
+        session must not replace or drop each other's source."""
+        view = f"{stem}_{uuid.uuid4().hex}"
+        df.createOrReplaceTempView(view)
+        try:
+            yield view
+        finally:
+            self.spark.catalog.dropTempView(view)
+
     # -- W2 -----------------------------------------------------------------
     def _merge_sql(self, df: DataFrame, target: str, key: str) -> None:
         """Reference utils/merge_utils.py:70-82 (needs Iceberg/Delta)."""
-        df.createOrReplaceTempView("source_changes")
-        try:
-            self.spark.sql(merge_sql_statement(target, key))
-        finally:
-            self.spark.catalog.dropTempView("source_changes")
+        with self._temp_view(df, "source_changes") as view:
+            self.spark.sql(merge_sql_statement(target, key, source_view=view))
 
     def _merge_antijoin(self, df: DataFrame, target: str, key: str) -> None:
         """Jar-free upsert: keep unmatched target rows, take all source
@@ -124,22 +135,16 @@ class TableMerger:
     # -- W3 -----------------------------------------------------------------
     def _insert_overwrite(self, df: DataFrame, target: str) -> None:
         """Reference utils/merge_utils.py:84-93."""
-        df.createOrReplaceTempView("source_data")
-        try:
-            self.spark.sql(f"INSERT OVERWRITE TABLE {target} SELECT * FROM source_data")
-        finally:
-            self.spark.catalog.dropTempView("source_data")
+        with self._temp_view(df, "source_data") as view:
+            self.spark.sql(f"INSERT OVERWRITE TABLE {target} SELECT * FROM {view}")
 
     # -- W4 -----------------------------------------------------------------
     def _create_table(self, df: DataFrame, target: str) -> None:
         """Reference utils/merge_utils.py:95-105 (CTAS)."""
-        df.createOrReplaceTempView("source_data")
-        try:
+        with self._temp_view(df, "source_data") as view:
             self.spark.sql(
-                f"CREATE TABLE {target} USING parquet AS SELECT * FROM source_data"
+                f"CREATE TABLE {target} USING parquet AS SELECT * FROM {view}"
             )
-        finally:
-            self.spark.catalog.dropTempView("source_data")
 
     # -- W2/W3/W4 on the versioned plane --------------------------------------
     def _merge_versioned(

@@ -24,7 +24,7 @@ from pathlib import Path
 
 from pyspark.sql import Row, SparkSession
 
-from ..registry import TableHandle
+from ..registry import TableHandle, map_tables
 
 CORRUPT_COL = "_corrupt_record"
 KEY_CANDIDATES = ("id", "product_id", "sku", "code", "_id")  # reference merge_utils.py:13-20
@@ -216,7 +216,13 @@ def read_text(spark: SparkSession, filepath: str | Path) -> TableHandle | None:
 
 def load_all_sources(spark: SparkSession, base_dir: str | Path) -> list[TableHandle]:
     """S5 (reference schema_manager.py:108-139): sweep base_dir/{json,csv,
-    parquet,docx} for their formats, one table per file, skipping failures."""
+    parquet,docx} for their formats, one table per file, skipping failures.
+
+    The files are read concurrently, at most ``defaultParallelism`` at a
+    time (``registry.map_tables``); the handles come back in sweep order
+    (format folder, then file name).  Each reader isolates its own
+    failures (``None``, dropped here), so one bad file never stops the
+    others."""
     base = Path(base_dir)
     plan = [
         (base / "json", "*.json", read_json),
@@ -229,12 +235,11 @@ def load_all_sources(spark: SparkSession, base_dir: str | Path) -> list[TableHan
         (base / "xml", "*.xml", read_xml),
         (base / "binary", "*", read_binary),
     ]
-    out: list[TableHandle] = []
-    for folder, pattern, reader in plan:
-        if not folder.exists():
-            continue
-        for f in sorted(folder.glob(pattern)):
-            handle = reader(spark, f)
-            if handle is not None:
-                out.append(handle)
-    return out
+    files = [
+        (reader, f)
+        for folder, pattern, reader in plan
+        if folder.exists()
+        for f in sorted(folder.glob(pattern))
+    ]
+    handles = map_tables(spark, lambda rf: rf[0](spark, rf[1]), files)
+    return [h for h in handles if h is not None]

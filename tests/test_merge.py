@@ -169,8 +169,57 @@ def test_merge_sql_path_executes_contract_statement(spark, cat, monkeypatch):
         m.spark, "sql", lambda q, *a, **k: executed.append(q) or real_sql("SELECT 1")
     )
     src = _df(spark, [(1, "a", 10)])
+    # patch the session's concrete DataFrame class, which overrides
+    # pyspark.sql.DataFrame's method
+    views: list[str] = []
+    real_view = type(src).createOrReplaceTempView
+    monkeypatch.setattr(
+        type(src), "createOrReplaceTempView",
+        lambda self, name: views.append(name) or real_view(self, name),
+    )
     m._merge_sql(src, f"{DB}.contract_t", "id")
-    assert executed == [merge_sql_statement(f"{DB}.contract_t", "id")]
+    # the source view is named per call (concurrent merges share the
+    # session's temp views); the statement is the contract text over it
+    assert len(views) == 1 and views[0].startswith("source_changes_")
+    assert executed == [
+        merge_sql_statement(f"{DB}.contract_t", "id", source_view=views[0])
+    ]
+    assert not spark.catalog.tableExists(views[0])
+
+
+def test_concurrent_merges_read_their_own_source_views(spark, cat, monkeypatch):
+    """Two merge_table calls on one session at once: each INSERT
+    OVERWRITE must read its own source rows.  A barrier right after each
+    temp-view registration holds both threads until both views are
+    registered, so a view name shared by the two calls would be replaced
+    (or dropped) by the other thread before its statement runs."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    schema = "v string, n int"  # no key column: the INSERT_OVERWRITE path
+    want = {f"{DB}.ow_a": [("a", 1), ("a", 2)], f"{DB}.ow_b": [("b", 3)]}
+    for t in want:
+        spark.createDataFrame([("old", 0)], schema).write.saveAsTable(t)
+    sources = {t: spark.createDataFrame(rows, schema) for t, rows in want.items()}
+
+    barrier = threading.Barrier(2, timeout=30)
+    frame_cls = type(sources[f"{DB}.ow_a"])
+    real_view = frame_cls.createOrReplaceTempView
+
+    def register_then_wait(self, name):
+        real_view(self, name)
+        barrier.wait()
+
+    monkeypatch.setattr(frame_cls, "createOrReplaceTempView", register_then_wait)
+    m = TableMerger(spark)
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        futures = {t: ex.submit(m.merge_table, sources[t], t, True) for t in want}
+    monkeypatch.undo()
+    for t, rows in want.items():
+        res = futures[t].result()
+        assert res["strategy"] == "INSERT_OVERWRITE"
+        assert res["final_rows"] == len(rows)
+        assert sorted(tuple(r) for r in spark.table(t).collect()) == rows
 
 
 def test_merge_sql_statement_parses_to_merge_into_plan(spark):

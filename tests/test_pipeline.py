@@ -68,6 +68,109 @@ def test_merge_isolates_per_table_errors(spark, dbs):
     assert res["nokey"]["strategy"] == "ERROR"  # isolated, didn't kill the run
 
 
+def test_map_tables_bounds_width_keeps_order_and_runs_every_call(spark):
+    """Stress the per-table pool with many more calls than cores and a
+    short switch interval: at most defaultParallelism calls are in flight
+    at once, results keep input order, and when calls raise every other
+    call still runs before the first failure in input order re-raises."""
+    import sys
+    import threading
+    import time
+
+    from _spark_multi_format_data_lake_pipeline_spark.registry import map_tables
+
+    width = spark.sparkContext.defaultParallelism
+    n = 4 * width + 3
+    lock = threading.Lock()
+    live, peak, ran = [0], [0], []
+
+    def fn(x):
+        with lock:
+            live[0] += 1
+            peak[0] = max(peak[0], live[0])
+        time.sleep(0.005)
+        with lock:
+            live[0] -= 1
+            ran.append(x)
+        if x in fail:
+            raise ValueError(f"call {x}")
+        return x * x
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        fail = set()
+        assert map_tables(spark, fn, range(n)) == [x * x for x in range(n)]
+        assert 2 <= peak[0] <= width
+        ran.clear()
+        fail = {n - 2, 3, 5}
+        with pytest.raises(ValueError, match="^call 3$"):
+            map_tables(spark, fn, range(n))
+        assert sorted(ran) == list(range(n)) and live[0] == 0
+    finally:
+        sys.setswitchinterval(old)
+
+
+def test_run_merge_overlaps_tables(spark, dbs, monkeypatch):
+    """run_merge keeps two tables in flight at once: each merge_table
+    call waits on a two-party barrier, which only a second concurrent
+    call can release (serially, the first call's wait times out and the
+    table reports ERROR).  The report keeps list_tables order."""
+    import threading
+
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.merge import TableMerger
+
+    src_db, dst_db = dbs
+    cat = CatalogManager(spark)
+    cat.create_database(src_db)
+    for t in ("zeta", "alpha"):
+        spark.createDataFrame([(1, t)], "id int, v string").write.saveAsTable(
+            f"{src_db}.{t}"
+        )
+    barrier = threading.Barrier(2, timeout=10)
+    real = TableMerger.merge_table
+
+    def both_in_flight(self, *a, **k):
+        barrier.wait()
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(TableMerger, "merge_table", both_in_flight)
+    res = run_merge(spark, src_db, dst_db)
+    assert list(res) == cat.list_tables(src_db) == ["alpha", "zeta"]
+    assert [r["strategy"] for r in res.values()] == ["CREATE_TABLE"] * 2, res
+    assert [r["final_rows"] for r in res.values()] == [1, 1]
+
+
+def test_load_all_sources_overlaps_files(spark, tmp_path, monkeypatch):
+    """load_all_sources reads two files at once (a two-party barrier in
+    both readers releases only when both are in flight) and returns the
+    handles in sweep order: the json folder before the csv folder."""
+    import threading
+
+    from _spark_multi_format_data_lake_pipeline_spark.sources import readers
+
+    (tmp_path / "json").mkdir()
+    (tmp_path / "csv").mkdir()
+    (tmp_path / "json" / "zeta.json").write_text('[{"id": 1}, {"id": 2}]')
+    (tmp_path / "csv" / "alpha.csv").write_text("id,note\n1,hello\n")
+    barrier = threading.Barrier(2, timeout=10)
+    for name in ("read_json", "read_csv"):
+        real = getattr(readers, name)
+
+        def both_in_flight(spark_, path, _real=real):
+            barrier.wait()
+            return _real(spark_, path)
+
+        monkeypatch.setattr(readers, name, both_in_flight)
+    handles = readers.load_all_sources(spark, tmp_path)
+    assert [(h.name, h.row_count) for h in handles] == [
+        ("json_zeta", 2),
+        ("csv_alpha", 1),
+    ]
+    for h in handles:
+        h.df.unpersist()
+
+
 def test_stream_upsert_sink(spark, sf_dir, tmp_path, dbs):
     src_db, _ = dbs
     CatalogManager(spark).create_database(src_db)

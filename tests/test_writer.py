@@ -33,6 +33,49 @@ def test_write_and_verify(spark, cleanup):
     assert report["json_products"]["columns"] == ["id", "v"]
 
 
+def test_write_tables_failure_lets_other_tables_finish(spark, cleanup):
+    """The tables write concurrently: when the middle table's write
+    raises, the first and the last still land with their rows, and the
+    error raised is the middle table's."""
+    ok = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    bad = spark.range(1).selectExpr(
+        "CAST(raise_error('middle table write failed') AS STRING) AS v"
+    )
+    handles = [
+        TableHandle(ok, "first_t", "JSON", 2, 2),
+        TableHandle(bad, "middle_t", "JSON", 1, 1),
+        TableHandle(ok, "last_t", "JSON", 2, 2),
+    ]
+    with pytest.raises(Exception, match="middle table write failed"):
+        write_tables(spark, handles, database=DB)
+    for t in ("first_t", "last_t"):
+        assert sorted(tuple(r) for r in spark.table(f"{DB}.{t}").collect()) == [
+            (1, "a"),
+            (2, "b"),
+        ]
+
+
+def test_write_tables_same_name_last_handle_wins(spark, cleanup):
+    """Two handles naming one table (x.docx and x.txt both sweep as
+    ``text_x``) write one after another, in handle order, as a serial
+    sweep would: the table holds the last handle's rows."""
+    first = spark.createDataFrame([("a",)], "value string")
+    last = spark.createDataFrame([("b",), ("c",)], "value string")
+    other = spark.createDataFrame([("z",)], "value string")
+    res = write_tables(
+        spark,
+        [
+            TableHandle(first, "text_x", "TEXT", 1, 1),
+            TableHandle(other, "text_y", "TEXT", 1, 1),
+            TableHandle(last, "text_x", "TEXT", 2, 1),
+        ],
+        database=DB,
+    )
+    assert res == {"text_x": 2, "text_y": 1}
+    assert list(res) == ["text_x", "text_y"]
+    assert sorted(r.value for r in spark.table(f"{DB}.text_x").collect()) == ["b", "c"]
+
+
 def test_write_partitioned(spark, cleanup):
     df = spark.createDataFrame(
         [(1, "x", "2024-01-01"), (2, "y", "2024-01-02")],
